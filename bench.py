@@ -29,11 +29,12 @@ contract — the best-of-N is the contention-resistant throughput bound.
 
 Storage-variant context (BASELINE.md): the reference's OWN bfloat16
 table ran ~8x SLOWER than its float32 scan (16.995 s vs 2.088 s at
-100M rows) — half-width storage trades scan bytes for decode cost
-there too, so ``knn768_f16`` being slower than ``knn768`` at a 0.47
-bytes fraction mirrors the reference's published behavior (parquet
-stores FLOAT16 as FIXED_LEN_BYTE_ARRAY(2), which decodes slower than
-PLAIN float32). Likewise the headline "8.5x ANN" ratio compares Annoy
+100M rows) — half-width storage traded scan bytes for decode cost
+there. This engine stores float16 vectors packed, one
+fixed_size_binary(2*dim) value per vector, which decodes by bulk
+memcpy, so ``knn768_f16p`` scans at full byte speed on half the bytes
+(a list<float16> column decodes per value and was measured slower than
+the float32 scan). Likewise the headline "8.5x ANN" ratio compares Annoy
 against that slow bfloat16 brute force; against the reference's fast
 float32 100M scan the same Annoy run is 1.04x (2.006 s vs 2.088 s).
 ``ann768_speedup`` here compares ANN to brute force on the SAME table
@@ -51,7 +52,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from laion_spark.operators.knn import knn_search, knn_search_parquet
+from laion_spark.operators.knn import knn_search_parquet
 from laion_spark.session import get_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -151,8 +152,6 @@ IVF_CENT = f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_centroids.json"
 #: which neither real eviction path touches, so the plan could stamp
 #: "fits" in states the eviction path could not actually reach).
 EVICT_10M = [
-    f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_f16.parquet",
-    f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
     f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
     f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet",
     "/tmp/laion_events_10000000_tsorted.parquet",
@@ -162,7 +161,7 @@ EVICT_10M = [
     "/tmp/laion_docs_10m.parquet",
 ]
 EVICT_IVF = [
-    f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
+    f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
     BASE10M_PATH,
     "/tmp/laion_events_10000000_tsorted.parquet",
     f"/tmp/laion_etl_32x16384x{DIM}",
@@ -1776,12 +1775,10 @@ def tail_family(spark, queries: dict, extras: dict, errors: dict) -> None:
 #: behind; the 10M base is last — its rows are measured by child time
 #: and it rebuilds in ~80 s)
 _CHILD_EVICT = [
-    f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_f16.parquet",
     f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_f16p.parquet",
     f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_i8.parquet",
     "/tmp/laion_etl_fact.parquet",
     "/tmp/laion_etl_fact_direct.parquet",
-    f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
     f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
     f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet",
     BASE10M_PATH,
@@ -1837,14 +1834,12 @@ def main() -> None:
     fixture_sweep(
         {
             f"/tmp/laion_bench_{N_VEC}x{DIM}.parquet",
-            f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
             f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
             f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet",
             BASE10M_PATH,
             f"/tmp/laion_bench_{N_10M}x{DIM}_f16p.parquet",
             f"/tmp/laion_bench_{N_10M}x{DIM}_i8.parquet",
             f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8.parquet",
-            f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_f16.parquet",
             f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_centroids.json",
             "/tmp/laion_docs_1m.parquet",
             "/tmp/laion_docs_4m.parquet",
@@ -1927,34 +1922,24 @@ def main() -> None:
             raise _BudgetSkip
         section_floor(spark, extras, "vector")
         t0 = time.perf_counter()
-        vecs = synth_vectors(spark, N_VEC, DIM)
+        synth_vectors(spark, N_VEC, DIM)  # the bench_path fixture
         print(f"  synth_vectors({N_VEC}x{DIM}): {time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
-        def run_knn(impl):
-            if impl == "scan":
-                return knn_search_parquet(
-                    spark, bench_path, qvec, k=10, vector_col="embedding", select=["id"]
-                ).collect()
-            return knn_search(
-                vecs, qvec, k=10, vector_col="embedding", select=["id"], tiebreak=["id"], impl=impl
+        def run_knn():
+            return knn_search_parquet(
+                spark, bench_path, qvec, k=10, vector_col="embedding", select=["id"]
             ).collect()
 
         # 5 runs: median recorded in queries{}, best + best-run rows/s as
         # separate fields. Wall times on this host swing 5-30x under
         # neighbor CPU contention; best-of-N is the contention-resistant
         # throughput bound, the median the honest typical case.
-        variants = [("scan", "knn768")]
-        if os.environ.get("SPARK_GRAFT_BENCH_CODEGEN"):  # JVM expression path
-            variants.append(("codegen", "knn768_codegen"))  # ~6s/200k: opt-in
-        if os.environ.get("SPARK_GRAFT_BENCH_ARROW"):  # opt-in: can run 10+ min
-            variants.append(("arrow", "knn768_arrow"))  # under host contention
-        for impl, key in variants:
-            run_knn(impl)  # warm (codegen compile / python workers)
-            ts = sorted(timed(lambda: run_knn(impl)) for _ in range(5))
-            queries[key] = ts[2]
-            extras[f"{key}_best_sec"] = ts[0]
-            extras[f"{key}_rows_per_sec"] = round(N_VEC / ts[0])
-            print(f"  {key}: {ts}", file=sys.stderr)
+        run_knn()  # warm (python workers)
+        ts = sorted(timed(run_knn) for _ in range(5))
+        queries["knn768"] = ts[2]
+        extras["knn768_best_sec"] = ts[0]
+        extras["knn768_rows_per_sec"] = round(N_VEC / ts[0])
+        print(f"  knn768: {ts}", file=sys.stderr)
 
         # packed-f32 layout A/B at 1M (r14, guide §6): the SAME float32
         # values as knn768's list<float> base in the FSB layout the 10M
@@ -1973,7 +1958,7 @@ def main() -> None:
                 ).collect()
 
             pk_rows = [(r.id, r.score) for r in run_knn_pk()]  # warm
-            list_rows = [(r.id, r.score) for r in run_knn("scan")]
+            list_rows = [(r.id, r.score) for r in run_knn()]
             extras["knn768_pk_parity"] = int(pk_rows == list_rows)
             tsp = sorted(timed(run_knn_pk) for _ in range(5))
             queries["knn768_pk"] = tsp[2]
@@ -2155,12 +2140,6 @@ def main() -> None:
             errors["concept768_10m"] = f"{type(cex).__name__}: {cex}"[:500]
             print(f"  concept768_10m: FAILED {errors['concept768_10m'].splitlines()[0]}", file=sys.stderr)
 
-        # knn768_f16_10m (list<f16> at 10M) RETIRED in r10 (VERDICT r9
-        # #1): the list layout is FLBA(2) per-value decode-bound — 5.19 s
-        # best at 10M, 3.05x the bfloat16 anchor, failing the 2x contract
-        # by construction. The packed twin below carries the half-width
-        # point at scale (1.72 s, 1.01x); the 1M list row (knn768_f16)
-        # stays as the legacy-parity evidence of WHY packed is default.
         try:
             # packed twin at 10M — the layout that actually converts
             # halved bytes into halved scan time (list<f16> is FLBA(2)
@@ -2173,9 +2152,7 @@ def main() -> None:
             if not os.path.exists(f"{packed_10m}/_DONE"):
                 if not ensure_free(
                     N_10M * DIM * 2 + 2 * 1024**3,
-                    [f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_f16.parquet",
-                     f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
-                     f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
+                    [f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
                      f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet",
                      # the 1M base: measured back in the headline
                      # section, rebuilds in ~20 s for the ladder —
@@ -2198,7 +2175,7 @@ def main() -> None:
 
                 t0 = time.perf_counter()
                 write_half_table(
-                    spark, path_10m, packed_10m, vector_cols=("embedding",), layout="packed"
+                    spark, path_10m, packed_10m, vector_cols=("embedding",)
                 ).collect()
                 _done_flush(packed_10m)
                 print(f"  f16p 10m rewrite: {time.perf_counter()-t0:.1f}s", file=sys.stderr)
@@ -2246,8 +2223,7 @@ def main() -> None:
             if not os.path.exists(f"{i8_10m}/_DONE"):
                 if not ensure_free(
                     N_10M * DIM + 2 * 1024**3,
-                    [f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf256rg8_f16.parquet",
-                     f"/tmp/laion_bench_{N_VEC}x{DIM}.parquet",
+                    [f"/tmp/laion_bench_{N_VEC}x{DIM}.parquet",
                      f"/tmp/laion_etl_32x16384x{DIM}",
                      "/tmp/laion_events_10000000_tsorted.parquet",
                      "/tmp/laion_docs_4m.parquet",
@@ -2347,48 +2323,19 @@ def main() -> None:
         print(f"  concept768: FAILED {errors['concept768'].splitlines()[0]}", file=sys.stderr)
 
     # V10 half-width storage twin (the reference's bfloat16 table row):
-    # same 1M x 768 data with the vector column stored as FLOAT16 —
-    # half the scan bytes; only the Arrow scan path can read it (Spark's
-    # JVM reader rejects FLOAT16 parquet). LEGACY-PARITY row (r10): the
-    # list<f16> layout is decode-bound and superseded by the packed
-    # default; kept at 1M only so the ladder documents WHY packed wins.
+    # same 1M x 768 data with the vector column stored as packed
+    # FLOAT16 (fixed_size_binary(2*dim), bulk-memcpy decode) — half the
+    # scan bytes; only the Arrow scan path can read it (Spark's JVM
+    # reader rejects FLOAT16 parquet).
     try:
-        if over_budget(errors, "knn768_f16"):
+        if over_budget(errors, "knn768_f16p"):
             raise _BudgetSkip
         from laion_spark.sources.halfvec import write_half_table
 
-        half_path = f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet"
-        if not os.path.exists(f"{half_path}/_DONE"):
-            t0 = time.perf_counter()
-            write_half_table(
-                spark, bench_path, half_path, vector_cols=("embedding",), layout="list"
-            ).collect()
-            _done_flush(half_path)
-            print(f"  f16 rewrite: {time.perf_counter()-t0:.1f}s", file=sys.stderr)
-
-        def run_f16():
-            return knn_search_parquet(
-                spark, half_path, qvec, k=10, vector_col="embedding", select=["id"]
-            ).collect()
-
-        run_f16()  # warm
-        ts = sorted(timed(run_f16) for _ in range(5))
-        queries["knn768_f16"] = ts[2]
-        extras["knn768_f16_best_sec"] = ts[0]
-        extras["knn768_f16_rows_per_sec"] = round(N_VEC / ts[0])
-
-        extras["knn768_f16_bytes_fraction"] = round(du(half_path) / du(bench_path), 4)
-        print(f"  knn768_f16: {ts} bytes_frac={extras['knn768_f16_bytes_fraction']}", file=sys.stderr)
-
-        # packed twin (fixed_size_binary(2*dim), bulk-memcpy decode) —
-        # same bytes as list<f16>, none of its per-value FLBA(2) decode
-        # cost; the layout this engine recommends for f16 vectors
         packed_path = f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet"
         if not os.path.exists(f"{packed_path}/_DONE"):
             t0 = time.perf_counter()
-            write_half_table(
-                spark, bench_path, packed_path, vector_cols=("embedding",), layout="packed"
-            ).collect()
+            write_half_table(spark, bench_path, packed_path, vector_cols=("embedding",)).collect()
             _done_flush(packed_path)
             print(f"  f16 packed rewrite: {time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
@@ -2404,9 +2351,17 @@ def main() -> None:
         extras["knn768_f16p_rows_per_sec"] = round(N_VEC / tsp[0])
         extras["knn768_f16p_bytes_fraction"] = round(du(packed_path) / du(bench_path), 4)
         print(f"  knn768_f16p: {tsp} bytes_frac={extras['knn768_f16p_bytes_fraction']}", file=sys.stderr)
+    except _BudgetSkip:
+        pass
+    except Exception as ex:  # noqa: BLE001
+        errors["knn768_f16p"] = f"{type(ex).__name__}: {ex}"[:500]
+        print(f"  knn768_f16p: FAILED {errors['knn768_f16p'].splitlines()[0]}", file=sys.stderr)
 
-        # SQ8 twin: packed int8 codes + per-vector float32 scale — 1/4
-        # of the f32 bytes, dequantized batch-wise in the scorer
+    # SQ8 twin: packed int8 codes + per-vector float32 scale — 1/4 of
+    # the f32 bytes, dequantized batch-wise in the scorer
+    try:
+        if over_budget(errors, "knn768_i8"):
+            raise _BudgetSkip
         from laion_spark.sources.halfvec import write_int8_table
 
         i8_path = f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet"
@@ -2422,7 +2377,7 @@ def main() -> None:
                 scale_col="embedding_scale",
             ).collect()
 
-        truth_1m = {r.id for r in run_knn("scan")}
+        truth_1m = {r.id for r in run_knn()}
         i8_ids = {r.id for r in run_i8()}  # doubles as the warm run
         extras["knn768_i8_recall_at_10"] = round(len(truth_1m & i8_ids) / 10, 2)
         tsi = sorted(timed(run_i8) for _ in range(5))
@@ -2438,8 +2393,8 @@ def main() -> None:
     except _BudgetSkip:
         pass
     except Exception as ex:  # noqa: BLE001
-        errors["knn768_f16"] = f"{type(ex).__name__}: {ex}"[:500]
-        print(f"  knn768_f16: FAILED {errors['knn768_f16'].splitlines()[0]}", file=sys.stderr)
+        errors["knn768_i8"] = f"{type(ex).__name__}: {ex}"[:500]
+        print(f"  knn768_i8: FAILED {errors['knn768_i8'].splitlines()[0]}", file=sys.stderr)
 
     emit_checkpoint(queries, extras, errors, sf_val, "1m_ladder", sentinels=sentinels)
 
@@ -2798,80 +2753,13 @@ def main() -> None:
             print(f"  ann768_cjoin2k: FAILED {errors['ann768_cjoin2k'].splitlines()[0]}", file=sys.stderr)
 
         # Compounding storage demo (VERDICT r5 ask #5): IVF pruning OVER
-        # the FLOAT16 twin — the sandbox analog of the reference running
-        # Annoy against its bfloat16 table. write_half_table preserves
-        # the ivf_cluster=K dirs, so a probe reads nprobe clusters of
-        # half-width vectors: probed-bytes fraction ~ ann768_bytes_
-        # fraction x knn768_f16_bytes_fraction (~0.055 x 0.47 ~ 0.026 of
-        # the full-width table). Recall is judged against the FLOAT32
-        # exact scan, so the number prices quantization loss too.
-        if not over_budget(errors, "ann768_f16"):
-          try:  # own failure domain, like ann768_batch8 (noqa: E117)
-            from laion_spark.sources.halfvec import write_half_table
-
-            ivf16_path = f"/tmp/laion_bench_{N_ANN}x{DIM}_ivf{C}rg{RG_MB}_f16.parquet"
-            if not os.path.exists(f"{ivf16_path}/_DONE"):
-                if not ensure_free(
-                    int(N_ANN) * DIM * 2 + 4 * 1024**3,
-                    [f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet"],
-                    "ivf f16 twin",
-                    spark=spark,
-                ):
-                    errors["ann768_f16"] = "skipped: insufficient /tmp for the f16 twin"
-                    raise _BudgetSkip
-                t0 = time.perf_counter()
-                write_half_table(spark, ivf_path, ivf16_path, ["embedding"], layout="list").collect()
-                _done_flush(ivf16_path)
-                print(f"  ivf f16 twin build: {time.perf_counter()-t0:.1f}s", file=sys.stderr)
-            idx16 = IVFIndex(dim=DIM, n_clusters=C, nprobe=NPROBE)
-            idx16.centroids = idx.centroids  # same quantizer, own plan cache
-
-            def ann16_with(v):
-                # same tuned probe width as the f32 headline
-                return idx16.search_parquet(
-                    spark, ivf16_path, v, k=10, vector_col="embedding", select=["id"],
-                    nprobe=ann_nprobe,
-                ).collect()
-
-            # recall vs the FLOAT32 exact sets, all 11 sample queries —
-            # prices quantization loss on top of pruning loss
-            h16 = sum(
-                len(exact_sets[qid] & {r.id for r in ann16_with(all_rows[qid])})
-                for qid in all_ids
-            )
-            extras["ann768_f16_recall_at_10"] = round(h16 / (10 * len(all_ids)), 3)
-            # adjacent job floor for THIS row (per-row drift attribution)
-            extras["ann768_f16_job_floor_sec"] = min(timed(_noop_job) for _ in range(2))
-            t16 = sorted(timed(lambda: ann16_with(aq)) for _ in range(5))
-            queries["ann768_f16"] = t16[2]
-            extras["ann768_f16_best_sec"] = t16[0]
-            extras["ann768_f16_speedup"] = round(ets[0] / t16[0], 2)
-            probed16 = sum(
-                du(f"{ivf16_path}/ivf_cluster={p}")
-                for p in idx16.probe_clusters(aq, ann_nprobe)
-                if os.path.isdir(f"{ivf16_path}/ivf_cluster={p}")
-            )
-            # fraction of the FULL-WIDTH table's bytes a probe reads —
-            # the compounding metric (pruning x quantization)
-            extras["ann768_f16_bytes_fraction"] = round(probed16 / du(ivf_path), 4)
-            print(
-                f"  ann768_f16: {t16} recall={extras['ann768_f16_recall_at_10']} "
-                f"speedup={extras['ann768_f16_speedup']} "
-                f"bytes_frac={extras['ann768_f16_bytes_fraction']}",
-                file=sys.stderr,
-            )
-            # transient fixture: a ~2 min streaming rewrite next round;
-            # its 11 GB is the f16_10m twin's headroom (VERDICT r8 #1)
-            _rm(ivf16_path)
-          except _BudgetSkip:
-            print("  ann768_f16: SKIPPED (disk)", file=sys.stderr)
-          except Exception as fex:  # noqa: BLE001
-            errors["ann768_f16"] = f"{type(fex).__name__}: {fex}"[:500]
-            print(f"  ann768_f16: FAILED {errors['ann768_f16'].splitlines()[0]}", file=sys.stderr)
-
-        # packed-f16 ivf twin: pruning x half-bytes WITHOUT list<f16>'s
-        # per-value decode tax — the full compounding stack
-        # (partition-pruned probe over bulk-memcpy half-width vectors)
+        # the packed FLOAT16 twin — the sandbox analog of the reference
+        # running Annoy against its bfloat16 table. write_half_table
+        # preserves the ivf_cluster=K dirs, so a probe reads nprobe
+        # clusters of half-width vectors: probed-bytes fraction ~
+        # ann768_bytes_fraction x knn768_f16p_bytes_fraction of the
+        # full-width table. Recall is judged against the FLOAT32 exact
+        # scan, so the number prices quantization loss too.
         if not over_budget(errors, "ann768_f16p"):
           try:  # own failure domain (noqa: E117)
             from laion_spark.sources.halfvec import write_half_table
@@ -2880,14 +2768,14 @@ def main() -> None:
             if not os.path.exists(f"{ivf16p_path}/_DONE"):
                 if not ensure_free(
                     int(N_ANN) * DIM * 2 + 4 * 1024**3,
-                    [f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet"],
+                    [f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet"],
                     "ivf f16p twin",
                     spark=spark,
                 ):
                     errors["ann768_f16p"] = "skipped: insufficient /tmp for the f16p twin"
                     raise _BudgetSkip
                 t0 = time.perf_counter()
-                write_half_table(spark, ivf_path, ivf16p_path, ["embedding"], layout="packed").collect()
+                write_half_table(spark, ivf_path, ivf16p_path, ["embedding"]).collect()
                 _done_flush(ivf16p_path)
                 print(f"  ivf f16p twin build: {time.perf_counter()-t0:.1f}s", file=sys.stderr)
             idx16p = IVFIndex(dim=DIM, n_clusters=C, nprobe=NPROBE)
@@ -2921,7 +2809,7 @@ def main() -> None:
                 f"bytes_frac={extras['ann768_f16p_bytes_fraction']}",
                 file=sys.stderr,
             )
-            _rm(ivf16p_path)  # transient, like the list twin
+            _rm(ivf16p_path)  # transient: a ~10 s rewrite next round
           except _BudgetSkip:
             print("  ann768_f16p: SKIPPED (disk)", file=sys.stderr)
           except Exception as pfex:  # noqa: BLE001
@@ -2939,7 +2827,7 @@ def main() -> None:
             if not os.path.exists(f"{ivfi8_path}/_DONE"):
                 if not ensure_free(
                     int(N_ANN) * DIM + 2 * 1024**3,
-                    [f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet"],
+                    [f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet"],
                     "ivf i8 twin",
                     spark=spark,
                 ):
@@ -3104,7 +2992,6 @@ def main() -> None:
             if not ensure_free(
                 int(raw_i8 * 1.35) + 2 * 1024**3,
                 [
-                    f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
                     f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
                     f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet",
                     f"/tmp/laion_bench_{N_10M}x{DIM}_f16p.parquet",
@@ -3335,7 +3222,6 @@ def main() -> None:
                 if not ensure_free(
                     int(raw_pt * 2.2),
                     [
-                        f"/tmp/laion_bench_{N_VEC}x{DIM}_f16.parquet",
                         f"/tmp/laion_bench_{N_VEC}x{DIM}_f16p.parquet",
                         f"/tmp/laion_bench_{N_VEC}x{DIM}_i8.parquet",
                         f"/tmp/laion_bench_{N_VEC}x{DIM}.parquet",
@@ -3489,9 +3375,9 @@ def main() -> None:
         *HEADLINERS,
         "funnel10m", "sessions10m", "topk10m", "ks10m", "stream10m", "stream10m_wm",
         "etl_shards", "etl_shards_direct",
-        "knn768", "concept768", "knn768_f16", "knn768_f16p", "knn768_i8",
+        "knn768", "concept768", "knn768_f16p", "knn768_i8",
         "ann768_exact", "ann768", "ann768_batch8", "ann768_cjoin2k",
-        "ann768_f16", "ann768_f16p", "ann768_i8", "ann768_1m", "ann768_4m",
+        "ann768_f16p", "ann768_i8", "ann768_1m", "ann768_4m",
         "knn768_10m", "concept768_10m", "knn768_f16p_10m", "knn768_i8_10m",
         # the big SQ8 pair's scale is chosen at run time (32M default,
         # 16M budget fallback) — the section stamps the chosen scale

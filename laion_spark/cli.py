@@ -106,9 +106,10 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--html", default="", help="also write the HTML result grid here")
         p.add_argument(
             "--impl",
-            choices=("auto", "codegen", "scan"),
+            choices=("auto", "dataframe", "scan"),
             default="auto",
-            help="auto = scan-side Arrow+BLAS scorer for unfiltered text search, codegen otherwise",
+            help="auto = scan-side Arrow+BLAS scorer for unfiltered text search over a "
+            "parquet path, the DataFrame lane (filter, then a mapInArrow scorer) otherwise",
         )
 
     search_p = sub.add_parser("search", help="search using text or images")
@@ -211,12 +212,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.impl == "scan" and args.filter:
         raise SystemExit(
             "--impl scan does not apply --filter (the scan lane reads files "
-            "directly); drop --filter or use --impl codegen"
+            "directly); drop --filter or use --impl dataframe"
         )
     if args.impl == "scan" and path is None:
         raise SystemExit(
             "--impl scan reads parquet files directly; catalog tables go "
-            "through the DataFrame lanes — use --impl codegen or pass a path"
+            "through the DataFrame lanes — use --impl dataframe or pass a path"
         )
     use_scan = (args.impl == "scan" or (args.impl == "auto" and not args.filter)) and (
         args.command == "search" and not is_image and path is not None

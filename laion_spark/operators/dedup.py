@@ -555,7 +555,8 @@ def minhash_lsh_pairs(
     Plan shape (the 100 TB path):
       signatures (scan, no shuffle)
       -> explode bands -> hash(band slice) -> shuffle on (band, hash)
-      -> bucket self-join => candidate pairs (only colliding docs meet)
+      -> group by (band, bucket), expand id pairs => candidate pairs
+         (only colliding docs meet)
       -> dedup candidates -> exact-Jaccard verify on the candidates only
     """
     if num_hashes % bands != 0:
@@ -603,8 +604,8 @@ def minhash_lsh_pairs(
     # shuffle-sorts the banded stream twice (measured: 18 s of the 1M-doc
     # run's 28 s — the pipeline's actual hot spot once the verify was
     # fixed). One groupBy instead: collect each bucket's id set, expand
-    # ordered pairs via _expand_bucket_pairs (in-array for normal
-    # buckets, spillable within-bucket join for degenerate ones). Same
+    # ordered pairs via _expand_bucket_pairs (two chained generators,
+    # O(bucket size) memory per row even for degenerate buckets). Same
     # output cardinality as the join, one shuffle, signatures computed
     # once.
     grouped = banded.groupBy("band", "bucket").agg(F.sort_array(F.collect_set("id")).alias("ids"))
@@ -768,8 +769,8 @@ def shared_window_pairs(
     bucket's id count IS the window's document frequency — the cap is a
     filter on the one aggregate, no second pass over the corpus; same
     guard role as ``jaccard_similar_pairs.max_df``) -> expand ordered
-    pairs via ``_expand_bucket_pairs`` (in-array normally, spillable
-    join for degenerate buckets) -> count shared windows per pair.
+    pairs via ``_expand_bucket_pairs`` (two chained generators, O(bucket
+    size) memory per row) -> count shared windows per pair.
     ``hashed=True`` shuffles xxhash64(window) int64s instead of window
     strings (~4x fewer bytes; a cross-document collision altering a
     count is ~2^-64 per window pair). Output: (da, db, shared),

@@ -4,37 +4,43 @@ Reference shape (search.py:20-35):
     SELECT url, caption, L2Distance(<emb>, <qvec>) AS score
     FROM <table> [WHERE <filter>] ORDER BY score ASC LIMIT <k>
 
-Plan (both implementations share it):
+Plan (both scorers share it):
     ParquetScan(pruned columns, pushed filters)
       -> Filter(<filter>)            # cheap predicate BELOW scoring
-      -> score projection            # see impl note below
+      -> score projection            # see scorer note below
       -> TakeOrderedAndProject(k)    # per-partition top-k + k-row
                                      # reduce; NO global sort, NO
                                      # data-row shuffle
       -> Project(score = sqrt(s2))   # sqrt on the k survivors only
 
-Implementation note (measured, not guessed — see BENCH): Catalyst's
-higher-order array functions (``zip_with``/``aggregate``) are evaluated
-interpreted, element-at-a-time with boxing — ~25k el/s/core at
-dim=768, which is 3-4 orders of magnitude off the reference's
-10-48M rows/s scan rate. So, three scorers:
+Scorers — chosen by the query's type, with no option:
 
-  - ``impl="codegen"`` (default for literal query vectors up to dim
-    2048): the distance is unrolled into per-element ``element_at``
-    expressions, chunk-summed so every generated method stays under
-    HotSpot's JIT ceiling — the whole score evaluates inside one
-    WholeStageCodegen span, JVM-only. Stable ~44-80M el/s measured;
-    never touches the Python boundary, so it is immune to the
-    JVM<->Python transfer degradation observed under host contention
-    (up to 30x on shared VMs).
-  - ``impl="arrow"``: a ``mapInArrow`` scorer — Arrow record batches
-    flattened zero-copy into an (n x dim) numpy matrix, distances via
-    BLAS-grade vectorized ops, (ids..., score) batches returned. Fully
-    distributed and partition-local; the fallback for very high dims
-    where the unrolled plan gets expensive to compile.
-  - ``impl="hof"``: the pure-Catalyst HOF path. Correctness twin for
-    the oracle, and the only path for column-valued (non-literal)
-    query vectors (concept math over columns).
+  - a literal query vector (a sequence of floats) is scored by
+    ``mapInArrow``: Arrow record batches flattened zero-copy into an
+    (n x dim) numpy matrix, distances via BLAS-grade vectorized ops,
+    (ids..., score) batches returned. Partition-local, no shuffle, and
+    the plan is the same for every query vector.
+  - a ``Column`` query vector (concept math over columns) is scored by
+    Catalyst's higher-order array functions (``zip_with``/
+    ``aggregate``). They run interpreted, element-at-a-time with
+    boxing, so this path is for column-valued queries and is the
+    tests' independent reference for the Arrow scorer.
+
+Why not unroll a literal query into per-element JVM expressions
+(whole-stage codegen, no Python boundary)? Every query vector is a new
+literal, so every query pays a fresh expression build and Janino
+compile, and past ~2,048 dims the generated code outgrows the JVM's
+64 KB method limit and runs interpreted. Measured on a 4-core host
+(list<float> parquet, filter ``h >= 100``, a fresh query vector per
+call, warm calls):
+
+  =============  ================  ==========  =========
+  rows x dim     unrolled codegen  mapInArrow  HOF
+  =============  ================  ==========  =========
+  16,384 x 768   8.9-10.7 s        1.0-1.5 s   1.1-1.3 s
+  131,072 x 768  12.4-14.5 s       1.5-1.9 s   not run
+  16,384 x 3072  62-77 s           1.5-2.9 s   not run
+  =============  ================  ==========  =========
 
 The monotonic-distance rewrite (sort on squared distance, sqrt after
 the limit) and filter-before-score ordering are constructed here
@@ -51,20 +57,9 @@ from laion_spark.functions.vector import (
     cosine_similarity,
     dot,
     l2_distance_sq,
-    vec_lit,
 )
 
 _METRICS = {"l2", "cosine", "dot"}
-
-#: above this dim the unrolled-expression plan gets expensive to build
-#: and compile on the driver; fall back to the Arrow scorer
-_CODEGEN_DIM_LIMIT = 2048
-
-#: terms per generated sub-expression: small enough that each generated
-#: method stays under HotSpot's ~8 KB bytecode JIT ceiling (a single
-#: 768-term expression compiles but runs in the bytecode INTERPRETER,
-#: ~4x slower measured)
-_CODEGEN_CHUNK = 48
 
 #: above this many (file, row_group) splits the scan scorer ships the
 #: task table through a tiny shuffle instead of the task closure — the
@@ -83,13 +78,14 @@ def knn_search(
     metric: str = "l2",
     score_col: str = "score",
     tiebreak: Sequence[str] = (),
-    impl: str = "auto",
 ) -> DataFrame:
     """Brute-force exact top-k nearest neighbors.
 
-    ``tiebreak`` columns make the result total-ordered (needed for
-    cross-engine comparison; the reference's ORDER BY score alone is
-    ambiguous on ties).
+    A literal ``query_vec`` is scored by the Arrow scorer, a ``Column``
+    by the Catalyst HOF path (see the module docstring). ``tiebreak``
+    columns make the result total-ordered (needed for cross-engine
+    comparison; the reference's ORDER BY score alone is ambiguous on
+    ties).
     """
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {_METRICS}, got {metric!r}")
@@ -97,26 +93,15 @@ def knn_search(
         df = df.filter(filter)
     cols = list(select) if select is not None else [c for c in df.columns if c != vector_col]
 
-    is_literal_q = not isinstance(query_vec, Column)
-    if impl == "auto":
-        impl = "codegen" if (is_literal_q and len(query_vec) <= _CODEGEN_DIM_LIMIT) else (
-            "arrow" if is_literal_q else "hof"
-        )
-    if impl in ("arrow", "codegen") and not is_literal_q:
-        raise ValueError(f"impl={impl!r} requires a literal query vector")
-
-    if impl == "arrow":
+    if not isinstance(query_vec, Column):
         scored = _arrow_scored(df, list(query_vec), vector_col, cols, metric)
-    elif impl == "codegen":
-        scored = _codegen_scored(df, list(query_vec), vector_col, cols, metric)
     else:
-        q = vec_lit(query_vec) if is_literal_q else query_vec
         if metric == "l2":
-            raw = l2_distance_sq(F.col(vector_col), q)
+            raw = l2_distance_sq(F.col(vector_col), query_vec)
         elif metric == "cosine":
-            raw = cosine_similarity(F.col(vector_col), q)
+            raw = cosine_similarity(F.col(vector_col), query_vec)
         else:
-            raw = dot(F.col(vector_col), q)
+            raw = dot(F.col(vector_col), query_vec)
         scored = df.select(*cols, raw.alias("_raw"))
 
     return _finish_topk(scored, metric, k, score_col, tiebreak)
@@ -139,81 +124,7 @@ def _finish_topk(
     return topk.withColumn(score_col, finish).drop("_raw")
 
 
-def _tree_sum(terms: list[Column]) -> Column:
-    """Balanced-tree sum: expression depth log2(n) (a left-assoc chain
-    of 768 adds nests generated code 768 deep). Summation order differs
-    from a linear fold by ~1 ulp — canonicalized away by the round(6)
-    comparison grain (SURVEY.md hard part #2), same as the numpy
-    pairwise reduction in the Arrow path."""
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def _codegen_scored(
-    df: DataFrame,
-    qvec: list[float],
-    vector_col: str,
-    cols: Sequence[str],
-    metric: str,
-) -> DataFrame:
-    """Pure-JVM scorer: the distance against a literal query vector is
-    unrolled into per-element expressions (`element_at` is O(1) on the
-    columnar array) and summed in ~16-term chunks projected as
-    intermediate columns, so every generated method stays JIT-compiled
-    inside one WholeStageCodegen span. No Python boundary, no Arrow
-    ser/de of the embedding column — the scan reads (id cols +
-    vector), scores in registers, and only k rows ever leave the stage.
-
-    Measured (BENCH, 200k x 768, local[32]): stable ~44-80M el/s/query;
-    the mapInArrow path peaks similarly but its JVM<->Python socket hop
-    degrades up to 30x under host CPU contention, so this is the
-    default for literal queries."""
-    e = F.col(vector_col)
-    if metric == "l2":
-
-        def sq_diff(j: int, qj: float) -> Column:
-            d = F.element_at(e, j + 1).cast("double") - F.lit(float(qj))
-            return d * d
-
-        chunk_sets = {"_d": [sq_diff(j, qj) for j, qj in enumerate(qvec)]}
-    elif metric == "dot":
-        chunk_sets = {
-            "_d": [F.element_at(e, j + 1).cast("double") * F.lit(float(qj)) for j, qj in enumerate(qvec)]
-        }
-    else:  # cosine: dot / (|a| * |q|)
-        chunk_sets = {
-            "_d": [F.element_at(e, j + 1).cast("double") * F.lit(float(qj)) for j, qj in enumerate(qvec)],
-            "_n": [
-                F.element_at(e, j + 1).cast("double") * F.element_at(e, j + 1).cast("double")
-                for j in range(len(qvec))
-            ],
-        }
-
-    inter = []
-    for prefix, terms in chunk_sets.items():
-        for i in range(0, len(terms), _CODEGEN_CHUNK):
-            inter.append(_tree_sum(terms[i : i + _CODEGEN_CHUNK]).alias(f"{prefix}{i}"))
-    step1 = df.select(*cols, *inter)
-
-    def total(prefix: str, n: int) -> Column:
-        return _tree_sum([F.col(f"{prefix}{i}") for i in range(0, n, _CODEGEN_CHUNK)])
-
-    if metric in ("l2", "dot"):
-        raw = total("_d", len(qvec))
-    else:
-        import math
-
-        qnorm = math.sqrt(sum(float(x) * float(x) for x in qvec))
-        denom = F.sqrt(total("_n", len(qvec))) * F.lit(qnorm)
-        raw = F.when(denom != 0.0, total("_d", len(qvec)) / denom)
-    return step1.select(*cols, raw.alias("_raw"))
-
-
-def _scale_rows(mat, scales):
+def _scale_rows_inplace(mat, scales):
     """Per-row dequantize ``mat * scales[:, None]`` IN PLACE when the
     matrix owns its buffer (r15, guide §5): an SQ8/f16 source always
     decodes through an ``astype`` copy (owned, writeable), so mutating
@@ -240,7 +151,7 @@ def flat_matrix(vcol, dim: int, dtype=None):
     (ListArray.flatten drops NULL slots).
 
     Also accepts the packed half-width layout
-    (``halfvec.write_half_table(layout="packed")``): a
+    (``halfvec.write_half_table``): a
     fixed_size_binary(2*dim) column is reinterpreted as little-endian
     float16 straight off the Arrow data buffer — zero-copy frombuffer,
     no per-element decode."""
@@ -257,7 +168,7 @@ def flat_matrix(vcol, dim: int, dtype=None):
         if width == 4 * dim:
             return np.float32  # packed float32 (halfvec.write_packed_index)
         if width == 2 * dim:
-            return np.float16  # packed float16 (halfvec layout="packed")
+            return np.float16  # packed float16 (halfvec.write_half_table)
         if width == dim:
             return np.int8  # packed int8 SQ codes (write_int8_table)
         raise ValueError(
@@ -324,7 +235,7 @@ def _arrow_scored(
 
     _ship_package(df.sparkSession)
 
-    pruned = df.select(*cols, vector_col)
+    pruned = df.select(*cols, *([] if vector_col in cols else [vector_col]))
     out_fields = [pruned.schema[c] for c in cols]
     out_schema = (
         ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields) + ", _raw double"
@@ -343,8 +254,8 @@ def _arrow_scored(
             vcol = rb.column(rb.schema.get_field_index(vector_col))
             if vcol.null_count:
                 # NULL embeddings score NULL (ranked last by the shared
-                # finishing tail) — same contract as the codegen/hof
-                # paths, instead of flat_matrix's hard error
+                # finishing tail) — same contract as the HOF path,
+                # instead of flat_matrix's hard error
                 mask = vcol.is_valid()
                 null_rb = rb.filter(pc.invert(mask))
                 if len(null_rb):
@@ -579,7 +490,7 @@ def knn_search_parquet(
     workers reopen their splits against the pickled FileSystem, and
     remote reads pre-buffer (coalesced ranges) since object-store
     latency dominates small reads. Spark-SQL string filters belong in
-    the codegen/arrow paths; this path takes predicates as
+    ``knn_search``; this path takes predicates as
     ``pa_filter``.
 
     ``path`` may be a list of directories — that is the ANN hook: an
@@ -757,7 +668,7 @@ def knn_search_parquet(
                         # no f64 copy of the batch — ~11x the f64 direct
                         # pass), then EXACT float64 rescore of the
                         # candidates in the same direct sum((a-q)^2) form
-                        # as the oracle/codegen paths. The candidate set
+                        # as the oracle and ``knn_search``. The candidate set
                         # provably contains the true top-k: every row
                         # whose f32 score is within 2*eps of the f32 k-th
                         # is kept, where eps is the standard forward-error
@@ -765,7 +676,7 @@ def knn_search_parquet(
                         # (|fl(x.y) - x.y| <= ~n*u*sum|x_i y_i|).
                         mat32 = flat_matrix(vcol, dim, np.float32)
                         if scales is not None:  # SQ8 dequantize: codes * scale
-                            mat32 = _scale_rows(mat32, scales)
+                            mat32 = _scale_rows_inplace(mat32, scales)
                         q32 = q.astype(np.float32)
                         nrm = np.einsum("ij,ij->i", mat32, mat32, dtype=np.float32)
                         raw32 = nrm - 2.0 * (mat32 @ q32) + np.float32(qq)
@@ -787,14 +698,14 @@ def knn_search_parquet(
                     elif metric == "dot":
                         mat = flat_matrix(vcol, dim)
                         if scales is not None:
-                            mat = _scale_rows(mat, scales)
+                            mat = _scale_rows_inplace(mat, scales)
                         raw = mat @ q
                         idx = pa.array(np.argpartition(-raw, top - 1)[:top])
                         raw = raw[idx.to_numpy()]
                     else:
                         mat = flat_matrix(vcol, dim)
                         if scales is not None:
-                            mat = _scale_rows(mat, scales)
+                            mat = _scale_rows_inplace(mat, scales)
                         norms = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * np.sqrt(qq)
                         with np.errstate(divide="ignore", invalid="ignore"):
                             raw = np.where(norms != 0.0, (mat @ q) / norms, np.nan)

@@ -108,6 +108,18 @@ def _tune_worker_malloc() -> None:
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(256 * 1024 * 1024))
 
 
+def default_driver_mem() -> str:
+    """Default driver heap: ~55% of physical memory, capped at 16g.
+
+    The heap is pinned (``-Xms`` == ``-Xmx``, see ``get_session``), so a
+    fixed size larger than the host's memory stops the JVM from
+    starting at all; deriving it from the host leaves the rest for the
+    python workers and the OS page cache that the parquet scans lean on.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(int(phys * 0.55) >> 20, 16 << 10)}m"
+
+
 def get_session(app_name: str = "laion_spark", cpus: int | None = None) -> SparkSession:
     """Create (or fetch) a local session tuned for this engine.
 
@@ -116,7 +128,7 @@ def get_session(app_name: str = "laion_spark", cpus: int | None = None) -> Spark
     """
     _tune_worker_malloc()
     n = cpus or default_parallelism()
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)

@@ -46,27 +46,22 @@ def write_half_table(
     dst_path: str,
     vector_cols: Sequence[str] = ("embedding",),
     compression: str = "snappy",
-    layout: str = "packed",
 ) -> DataFrame:
     """Rewrite a parquet table with ``vector_cols`` narrowed from
-    list<float/double> to half-width float16 (half the vector bytes).
+    list<float/double> (or packed float32) to half-width float16 (half
+    the vector bytes).
 
-    ``layout`` picks the physical encoding (default ``"packed"`` — the
-    only layout that converts halved bytes into halved scan time;
-    measured 10M x 768: packed 1.72 s vs list 5.19 s vs f32 3.05 s):
-
-    - ``"list"``: list<float16>. Parquet stores each element as
-      FIXED_LEN_BYTE_ARRAY(2), which pyarrow decodes PER VALUE — the
-      scan is decode-bound at ~3 GB/s (measured, 10M x 768), eating
-      most of the bandwidth the halved bytes bought. Kept for parity
-      with engines that expose a half float element type.
-    - ``"packed"``: one FIXED_LEN_BYTE_ARRAY(2*dim) per vector —
-      little-endian float16, the whole vector as one value. Parquet
-      decodes large fixed-width values by bulk memcpy and the scorer
-      reinterprets the data buffer with numpy (zero-copy frombuffer),
-      so the scan runs at full-width byte speed on half the bytes —
-      the recommendation for half-precision vectors in parquet, and
-      the honest analog of the reference's packed bfloat16 arrays.
+    Each vector is written as one FIXED_LEN_BYTE_ARRAY(2*dim) value —
+    little-endian float16, the whole vector as one value. Parquet
+    decodes large fixed-width values by bulk memcpy and the scorer
+    reinterprets the data buffer with numpy (zero-copy frombuffer), so
+    the scan runs at full-width byte speed on half the bytes — the
+    honest analog of the reference's packed bfloat16 arrays. A
+    list<float16> column, by contrast, stores each element as
+    FIXED_LEN_BYTE_ARRAY(2), which pyarrow decodes PER VALUE (measured
+    10M x 768 on a 32-core host: packed 1.72 s vs list<float16> 5.19 s
+    vs float32 3.05 s), so it is not written here; ``knn_search_parquet`` still
+    reads such tables.
 
     Local filesystems only (the bench/fixture path); the read side
     (``knn_search_parquet``) also handles remote stores. Returns a
@@ -96,9 +91,6 @@ def write_half_table(
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         tasks.append((f, dst))
     vcols = list(vector_cols)
-    if layout not in ("list", "packed"):
-        raise ValueError(f"layout must be 'list' or 'packed', got {layout!r}")
-    packed = layout == "packed"
 
     def conv(batches):
         import numpy as np
@@ -126,17 +118,14 @@ def write_half_table(
                 schema = pf.schema_arrow
                 # infer each vector column's (fixed) dim from the
                 # first row group — the binary width is part of the
-                # output schema, needed before the writer opens; also
-                # needed to decode a packed-f32 SOURCE (r14) in the
-                # list-target branch
+                # output schema, needed before the writer opens
                 probe = pf.read_row_group(0, columns=vcols)
                 dims: dict[str, int] = {
                     c: _infer_dim(probe.column(c).combine_chunks()) for c in vcols
                 }
                 for c in vcols:
                     i = schema.get_field_index(c)
-                    tgt = pa.binary(2 * dims[c]) if packed else pa.list_(pa.float16())
-                    schema = schema.set(i, schema.field(i).with_type(tgt))
+                    schema = schema.set(i, schema.field(i).with_type(pa.binary(2 * dims[c])))
                 rows = 0
                 with pq.ParquetWriter(dst, schema, compression=compression) as w:
                     for g in range(pf.metadata.num_row_groups):
@@ -144,23 +133,7 @@ def write_half_table(
                         for c in vcols:
                             i = t.schema.get_field_index(c)
                             col = t.column(c).combine_chunks()
-                            if packed:
-                                t = t.set_column(i, c, pack_chunk(col, dims[c]))
-                            elif pa.types.is_fixed_size_binary(col.type):
-                                # packed-f32 source -> list<float16>
-                                from laion_spark.operators.knn import flat_matrix
-
-                                d = dims[c]
-                                flat = flat_matrix(col, d, np.float32).reshape(-1)
-                                lst = pa.ListArray.from_arrays(
-                                    pa.array(
-                                        np.arange(0, (len(col) + 1) * d, d, dtype=np.int32)
-                                    ),
-                                    pa.array(flat.astype(np.float16)),
-                                )
-                                t = t.set_column(i, c, lst)
-                            else:
-                                t = t.set_column(i, c, col.cast(pa.list_(pa.float16())))
+                            t = t.set_column(i, c, pack_chunk(col, dims[c]))
                         w.write_table(t.cast(schema))
                         rows += t.num_rows
                 yield pa.RecordBatch.from_arrays(

@@ -105,7 +105,7 @@ def collect_file_stats(
 
         for rb in batches:
             parts, ns, los, his, oks = [], [], [], [], []
-            for p, f in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+            for p, f in zip(rb.column(1).to_pylist(), rb.column(2).to_pylist()):
                 n, lo, hi, ok = file_stats(f)
                 parts.append(p)
                 ns.append(n)
@@ -114,26 +114,32 @@ def collect_file_stats(
                 oks.append(ok)
             yield pa.RecordBatch.from_arrays(
                 [
+                    rb.column(0),
                     pa.array(parts),
                     pa.array(ns, type=pa.int64()),
                     pa.array(los, type=pa.int64()),
                     pa.array(his, type=pa.int64()),
                     pa.array(oks),
                 ],
-                ["part", "n_rows", "key_min", "key_max", "has_stats"],
+                ["i", "part", "n_rows", "key_min", "key_max", "has_stats"],
             )
 
     from laion_spark.session import _ship_package
 
     _ship_package(spark)
-    jobs = spark.createDataFrame(list(tasks), "part string, path string")
+    # the round-robin repartition scatters the tasks, so each row
+    # carries its task index and the result is put back in task order
+    jobs = spark.createDataFrame(
+        [(i, p, f) for i, (p, f) in enumerate(tasks)], "i long, part string, path string"
+    )
     n_parts = max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
     if n_parts > 1:
         jobs = jobs.repartition(n_parts)
     rows = jobs.mapInArrow(
         read_footers,
-        "part string, n_rows long, key_min long, key_max long, has_stats boolean",
+        "i long, part string, n_rows long, key_min long, key_max long, has_stats boolean",
     ).collect()
+    rows.sort(key=lambda r: r.i)
     return [(r.part, r.n_rows, r.key_min, r.key_max, r.has_stats) for r in rows]
 
 

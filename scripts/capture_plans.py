@@ -1,7 +1,7 @@
 """Capture .explain("formatted") output for bench headliner queries.
 
 Writes plans/r14/<name>_<tag>.txt for each HEADLINER catalog entry plus
-the vector-path shapes (knn_search JVM-codegen, knn_join, arrow paths).
+the vector-path shapes (knn_search, knn_join, scan-side paths).
 Usage:
 
     python scripts/capture_plans.py <tag> [sf_dir] [name ...]

@@ -38,6 +38,28 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def write_list_f16_twin(src: str, dst: str, col: str = "embedding") -> None:
+    """Rewrite every parquet file under ``src`` into ``dst`` (same
+    relative paths, so ``ivf_cluster=K`` dirs survive) with ``col``
+    cast to list<float16> — tables in that layout exist in the wild and
+    the scan scorer must still read them, though the engine no longer
+    writes it."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [src] if os.path.isfile(src) else glob.glob(f"{src}/**/*.parquet", recursive=True)
+    for f in files:
+        rel = os.path.relpath(f, src) if f != src else os.path.basename(f)
+        out = os.path.join(dst, rel)
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        t = pq.read_table(f, partitioning=None)
+        i = t.schema.get_field_index(col)
+        t = t.set_column(i, col, t.column(col).cast(pa.list_(pa.float16())))
+        pq.write_table(t, out)
+
+
 def canon(rows, ndigits=6):
     """Canonicalize rows for order-insensitive comparison: floats
     rounded, everything stringified, rows sorted."""

@@ -31,16 +31,16 @@ def test_cli_search_text(spark, capsys, tmp_path):
     assert "query_time" in content and "score" in content
 
 
-def test_cli_scan_and_codegen_impls_agree(spark, capsys):
+def test_cli_scan_and_dataframe_impls_agree(spark, capsys):
     """--impl auto routes unfiltered text search to the scan scorer;
-    results must equal the codegen path."""
+    results must equal the DataFrame lane."""
     args = [
         "search", "--text", "same query", "--table", "embeddings",
         "--data-dir", SF_DIR, "--limit", "4", "--select", "vec_id",
     ]
     scan_out = run(capsys, *args, "--impl", "scan")
-    code_out = run(capsys, *args, "--impl", "codegen")
-    assert scan_out[1:5] == code_out[1:5]
+    df_out = run(capsys, *args, "--impl", "dataframe")
+    assert scan_out[1:5] == df_out[1:5]
 
 
 def test_cli_scan_with_filter_is_rejected(spark, capsys):

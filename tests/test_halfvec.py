@@ -40,12 +40,10 @@ def test_half_table_knn_matches_full_precision(spark, sf_dir, tmp_path):
 def test_packed_rewrite_roundtrip(spark, sf_dir, tmp_path):
     src = f"{sf_dir}/embeddings.parquet"
     dst = str(tmp_path / "emb_f16p")
-    res = write_half_table(
-        spark, src, dst, vector_cols=("embedding",), layout="packed"
-    ).collect()
+    res = write_half_table(spark, src, dst, vector_cols=("embedding",)).collect()
     n_src = spark.read.parquet(src).count()
     assert sum(r.rows for r in res) == n_src
-    # packed is fixed_size_binary(2*dim): same halved bytes as list<f16>
+    # packed is fixed_size_binary(2*dim): half the float32 bytes
     sz = lambda files: sum(os.path.getsize(f) for f in files)
     src_b = sz(glob.glob(src) or glob.glob(src + "/*.parquet"))
     dst_b = sz(glob.glob(dst + "/*.parquet"))
@@ -66,7 +64,7 @@ def test_packed_rewrite_roundtrip(spark, sf_dir, tmp_path):
 def test_packed_table_knn_matches_full_precision(spark, sf_dir, tmp_path):
     src = f"{sf_dir}/embeddings.parquet"
     dst = str(tmp_path / "emb_f16p_knn")
-    write_half_table(spark, src, dst, vector_cols=("embedding",), layout="packed").collect()
+    write_half_table(spark, src, dst, vector_cols=("embedding",)).collect()
     full = knn_search_parquet(spark, src, QVEC64, k=10, vector_col="embedding", select=["vec_id"])
     packed = knn_search_parquet(spark, dst, QVEC64, k=10, vector_col="embedding", select=["vec_id"])
     full_ids = [r.vec_id for r in full.collect()]
@@ -75,15 +73,25 @@ def test_packed_table_knn_matches_full_precision(spark, sf_dir, tmp_path):
 
 
 def test_packed_matches_list_f16_exactly(spark, sf_dir, tmp_path):
-    # same float16 values either way -> identical scores, identical ids
+    """A list<float16> table written by pyarrow (the engine writes only
+    the packed layout, but still reads this one) holds the same float16
+    values as the packed twin -> identical ids and scores."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import write_list_f16_twin
+
     src = f"{sf_dir}/embeddings.parquet"
     d_list = str(tmp_path / "emb_l")
     d_pack = str(tmp_path / "emb_p")
-    write_half_table(spark, src, d_list, vector_cols=("embedding",), layout="list").collect()
-    write_half_table(spark, src, d_pack, vector_cols=("embedding",), layout="packed").collect()
+    write_list_f16_twin(src, d_list)
+    f0 = glob.glob(d_list + "/**/*.parquet", recursive=True)[0]
+    assert pq.read_schema(f0).field("embedding").type == pa.list_(pa.float16())
+    write_half_table(spark, src, d_pack, vector_cols=("embedding",)).collect()
     a = knn_search_parquet(spark, d_list, QVEC64, k=10, vector_col="embedding", select=["vec_id"])
     b = knn_search_parquet(spark, d_pack, QVEC64, k=10, vector_col="embedding", select=["vec_id"])
-    assert [r.vec_id for r in a.collect()] == [r.vec_id for r in b.collect()]
+    got = [(r.vec_id, round(r.score, 6)) for r in a.collect()]
+    assert got == [(r.vec_id, round(r.score, 6)) for r in b.collect()]
 
 
 def test_int8_rewrite_quarter_bytes_and_schema(spark, sf_dir, tmp_path):
@@ -171,23 +179,6 @@ def test_int8_table_without_scale_col_fails_loudly(spark, sf_dir, tmp_path):
         knn_search_parquet(spark, dst, QVEC64, k=10, vector_col="embedding", select=["vec_id"])
 
 
-def test_default_layout_is_packed(spark, sf_dir, tmp_path):
-    """r10: layout="packed" is the default — the only layout that turns
-    halved bytes into halved scan time (10M x 768: 1.72 s vs list 5.19 s)."""
-    import glob as _g
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = f"{sf_dir}/embeddings.parquet"
-    dst = str(tmp_path / "emb_default")
-    write_half_table(spark, src, dst, vector_cols=("embedding",)).collect()
-    f0 = sorted(_g.glob(dst + "/*.parquet"))[0]
-    t = pq.read_table(f0)
-    assert pa.types.is_fixed_size_binary(t.schema.field("embedding").type)
-    assert t.schema.field("embedding").type.byte_width == 2 * 64
-
-
 def test_int8_rejects_non_finite_vectors(spark, tmp_path):
     """ADVICE r9: NaN/Inf through rint->astype(int8) is undefined in
     numpy — the writer must fail loudly, not write corrupt codes."""
@@ -212,7 +203,7 @@ def test_select_of_packed_vector_column_returns_binary(spark, sf_dir, tmp_path):
     through."""
     src = f"{sf_dir}/embeddings.parquet"
     dst = str(tmp_path / "emb_sel_p")
-    write_half_table(spark, src, dst, vector_cols=("embedding",), layout="packed").collect()
+    write_half_table(spark, src, dst, vector_cols=("embedding",)).collect()
     rows = knn_search_parquet(
         spark, dst, QVEC64, k=3, vector_col="embedding", select=["vec_id", "embedding"]
     ).collect()
@@ -486,11 +477,10 @@ def test_packed_index_sliced_append(spark, sf_dir, tmp_path):
 
 
 def test_twins_from_packed_f32_source_match_list_source(spark, sf_dir, tmp_path):
-    """The f16 (packed AND list layouts) and int8 rewrites must produce
-    identical bytes whether the source ivf table is list<float> or
-    packed f32 — the bench's twin builds read whichever layout the ivf
-    build wrote (packed, from r14 on)."""
-    import numpy as np
+    """The f16 and int8 rewrites must produce identical bytes whether
+    the source ivf table is list<float> or packed f32 — the bench's twin
+    builds read whichever layout the ivf build wrote (packed, from r14
+    on)."""
     import pyarrow.parquet as pq
 
     from laion_spark.operators.similarity import IVFIndex
@@ -511,20 +501,14 @@ def test_twins_from_packed_f32_source_match_list_source(spark, sf_dir, tmp_path)
 
     def vec_bytes(path, col="embedding"):
         t = pq.read_table(path).sort_by("vec_id")
-        c = t.column(col).combine_chunks()
-        if c.type == "binary" or "fixed_size_binary" in str(c.type):
-            return b"".join(c.to_pylist()), t.column("vec_id").to_pylist()
-        return np.asarray(c.to_pylist(), dtype=np.float16).tobytes(), t.column(
-            "vec_id"
-        ).to_pylist()
+        return b"".join(t.column(col).to_pylist()), t.column("vec_id").to_pylist()
 
-    for layout in ("packed", "list"):
-        a, b = str(tmp_path / f"f16_{layout}_l"), str(tmp_path / f"f16_{layout}_p")
-        write_half_table(spark, lsrc, a, ("embedding",), layout=layout).collect()
-        write_half_table(spark, psrc, b, ("embedding",), layout=layout).collect()
-        ba, ia = vec_bytes(a)
-        bb, ib = vec_bytes(b)
-        assert ia == ib and ba == bb, f"f16 {layout} twin differs by source layout"
+    a, b = str(tmp_path / "f16_l"), str(tmp_path / "f16_p")
+    write_half_table(spark, lsrc, a, ("embedding",)).collect()
+    write_half_table(spark, psrc, b, ("embedding",)).collect()
+    ba, ia = vec_bytes(a)
+    bb, ib = vec_bytes(b)
+    assert ia == ib and ba == bb, "f16 twin differs by source layout"
 
     a, b = str(tmp_path / "i8_l"), str(tmp_path / "i8_p")
     write_int8_table(spark, lsrc, a, ("embedding",)).collect()

@@ -1,6 +1,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from laion_spark.functions.vector import vec_lit
 from laion_spark.operators import knn_search
 from tests.conftest import SF_DIR, assert_matches_oracle, duck_con
 
@@ -43,6 +44,13 @@ def test_knn_with_filter(spark, emb):
     assert scores == sorted(scores)
 
 
+def test_knn_can_select_the_vector_column(spark, emb):
+    out = knn_search(
+        emb, QVEC, k=3, vector_col="embedding", select=["vec_id", "embedding"], tiebreak=["vec_id"]
+    ).collect()
+    assert [len(r.embedding) for r in out] == [len(QVEC)] * 3
+
+
 def test_knn_physical_plan_is_take_ordered(spark, emb):
     plan = knn_search(emb, QVEC, k=10, vector_col="embedding", select=["vec_id"])._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
@@ -54,26 +62,29 @@ def test_knn_l2_null_embedding_ranks_last(spark, emb):
     with_null = emb.select("vec_id", "embedding").unionAll(
         spark.sql("SELECT -1 AS vec_id, CAST(NULL AS array<float>) AS embedding")
     )
-    for impl in ("codegen", "hof"):
+    for name, q in (("arrow", QVEC), ("hof", vec_lit(QVEC))):
         out = knn_search(
-            with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], impl=impl
+            with_null, q, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"]
         ).collect()
-        assert all(r.vec_id != -1 for r in out), f"NULL row leaked into top-k ({impl})"
+        assert all(r.vec_id != -1 for r in out), f"NULL row leaked into top-k ({name})"
         assert all(r.score is not None for r in out)
 
 
 def test_knn_parquet_scan_parity(spark, emb, sf_dir):
-    """The scan-side Arrow+BLAS scorer (bench fast lane) reproduces the
-    codegen path exactly at the round(6) grain, all metrics."""
+    """The scan-side Arrow+BLAS scorer (bench fast lane) and the
+    DataFrame lane's Arrow scorer both reproduce the Catalyst HOF
+    reference exactly at the round(6) grain, all metrics."""
     from laion_spark.operators.knn import knn_search_parquet
 
     path = f"{sf_dir}/embeddings.parquet"
+    kw = dict(k=10, vector_col="embedding", select=["vec_id"])
     for metric in ("l2", "cosine", "dot"):
-        a = knn_search(
-            emb, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], metric=metric
-        ).collect()
-        b = knn_search_parquet(spark, path, QVEC, k=10, vector_col="embedding", select=["vec_id"], metric=metric).collect()
-        assert [(r.vec_id, round(r.score, 6)) for r in a] == [(r.vec_id, round(r.score, 6)) for r in b], metric
+        ref = knn_search(emb, vec_lit(QVEC), tiebreak=["vec_id"], metric=metric, **kw).collect()
+        a = knn_search(emb, QVEC, tiebreak=["vec_id"], metric=metric, **kw).collect()
+        b = knn_search_parquet(spark, path, QVEC, metric=metric, **kw).collect()
+        want = [(r.vec_id, round(r.score, 6)) for r in ref]
+        assert [(r.vec_id, round(r.score, 6)) for r in a] == want, metric
+        assert [(r.vec_id, round(r.score, 6)) for r in b] == want, metric
 
 
 def test_knn_parquet_scan_multi_row_groups(spark, emb, tmp_path):
@@ -98,7 +109,7 @@ def test_knn_parquet_scan_multi_row_groups(spark, emb, tmp_path):
 
 def test_knn_parquet_scan_filter_pushdown(spark, emb, sf_dir):
     """pa_filter pushes the predicate into the Arrow reader (row-group
-    stats skip + vectorized residual) and must equal the codegen path
+    stats skip + vectorized residual) and must equal the DataFrame lane
     with the same Spark filter."""
     import pyarrow.compute as pc
 
@@ -176,19 +187,46 @@ def test_knn_parquet_scan_nan_element_does_not_drop_batch(spark, tmp_path):
 
 
 def test_knn_arrow_impl_null_embedding_scores_null(spark, emb):
-    """impl=arrow must match the codegen/hof NULL contract: NULL
+    """The Arrow scorer must match the HOF NULL contract: NULL
     embeddings get a NULL score ranked last, not a hard error."""
     with_null = emb.select("vec_id", "embedding").unionAll(
         spark.sql("SELECT -1 AS vec_id, CAST(NULL AS array<float>) AS embedding")
     )
     out = knn_search(
-        with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], impl="arrow"
+        with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"]
     ).collect()
     assert all(r.vec_id != -1 for r in out)
     ref = knn_search(
-        with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], impl="codegen"
+        with_null, vec_lit(QVEC), k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"]
     ).collect()
     assert [(r.vec_id, round(r.score, 6)) for r in out] == [(r.vec_id, round(r.score, 6)) for r in ref]
+
+
+def test_knn_high_dim_literal_matches_hof(spark, tmp_path):
+    """At dim 3072 (past the JVM's 64 KB generated-method limit for an
+    unrolled per-element score) a literal query still goes through the
+    Arrow scorer and matches the HOF reference at round(6)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dim, n = 3072, 300
+    rng = np.random.default_rng(7)
+    mat = rng.standard_normal((n, dim), dtype=np.float32)
+    vecs = pa.FixedSizeListArray.from_arrays(pa.array(mat.reshape(-1)), dim).cast(
+        pa.list_(pa.float32())
+    )
+    path = str(tmp_path / "hd.parquet")
+    pq.write_table(pa.table({"id": np.arange(n), "embedding": vecs}), path)
+    df = spark.read.parquet(path)
+    q = [float(x) for x in rng.standard_normal(dim)]
+    for metric in ("l2", "cosine"):
+        kw = dict(k=10, vector_col="embedding", select=["id"], tiebreak=["id"], metric=metric)
+        got = knn_search(df, q, **kw).collect()
+        want = knn_search(df, vec_lit(q), **kw).collect()
+        assert [(r.id, round(r.score, 6)) for r in got] == [
+            (r.id, round(r.score, 6)) for r in want
+        ], metric
 
 
 def test_flat_matrix_guards():
@@ -322,31 +360,31 @@ def test_knn_parquet_task_table_fallback(spark, sf_dir, monkeypatch):
 
 
 def test_scale_rows_inplace_and_view_fallback():
-    """r15: _scale_rows must multiply in place ONLY for owned writeable
+    """r15: _scale_rows_inplace must multiply in place ONLY for owned writeable
     matrices (SQ8/f16 astype copies) and fall back to allocating for
     zero-copy views, with identical values either way."""
     import numpy as np
 
-    from laion_spark.operators.knn import _scale_rows
+    from laion_spark.operators.knn import _scale_rows_inplace
 
     scales = np.asarray([0.5, 2.0, 1.5], dtype=np.float32)
     # mirror the decode path's shape: reshape THEN astype, so the
     # resulting matrix owns its buffer (a bare reshape is a view)
     owned = np.arange(12, dtype=np.int8).reshape(3, 4).astype(np.float32)
     want = owned * scales[:, None]
-    got = _scale_rows(owned, scales)
+    got = _scale_rows_inplace(owned, scales)
     assert got is owned  # mutated in place, no second temporary
     assert np.array_equal(got, want)
 
     base = np.arange(12, dtype=np.float32).reshape(3, 4)
     base.setflags(write=False)
     view = base[:]
-    got2 = _scale_rows(view, scales)
+    got2 = _scale_rows_inplace(view, scales)
     assert got2 is not view  # read-only view: allocating fallback
     assert np.array_equal(got2, want)
     assert np.array_equal(base, np.arange(12, dtype=np.float32).reshape(3, 4))
 
     owned64 = np.arange(12, dtype=np.int8).reshape(3, 4).astype(np.float64)
-    got3 = _scale_rows(owned64, scales)
+    got3 = _scale_rows_inplace(owned64, scales)
     assert got3.dtype == np.float64
     assert np.array_equal(got3, np.arange(12).reshape(3, 4) * scales.astype(np.float64)[:, None])

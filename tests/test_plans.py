@@ -53,24 +53,6 @@ def test_knn_scan_prunes_unused_columns(emb):
     assert rs and "label" not in rs[0], rs
 
 
-def test_knn_codegen_path_has_no_python_node(emb):
-    """The default literal-vector scorer is JVM-only: no
-    ArrowEvalPython / MapInArrow / BatchEvalPython operator anywhere."""
-    p = plan_str(knn_search(emb, QVEC64, k=10, vector_col="embedding", select=["vec_id"]))
-    for marker in ("Python", "MapInArrow", "ArrowEval"):
-        assert marker not in p, f"{marker} found in plan:\n{p}"
-
-
-def test_knn_codegen_wholestage_compiles(emb):
-    """The unrolled chunked score must land inside WholeStageCodegen
-    subtrees (interpreted fallback would be silent and ~10x slower)."""
-    p = plan_str(
-        knn_search(emb, QVEC64, k=10, vector_col="embedding", select=["vec_id"]), mode="codegen"
-    )
-    assert "WholeStageCodegen" in p
-    assert "Found 0 WholeStageCodegen" not in p
-
-
 def test_small_dim_join_broadcasts(spark, sf_dir):
     """nation x region must be a broadcast join, never a shuffle join."""
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")

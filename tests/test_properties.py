@@ -114,6 +114,7 @@ def test_scan_scorer_matches_hof_for_random_tables(spark, tmp_path_factory, seed
     including k > n and adversarial near-tie values."""
     import numpy as np
 
+    from laion_spark.functions.vector import vec_lit
     from laion_spark.operators.knn import knn_search, knn_search_parquet
 
     rng = np.random.default_rng(seed)
@@ -123,8 +124,8 @@ def test_scan_scorer_matches_hof_for_random_tables(spark, tmp_path_factory, seed
     path = str(tmp_path_factory.mktemp("scan") / "t.parquet")
     df.repartition(3).write.parquet(path)
     a = knn_search(
-        spark.read.parquet(path), [float(x) for x in mat[0]], k=k,
-        vector_col="embedding", select=["id"], tiebreak=["id"], impl="hof",
+        spark.read.parquet(path), vec_lit([float(x) for x in mat[0]]), k=k,
+        vector_col="embedding", select=["id"], tiebreak=["id"],
     ).collect()
     b = knn_search_parquet(
         spark, path, [float(x) for x in mat[0]], k=k, vector_col="embedding", select=["id"]

@@ -454,10 +454,10 @@ def test_ivf_tune_nprobe(spark, emb, tmp_path):
 
 
 def test_packed_twin_preserves_ivf_tree_and_probes(spark, emb, tmp_path):
-    """layout="packed" keeps the ivf_cluster=K partition dirs and the
-    probe path decodes fixed_size_binary vectors — pruning composes
+    """The packed f16 twin keeps the ivf_cluster=K partition dirs and
+    the probe path decodes fixed_size_binary vectors — pruning composes
     with the bulk-memcpy half-width layout, and (same float16 values)
-    the neighbors equal the list<f16> twin's exactly."""
+    the neighbors equal a pyarrow-written list<f16> twin's exactly."""
     import os
 
     from laion_spark.operators.similarity import IVFIndex
@@ -466,12 +466,14 @@ def test_packed_twin_preserves_ivf_tree_and_probes(spark, emb, tmp_path):
     idx = IVFIndex(dim=64, n_clusters=4, n_iters=1, nprobe=2).fit(
         emb, id_col="vec_id", vector_col="embedding"
     )
+    from tests.conftest import write_list_f16_twin
+
     src = str(tmp_path / "ivf_full_p")
     idx.write_index(emb, src, "embedding")
     d_list = str(tmp_path / "ivf_f16_l")
     d_pack = str(tmp_path / "ivf_f16_p")
-    write_half_table(spark, src, d_list, ["embedding"], layout="list").collect()
-    write_half_table(spark, src, d_pack, ["embedding"], layout="packed").collect()
+    write_list_f16_twin(src, d_list)
+    write_half_table(spark, src, d_pack, ["embedding"]).collect()
     src_dirs = {d for d in os.listdir(src) if d.startswith("ivf_cluster=")}
     pack_dirs = {d for d in os.listdir(d_pack) if d.startswith("ivf_cluster=")}
     assert src_dirs and src_dirs == pack_dirs
