@@ -87,18 +87,33 @@ SLICE_CAP_ROWS = 8_000_000
 WATCHDOG_S_PER_MROW = 150.0
 
 
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def _done_flush(path: str) -> None:
-    """Stamp a fixture's completion marker and flush dirty pages
-    (os.sync) BEFORE any timed row runs against it (r15, guide §1.4
-    measurement hygiene): a multi-GB rewrite otherwise leaves kernel
-    writeback competing with the immediately following timed scan —
-    the per-row disk_ratio stamps flagged exactly that on the f16p/i8
-    10M rows (dr 3.4 / 1.9–5.8 across runs, always right after their
-    rewrite). The flush is fixture-build work, outside every timed
-    region; it shifts writeback cost into the build where the budget
-    gates already account for it."""
+    """Flush a fixture's dirty pages, then stamp its completion marker,
+    BEFORE any timed row runs against it (r15, guide §1.4 measurement
+    hygiene): a multi-GB rewrite otherwise leaves kernel writeback
+    competing with the immediately following timed scan — the per-row
+    disk_ratio stamps flagged exactly that on the f16p/i8 10M rows
+    (dr 3.4 / 1.9–5.8 across runs, always right after their rewrite).
+    The flush is fixture-build work, outside every timed region; it
+    shifts writeback cost into the build where the budget gates already
+    account for it. Only the fixture's own files and directories are
+    fsynced (ADVICE r15 #3): a system-wide os.sync() would also wait on
+    every other writer on the host."""
+    for root, _dirs, files in os.walk(path, topdown=False):
+        for f in files:
+            _fsync(os.path.join(root, f))
+        _fsync(root)
     open(f"{path}/_DONE", "w").close()
-    os.sync()
+    _fsync(f"{path}/_DONE")
+    _fsync(path)
 
 
 def _bench_cpus() -> int:
@@ -1666,6 +1681,9 @@ def tail_family(spark, queries: dict, extras: dict, errors: dict) -> None:
             old_parts = spark.conf.get("spark.sql.shuffle.partitions")
             try:
                 spark.conf.set("spark.sql.shuffle.partitions", "8")
+                # ADVICE r15 #1: drop the 32-partition run's progress, so
+                # a failed extraction below records no commit time at all
+                stream10m_once.progress = None
                 stream10m()  # warm (state partitioning re-derives per fresh checkpoint)
                 tp8 = sorted(timed(stream10m) for _ in range(3))
                 queries["stream10m_p8"] = tp8[1]

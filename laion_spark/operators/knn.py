@@ -32,12 +32,15 @@ literal, so every query pays a fresh expression build and Janino
 compile, and past ~2,048 dims the generated code outgrows the JVM's
 64 KB method limit and runs interpreted. Measured on a 4-core host
 (list<float> parquet, filter ``h >= 100``, a fresh query vector per
-call, warm calls):
+call, warm calls). The 16,384 x 768 ``mapInArrow`` cell is from a
+``get_session`` session, whose workers no longer re-read Spark's zip
+archives per task (``laion_spark.pydaemon``; 0.8-1.15 s without it);
+the other ``mapInArrow`` cells still include that ~0.3 s per task:
 
   =============  ================  ==========  =========
   rows x dim     unrolled codegen  mapInArrow  HOF
   =============  ================  ==========  =========
-  16,384 x 768   8.9-10.7 s        1.0-1.5 s   1.1-1.3 s
+  16,384 x 768   8.9-10.7 s        0.5-0.8 s   1.1-1.3 s
   131,072 x 768  12.4-14.5 s       1.5-1.9 s   not run
   16,384 x 3072  62-77 s           1.5-2.9 s   not run
   =============  ================  ==========  =========

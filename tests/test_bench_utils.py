@@ -91,3 +91,33 @@ def test_compact_line_no_trim_roundtrip():
     assert parsed["vec"]["knn768"] == [1.083, 1.032]
     assert "error_keys" not in parsed
     assert len(line) <= 1900
+
+
+def test_done_flush_fsyncs_only_the_fixture(tmp_path, monkeypatch):
+    """ADVICE r15 #3: the post-build flush must not wait on every other
+    writer on the host (os.sync), only on the fixture's own files; the
+    _DONE marker is still written, after the data."""
+    fix = tmp_path / "fixture"
+    (fix / "part=1").mkdir(parents=True)
+    (fix / "a.parquet").write_bytes(b"a")
+    (fix / "part=1" / "b.parquet").write_bytes(b"b")
+
+    def no_sync():
+        raise AssertionError("system-wide os.sync() called")
+
+    synced = []
+    real_fsync = os.fsync
+
+    def recording_fsync(fd):
+        synced.append(os.readlink(f"/proc/self/fd/{fd}"))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "sync", no_sync)
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    bench._done_flush(str(fix))
+
+    assert (fix / "_DONE").exists()
+    for p in ("a.parquet", "part=1/b.parquet", "part=1", "_DONE"):
+        assert str(fix / p) in synced, p
+    assert synced.index(str(fix / "_DONE")) > synced.index(str(fix / "a.parquet"))
+    assert synced[-1] == str(fix)
