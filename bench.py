@@ -523,21 +523,20 @@ def synth_packed_base(spark, n: int, dim: int, path: str) -> None:
     float32 values as ``synth_vectors`` but stored as one
     fixed_size_binary(4*dim) value per vector, written straight from
     the generator's python workers via the FLBA sink — no shuffle, no
-    JVM row materialization, one file per generator partition. 32 MB
-    row groups: brute scans want fewer, larger (file, row_group) tasks
-    than the 8 MB pruning-grain the ivf tables use. ``_DONE`` marks a
-    complete build (the python sink writes no ``_SUCCESS``)."""
+    JVM row materialization, one file per generator partition (all
+    under one ``ivf_cluster=0`` dir). 32 MB row groups: brute scans
+    want fewer, larger (file, row_group) tasks than the 8 MB
+    pruning-grain the ivf tables use. ``_DONE`` marks a complete build
+    (the python sink writes no ``_SUCCESS``)."""
     if os.path.exists(f"{path}/_DONE"):
         return
-    import shutil
+    from laion_spark.sources.halfvec import _flba_sink, _staged_write
 
-    from laion_spark.sources.halfvec import _flba_sink
-
-    if os.path.isdir(path):  # partial build — never mix generations
-        shutil.rmtree(path, ignore_errors=True)
-    gen = synth_df(spark, n, dim, packed=True).withColumn("c0", F.lit(0))
-    sink = _flba_sink(path, 4 * dim, "c0", "embedding", 32 * 1024 * 1024, "snappy", "")
-    gen.mapInArrow(sink, "path string, rows long").collect()
+    gen = synth_df(spark, n, dim, packed=True).withColumn("ivf_cluster", F.lit(0))
+    # overwrite: a partial build is removed — never mix generations
+    with _staged_write(path, "overwrite") as staging:
+        sink = _flba_sink(staging, 4 * dim, "embedding", 32 * 1024 * 1024)
+        gen.mapInArrow(sink, "path string, rows long").collect()
     _done_flush(path)
 
 
@@ -2450,7 +2449,7 @@ def main() -> None:
         else:
             # the clustered base is never materialized: synth_df's
             # deterministic generator feeds fit (bounded sample, cached)
-            # and then write_index's single assign→repartition→write
+            # and then write_packed_index's single assign→repartition→write
             # pass directly, so the build's footprint is the shuffle +
             # the ivf table (2x) instead of 3x with a base parquet.
             raw = int(N_ANN) * DIM * 4
@@ -2512,7 +2511,6 @@ def main() -> None:
                     ivf_path, dim=DIM, vector_col="embedding",
                     row_group_bytes=RG_MB * 1024 * 1024,
                     mode="overwrite" if sl == 0 else "append",
-                    file_tag="" if sl == 0 else f"-s{sl}",
                 )
                 # each slice's cluster exchange leaves its full shuffle
                 # (~raw/n_slices x 2.2) DEAD in /tmp/blockmgr-* — the
@@ -3101,9 +3099,8 @@ def main() -> None:
                         idx16m.build(gen16, "embedding"), path16, dim=DIM,
                         vector_col="embedding", row_group_bytes=RG16 * 1024 * 1024,
                         # slice 0 clears any crash-orphaned partial; later
-                        # slices append with a unique per-pass file tag
+                        # slices append (each write names its own files)
                         mode="overwrite" if sl16 == 0 else "append",
-                        file_tag="" if sl16 == 0 else f"-s{sl16}",
                     )
                 finally:
                     dog.cancel()

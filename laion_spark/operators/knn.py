@@ -336,6 +336,12 @@ def _arrow_to_ddl(t) -> str:
     raise ValueError(f"unsupported Arrow type for scan-scorer output: {t}")
 
 
+def _strip_local(f: str) -> str:
+    """``file:///p`` and ``file:/p`` (Spark's ``inputFiles()`` form) ->
+    the plain local path ``/p``; anything else unchanged."""
+    return f[7:] if f.startswith("file:///") else f[5:] if f.startswith("file:") else f
+
+
 def _list_parquet_files(paths: Sequence[str]):
     """Resolve dirs/files/URIs to (pyarrow FileSystem, sorted parquet
     file paths, is_remote) WITHOUT a Spark job: local listing is a
@@ -347,12 +353,9 @@ def _list_parquet_files(paths: Sequence[str]):
     storage variant only the Arrow path serves)."""
     from pyarrow.fs import FileSelector, FileType, LocalFileSystem
 
-    def strip_local(f: str) -> str:
-        return f[7:] if f.startswith("file:///") else f[5:] if f.startswith("file:") else f
-
     remote = any("://" in p and not p.startswith("file:") for p in paths)
     if not remote:
-        fs, roots = LocalFileSystem(), [strip_local(p) for p in paths]
+        fs, roots = LocalFileSystem(), [_strip_local(p) for p in paths]
     else:
         def norm(f: str) -> str:
             for hadoop, arrow in (("s3a://", "s3://"), ("s3n://", "s3://")):

@@ -371,7 +371,8 @@ class IVFIndex:
     query and exact-rescoring only those rows.
 
     At 100 TB: fit on a bounded sample, ``build`` at ingest, write the
-    table via ``write_index`` (``partitionBy("ivf_cluster")``) — a probe
+    table via ``write_index`` (one ``ivf_cluster=K`` dir per cluster,
+    written by the python workers' Arrow sink) — a probe
     then reads ~nprobe/n_clusters of the bytes via partition pruning,
     which is exactly what the reference's ANN table does server-side
     (images/results_ridgeback_annoy_100m.png: 8.5x at 100 M rows).
@@ -553,24 +554,27 @@ class IVFIndex:
         row_group_bytes: int = 32 * 1024 * 1024,
         mode: str = "overwrite",
     ) -> None:
-        """Stamp cluster ids and write the partition-pruned table: one
-        parquet dir per cluster, ``row_group_bytes`` row groups (the
-        probe's split granularity — see class docstring).
+        """Stamp cluster ids and write the partition-pruned table:
+        ``write_packed_index`` over ``build`` — vectors as
+        ``fixed_size_binary(4*dim)`` float32 (the same bits as an
+        array<float> input; array<double> is rounded to float32) under
+        one ``ivf_cluster=K`` dir per cluster,
+        ``row_group_bytes`` row groups (the probe's split granularity —
+        see class docstring), committed through a hidden staging dir so
+        a failed write leaves the table as it was.
 
         ``mode="append"`` adds this df's rows to an existing layout
         (each cluster dir gains one more file) — the incremental-ingest
         shape, and how a build whose transient footprint (cluster
-        shuffle + sort spill + output, ~3x the raw bytes) exceeds free
-        disk runs as bounded slices: N passes over disjoint id ranges
-        keep the in-flight bytes at ~3x raw/N while the table grows to
-        its final size."""
-        (
-            self.build(df, vector_col)
-            .repartition(self.n_clusters, F.col("ivf_cluster"))
-            .write.mode(mode)
-            .option("parquet.block.size", int(row_group_bytes))
-            .partitionBy("ivf_cluster")
-            .parquet(path)
+        shuffle + output, ~2x the raw bytes) exceeds free disk runs as
+        bounded slices: N passes over disjoint id ranges keep the
+        in-flight bytes at ~2x raw/N while the table grows to its final
+        size."""
+        from laion_spark.sources.halfvec import write_packed_index
+
+        write_packed_index(
+            self.build(df, vector_col), path, self.dim,
+            vector_col=vector_col, row_group_bytes=row_group_bytes, mode=mode,
         )
         self._scan_cache = None  # table changed — probes must re-list
 

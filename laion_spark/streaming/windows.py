@@ -319,6 +319,12 @@ def stream_index_ingest(
     directory see each micro-batch as soon as its files commit — index
     freshness is one trigger behind ingest, with no rebuild step.
 
+    Unlike ``write_index`` (packed ``fixed_size_binary(4*dim)`` float32
+    through the python workers' Arrow sink), this still writes
+    list<float> through Spark's streaming file sink, whose commit log
+    is what makes the appends exactly-once; every probe path reads both
+    layouts (``flat_matrix``).
+
     Returns the data directory (feed its ``probe_dirs`` to
     ``knn_search_parquet``). The sink's ``_spark_metadata`` commit log
     + checkpoint give exactly-once APPENDS; cluster centroids are

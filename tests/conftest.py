@@ -46,8 +46,11 @@ def write_list_f16_twin(src: str, dst: str, col: str = "embedding") -> None:
     writes it."""
     import glob
 
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from laion_spark.operators.knn import flat_matrix
 
     files = [src] if os.path.isfile(src) else glob.glob(f"{src}/**/*.parquet", recursive=True)
     for f in files:
@@ -56,7 +59,13 @@ def write_list_f16_twin(src: str, dst: str, col: str = "embedding") -> None:
         os.makedirs(os.path.dirname(out), exist_ok=True)
         t = pq.read_table(f, partitioning=None)
         i = t.schema.get_field_index(col)
-        t = t.set_column(i, col, t.column(col).cast(pa.list_(pa.float16())))
+        vec = t.column(col).combine_chunks()
+        if pa.types.is_fixed_size_binary(vec.type):  # packed f32 (IVFIndex.write_index)
+            dim = vec.type.byte_width // 4
+            offs = np.arange(0, (len(vec) + 1) * dim, dim, dtype=np.int32)
+            flat = flat_matrix(vec, dim, np.float32).ravel()
+            vec = pa.ListArray.from_arrays(pa.array(offs), pa.array(flat))
+        t = t.set_column(i, col, vec.cast(pa.list_(pa.float16())))
         pq.write_table(t, out)
 
 

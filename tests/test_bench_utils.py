@@ -1,6 +1,7 @@
 """bench.py internals that broke (or nearly broke) a live run.
 
-No Spark session: these exercise pure-python bench helpers.
+Pure-python bench helpers, plus the bench's writer call sites run at
+toy size on the shared Spark session.
 """
 
 import json
@@ -121,3 +122,35 @@ def test_done_flush_fsyncs_only_the_fixture(tmp_path, monkeypatch):
         assert str(fix / p) in synced, p
     assert synced.index(str(fix / "_DONE")) > synced.index(str(fix / "a.parquet"))
     assert synced[-1] == str(fix)
+
+
+def test_bench_writer_call_sites_run_at_toy_size(spark, tmp_path):
+    """bench.py cannot run end to end on a small host (its fixtures
+    need ~25 GB), so a writer signature that drifted from the bench's
+    calls would surface only on a big one. Run its packed-base fixture
+    and its sliced index-build call shapes at n=64, dim=8."""
+    from laion_spark.operators.similarity import IVFIndex
+    from laion_spark.sources.halfvec import write_int8_index, write_packed_index
+
+    n, dim = 64, 8
+    base = str(tmp_path / "base")
+    bench.synth_packed_base(spark, n, dim, base)
+    assert os.path.exists(f"{base}/_DONE")
+    assert spark.read.parquet(base).count() == n
+
+    idx = IVFIndex(dim=dim, n_clusters=4, n_iters=1, nprobe=2)
+    idx.fit(bench.synth_df(spark, n, dim, clustered=True), id_col="id",
+            vector_col="embedding", fit_rows=None)
+    for writer in (write_packed_index, write_int8_index):
+        path = str(tmp_path / writer.__name__)
+        for sl, (lo, hi) in enumerate(((0, n // 2), (n // 2, n))):
+            writer(
+                idx.build(
+                    bench.synth_df(spark, hi, dim, clustered=True, start=lo, packed=True),
+                    "embedding",
+                ),
+                path, dim=dim, vector_col="embedding",
+                row_group_bytes=8 * 1024 * 1024,
+                mode="overwrite" if sl == 0 else "append",
+            )
+        assert spark.read.parquet(path).count() == n

@@ -313,15 +313,12 @@ def test_int8_index_save_modes(spark, tmp_path):
 
 
 def test_int8_index_sliced_append_matches_one_pass(spark, sf_dir, tmp_path):
-    """A sliced build (disjoint id ranges appended with per-pass file
-    tags — the bounded-peak-disk shape bench.py uses at 16M) must equal
-    the single-pass table byte-for-byte in content and serve the same
-    results. Append without a file_tag must raise (partition ids repeat
-    across passes, so untagged filenames would silently overwrite the
-    previous slice's files)."""
+    """A sliced build (disjoint id ranges appended pass by pass — the
+    bounded-peak-disk shape bench.py uses at 16M) must equal the
+    single-pass table byte-for-byte in content and serve the same
+    results."""
     import numpy as np
     import pyarrow.parquet as pq
-    import pytest
 
     from laion_spark.operators.similarity import IVFIndex
     from laion_spark.sources.halfvec import write_int8_index
@@ -341,11 +338,7 @@ def test_int8_index_sliced_append_matches_one_pass(spark, sf_dir, tmp_path):
     lo = emb.filter(f"vec_id <= {cut}")
     hi = emb.filter(f"vec_id > {cut}")
     write_int8_index(idx.build(lo, "embedding"), sliced, dim=dim, mode="overwrite")
-    with pytest.raises(ValueError, match="file_tag"):
-        write_int8_index(idx.build(hi, "embedding"), sliced, dim=dim, mode="append")
-    write_int8_index(
-        idx.build(hi, "embedding"), sliced, dim=dim, mode="append", file_tag="-s1"
-    )
+    write_int8_index(idx.build(hi, "embedding"), sliced, dim=dim, mode="append")
 
     def snap(path):
         t = pq.read_table(path).sort_by("vec_id")
@@ -379,10 +372,10 @@ def test_int8_index_sliced_append_matches_one_pass(spark, sf_dir, tmp_path):
 
 def test_packed_index_matches_list_index_exactly(spark, sf_dir, tmp_path):
     """write_packed_index (map-side f32 pack -> pyarrow FLBA sink) must
-    serve IDENTICAL results to IVFIndex.write_index's list<float>
-    layout — same float32 values, only the physical encoding differs
-    (r14: the packed writer replaces the JVM list<float> write that
-    dominated the 8M ivf rebuild)."""
+    serve IDENTICAL results to a list<float> layout written by Spark's
+    own partitioned parquet writer — same float32 values, only the
+    physical encoding differs (r14: the packed writer replaces the JVM
+    list<float> write that dominated the 8M ivf rebuild)."""
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -396,7 +389,7 @@ def test_packed_index_matches_list_index_exactly(spark, sf_dir, tmp_path):
     idx.fit(emb, id_col="vec_id", vector_col="embedding", fit_rows=500)
 
     list_path = str(tmp_path / "ivf_list")
-    idx.write_index(emb, list_path, "embedding")
+    idx.build(emb, "embedding").write.partitionBy("ivf_cluster").parquet(list_path)
     packed_path = str(tmp_path / "ivf_packed")
     res = write_packed_index(idx.build(emb, "embedding"), packed_path, dim=dim)
     assert sum(r[1] for r in res) == emb.count()
@@ -440,7 +433,7 @@ def test_packed_index_matches_list_index_exactly(spark, sf_dir, tmp_path):
 
 
 def test_packed_index_sliced_append(spark, sf_dir, tmp_path):
-    """Sliced append (disjoint id halves, per-pass file tags) must
+    """Sliced append (disjoint id halves) must
     match the one-pass packed table row-for-row — the disk-bounded
     build shape the bench uses for the 8M rebuild."""
     import pyarrow.parquet as pq
@@ -460,13 +453,7 @@ def test_packed_index_sliced_append(spark, sf_dir, tmp_path):
     sliced = str(tmp_path / "sliced")
     lo, hi = emb.filter(F.col("vec_id") <= mid), emb.filter(F.col("vec_id") > mid)
     write_packed_index(idx.build(lo, "embedding"), sliced, dim=dim, mode="overwrite")
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="file_tag"):
-        write_packed_index(idx.build(hi, "embedding"), sliced, dim=dim, mode="append")
-    write_packed_index(
-        idx.build(hi, "embedding"), sliced, dim=dim, mode="append", file_tag="-s1"
-    )
+    write_packed_index(idx.build(hi, "embedding"), sliced, dim=dim, mode="append")
     to = pq.read_table(one).sort_by("vec_id")
     ts = pq.read_table(sliced).sort_by("vec_id")
     assert to.column("vec_id").to_pylist() == ts.column("vec_id").to_pylist()
@@ -495,7 +482,7 @@ def test_twins_from_packed_f32_source_match_list_source(spark, sf_dir, tmp_path)
     idx = IVFIndex(dim=dim, n_clusters=4, n_iters=2, nprobe=2)
     idx.fit(emb, id_col="vec_id", vector_col="embedding", fit_rows=500)
     lsrc = str(tmp_path / "src_list")
-    idx.write_index(emb, lsrc, "embedding")
+    idx.build(emb, "embedding").write.partitionBy("ivf_cluster").parquet(lsrc)
     psrc = str(tmp_path / "src_packed")
     write_packed_index(idx.build(emb, "embedding"), psrc, dim=dim)
 
@@ -569,3 +556,100 @@ def test_index_builds_from_binary_input_match_list_input(spark, sf_dir, tmp_path
     write_int8_index(idx.build(emb_bin, "embedding"), ib, dim=dim)
     assert snap(il, ["vec_id", "embedding", "embedding_scale"]) == snap(
         ib, ["vec_id", "embedding", "embedding_scale"])
+
+
+def _fitted_ivf(spark, sf_dir):
+    from laion_spark.operators.similarity import IVFIndex
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
+    idx = IVFIndex(dim=64, n_clusters=4, n_iters=2, nprobe=2)
+    idx.fit(emb, id_col="vec_id", vector_col="embedding", fit_rows=500)
+    return emb, idx
+
+
+def test_twins_of_file_uri_source_keep_the_hive_tree(spark, sf_dir, tmp_path):
+    """Spark reports local paths in the ``file:/`` form
+    (``df.inputFiles()``). A twin rewrite given that form must keep the
+    plain-path twin's ``ivf_cluster=K`` tree — not flatten it into
+    top-level part files that leave a probe nothing to prune — and
+    serve the same probe ids."""
+    from laion_spark.sources.halfvec import write_half_table, write_int8_table
+
+    emb, idx = _fitted_ivf(spark, sf_dir)
+    src = str(tmp_path / "ivf")
+    idx.write_index(emb, src, "embedding")
+
+    def tree(d):
+        return sorted(
+            os.path.relpath(f, d) for f in glob.glob(d + "/**/*.parquet", recursive=True)
+        )
+
+    for writer, kw in (
+        (write_half_table, {}),
+        (write_int8_table, {"scale_col": "embedding_scale"}),
+    ):
+        plain = str(tmp_path / f"{writer.__name__}_plain")
+        uri = str(tmp_path / f"{writer.__name__}_uri")
+        writer(spark, src, plain, ("embedding",)).collect()
+        writer(spark, "file:" + src, uri, ("embedding",)).collect()
+        assert tree(plain) and all(p.startswith("ivf_cluster=") for p in tree(plain))
+        assert tree(uri) == tree(plain)
+        ids = [
+            [
+                r.vec_id
+                for r in idx.search_parquet(
+                    spark, d, QVEC64, k=5, vector_col="embedding", select=["vec_id"], **kw
+                ).collect()
+            ]
+            for d in (plain, uri)
+        ]
+        assert len(ids[0]) == 5 and ids[0] == ids[1]
+
+
+def test_failed_append_leaves_the_index_unchanged(spark, sf_dir, tmp_path):
+    """An append that fails inside the sink stage — one already-packed
+    row of the wrong width trips the sink's width check while the other
+    sink tasks write their clusters — must leave the index exactly as
+    it was: same files, same scan plans, same rows, no staging dir."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from laion_spark.sources.halfvec import write_packed_index
+
+    emb, idx = _fitted_ivf(spark, sf_dir)
+    path = str(tmp_path / "ivf")
+    idx.write_index(emb, path, "embedding")
+
+    def state():
+        files = sorted(
+            os.path.relpath(os.path.join(d, f), path) for d, _, fs in os.walk(path) for f in fs
+        )
+        plans = idx.scan_plans(path, refresh=True)["by_cluster"]
+        return files, plans, spark.read.parquet(path).count()
+
+    before = state()
+    # little-endian float32 1.0 repeated: 64 elements, 63 for the last row
+    bad = spark.range(40).select(
+        (F.col("id") + 1_000_000).alias("vec_id"),
+        F.expr("unhex(repeat('0000803f', IF(id = 39, 63, 64)))").alias("embedding"),
+        (F.col("id") % 4).cast("int").alias("ivf_cluster"),
+    )
+    with pytest.raises(Exception, match="code widths"):
+        write_packed_index(bad, path, dim=64, mode="append")
+    assert state() == before
+    assert not glob.glob(path + "/_staging-*")
+
+
+def test_untagged_appends_keep_every_row(spark, sf_dir, tmp_path):
+    """Every write names its files with its own write id, so two plain
+    appends into the same cluster dirs keep every row of both slices."""
+    from laion_spark.sources.halfvec import write_packed_index
+
+    emb, idx = _fitted_ivf(spark, sf_dir)
+    path = str(tmp_path / "ivf")
+    for part in (emb.filter("vec_id % 2 = 0"), emb.filter("vec_id % 2 = 1")):
+        write_packed_index(idx.build(part, "embedding"), path, dim=64, mode="append")
+    got = sorted(r.vec_id for r in spark.read.parquet(path).select("vec_id").collect())
+    assert got == sorted(r.vec_id for r in emb.select("vec_id").collect())
+    for d in glob.glob(path + "/ivf_cluster=*"):
+        assert len(glob.glob(d + "/*.parquet")) == 2, d

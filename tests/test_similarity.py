@@ -636,8 +636,12 @@ def test_ivf_write_index_append_slices_equal_single_pass(spark, emb, tmp_path):
     """mode="append" sliced build (the bounded-transient-footprint cold
     build path) must produce the same table content and the same probe
     results as one overwrite pass."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from laion_spark.operators.knn import flat_matrix
     from laion_spark.operators.similarity import IVFIndex
 
     idx = IVFIndex(dim=64, n_clusters=4, n_iters=2, nprobe=2).fit(
@@ -652,12 +656,21 @@ def test_ivf_write_index_append_slices_equal_single_pass(spark, emb, tmp_path):
     idx.write_index(emb.filter(F.col("vec_id") >= cut), sliced, "embedding", mode="append")
 
     def snap(p):
+        rows = spark.read.parquet(p).collect()
+        vecs = flat_matrix(pa.array([r.embedding for r in rows], pa.binary()), 64)
         return sorted(
-            (r.vec_id, r.ivf_cluster, tuple(round(float(x), 6) for x in r.embedding))
-            for r in spark.read.parquet(p).collect()
+            (r.vec_id, r.ivf_cluster, tuple(round(float(x), 6) for x in v))
+            for r, v in zip(rows, vecs)
         )
 
     assert snap(single) == snap(sliced)
+    # one fixed-width value per vector holding the input's float32 bits
+    t = pq.read_table(single)
+    assert t.schema.field("embedding").type == pa.binary(4 * 64)
+    src = {r.vec_id: np.asarray(r.embedding, np.float32).tobytes() for r in emb.collect()}
+    assert sorted(zip(t.column("vec_id").to_pylist(), t.column("embedding").to_pylist())) == sorted(
+        src.items()
+    )
     q = [float(x) for x in emb.first().embedding]
     a = idx.search_parquet(spark, single, q, k=5, vector_col="embedding", select=["vec_id"]).collect()
     idx._scan_cache = None  # separate table, fresh listing
