@@ -219,6 +219,135 @@ def flat_matrix(vcol, dim: int, dtype=None):
     return flat.reshape(n, dim).astype(dtype or np.float64, copy=False)
 
 
+#: float32 unit roundoff (2^-24 ~= 5.96e-8), rounded up: the unit of
+#: every selection margin in ``topk_candidates``
+_U32 = 6.0e-8
+
+
+def topk_candidates(vcol, scales, Q, k: int, metric: str):
+    """The top-k kernel behind every scan-side and batched kNN scorer,
+    over one Arrow batch: ``vcol`` holds n corpus vectors (any layout
+    ``flat_matrix`` reads), ``scales`` their SQ8 factors (None for
+    unquantized storage) and ``Q`` is the (m, dim) float64 query
+    matrix. Returns ``(rows, qs, raw)``: every (row, query) pair whose
+    exact raw score (squared L2, cosine or dot) is no worse than that
+    query's k-th best in the batch. Ties at the k-th place are all
+    kept, so which of several equal rows survive is left to the
+    caller's final order, never to the batch layout.
+
+    Two stages. A float32 GEMM over the (n x m) score matrix SELECTS
+    every row whose score is within the forward-error margin of the
+    query's float32 k-th; that set provably holds the exact top-k
+    (SIMD-wide, no float64 copy of the batch — ~11x the float64 direct
+    pass). Only those candidates are RESCORED in float64 from the
+    values as stored (list<double> as is, SQ8 as codes x scale,
+    float32/float16 by upcast), l2 in the direct sum((a-q)^2) form the
+    oracle folds, so every path that runs this kernel gives a (query,
+    row) pair the same score. Non-finite scores (NaN elements, a
+    zero-norm row under cosine, which scores NaN) rank last.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    m, dim = Q.shape
+    X = flat_matrix(vcol, dim, np.float32)
+    if scales is not None:  # SQ8 dequantize: codes * scale
+        X = _scale_rows_inplace(X, scales)
+    nrm = np.einsum("ij,ij->i", X, X, dtype=np.float32)
+    fin = np.isfinite(nrm)
+    xmax = float(np.sqrt(nrm[fin].max())) if fin.any() else 0.0
+    qq = np.einsum("ij,ij->i", Q, Q)
+    qn = np.sqrt(qq)
+    XQ = X @ np.ascontiguousarray(Q.T, dtype=np.float32)  # BLAS-ready strides at m=1
+    # key: the float32 score, lower = better; err: a bound on its
+    # distance from the exact score, per query
+    if metric == "l2":
+        key = nrm[:, None] - 2.0 * XQ + qq.astype(np.float32)
+        # each term of the expanded form is a float32 dot product, off
+        # by <= ~dim*u*sum|x_i y_i| (the standard forward-error bound)
+        err = dim * _U32 * (xmax + qn) ** 2
+    elif metric == "dot":
+        key = -XQ
+        # |fl32(x.q) - x.q| <= gamma_dim * sum|x_i q_i|
+        #                   <= dim*u/(1 - dim*u) * |x| |q|
+        # (Higham, Accuracy and Stability of Numerical Algorithms,
+        # Thm 3.5, then Cauchy-Schwarz); rounding a float64 or
+        # SQ8-dequantized x and the float64 q to float32 first adds
+        # <= 2u |x| |q|. With |x| <= xmax that is
+        # (dim + 2) * u * xmax * |q| to first order in u, and the 4x
+        # below leaves 2x slack over the 2x needed.
+        err = (dim + 2) * _U32 * xmax * qn
+    else:
+        with np.errstate(divide="ignore", invalid="ignore"):
+            key = -XQ / np.outer(np.sqrt(nrm), qn.astype(np.float32))
+        # |cos| <= 1: one constant bounds the normalized dot's error
+        err = np.full(m, dim * _U32)
+    key[~np.isfinite(key)] = np.inf
+    top = min(k, len(X))
+    kth = np.partition(key, top - 1, axis=0)[top - 1]
+    # the exact k-th is <= kth + err, and a row whose exact score is
+    # <= that has key <= kth + 2*err; keep 2x slack on top
+    rows, qs = np.nonzero(key <= kth + 4.0 * err)
+    Xc = flat_matrix(vcol.take(pa.array(rows)), dim)
+    if scales is not None:
+        Xc = Xc * scales[rows, None]
+    Qc = Q[qs]
+    if metric == "l2":
+        d = Xc - Qc
+        raw = np.einsum("ij,ij->i", d, d)
+    else:
+        raw = np.einsum("ij,ij->i", Xc, Qc)
+        if metric == "cosine":
+            norms = np.sqrt(np.einsum("ij,ij->i", Xc, Xc)) * qn[qs]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                raw = np.where(norms != 0.0, raw / norms, np.nan)
+    keep = _keep_ties(qs, raw, k, metric)
+    return rows[keep], qs[keep], raw[keep]
+
+
+def _keep_ties(qs, raw, k: int, metric: str):
+    """Indices of the (query, exact raw score) pairs that are no worse
+    than their query's k-th best; NaN ranks last."""
+    import numpy as np
+
+    key = raw if metric == "l2" else -raw
+    key = np.where(np.isnan(key), np.inf, key)
+    order = np.lexsort((key, qs))
+    sq, sk = qs[order], key[order]
+    starts = np.flatnonzero(np.diff(sq, prepend=-1))
+    sizes = np.diff(np.append(starts, len(sq)))
+    kth = sk[starts + np.minimum(sizes, k) - 1]
+    return order[sk <= np.repeat(kth, sizes)]
+
+
+def _split_topk(batches, vector_col, scale_col, cols, Q, k: int, metric: str):
+    """One split's (or one Arrow partition's) share of a kNN answer:
+    ``topk_candidates`` over each batch, merged into a running per-query
+    cut at the exact k-th (ties kept), so at most ~k rows per query are
+    held whatever the split's size. Returns ``(arrays, qs, raw)`` —
+    ``arrays`` the ``cols`` columns of the kept rows — or None for a
+    split with no rows."""
+    import numpy as np
+    import pyarrow as pa
+
+    kept = None
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        scales = None if scale_col is None else b.column(scale_col).to_numpy(zero_copy_only=False)
+        rows, qs, raw = topk_candidates(b.column(vector_col), scales, Q, k, metric)
+        idx = pa.array(rows)
+        arrays = [b.column(c).take(idx) for c in cols]
+        if kept is not None:
+            arrays = [pa.concat_arrays([a, c]) for a, c in zip(kept[0], arrays)]
+            qs, raw = np.concatenate([kept[1], qs]), np.concatenate([kept[2], raw])
+            keep = _keep_ties(qs, raw, k, metric)
+            arrays = [a.take(pa.array(keep)) for a in arrays]
+            qs, raw = qs[keep], raw[keep]
+        kept = (arrays, qs, raw)
+    return kept
+
+
 def _arrow_scored(
     df: DataFrame,
     qvec: list[float],
@@ -427,6 +556,28 @@ class ScanPlan:
         self.arrow_schema = arrow_schema
 
 
+def _split_tasks(fs, files, max_files: int) -> list[tuple[str, int]]:
+    """(file, row_group) split tasks from each file's footer, or one
+    whole-file task (row_group -1) per file when there are more than
+    ``max_files`` files — then one task per file already saturates a
+    cluster, and the footer opens would dominate the listing."""
+    import pyarrow.parquet as pq
+
+    if len(files) > max_files:
+        return [(f, -1) for f in files]
+    tasks: list[tuple[str, int]] = []
+    for f in files:
+        try:
+            n_rg = pq.ParquetFile(fs.open_input_file(f)).metadata.num_row_groups
+            tasks.extend((f, g) for g in range(n_rg))
+        except OSError:
+            # transient footer-read failure (object-store throttle):
+            # fall back to a whole-file task — a (f, 0) guess would
+            # silently drop this file's other row groups
+            tasks.append((f, -1))
+    return tasks
+
+
 def build_scan_plan(path: str | Sequence[str]) -> ScanPlan:
     """Resolve ``path`` (dir(s)/file(s)/URIs) into a reusable
     :class:`ScanPlan`: sorted file list + (file, row_group) task table
@@ -437,21 +588,116 @@ def build_scan_plan(path: str | Sequence[str]) -> ScanPlan:
 
     paths = [path] if isinstance(path, str) else list(path)
     fs, files, remote = _list_parquet_files(paths)
-    tasks: list[tuple[str, int]] = []
-    if len(files) <= 256:
-        for f in files:
-            try:
-                n_rg = pq.ParquetFile(fs.open_input_file(f)).metadata.num_row_groups
-                tasks.extend((f, g) for g in range(n_rg))
-            except OSError:
-                # transient footer-read failure (object-store throttle):
-                # fall back to a whole-file task — a (f, 0) guess would
-                # silently drop this file's other row groups
-                tasks.append((f, -1))
-    else:
-        tasks = [(f, -1) for f in files]  # -1 = whole file
+    tasks = _split_tasks(fs, files, 256)
     arrow_schema = pq.ParquetFile(fs.open_input_file(files[0])).schema_arrow
     return ScanPlan(fs, files, remote, tasks, arrow_schema)
+
+
+def _check_vector_cols(schema, vector_col: str, scale_col: str | None, dim: int) -> None:
+    """Fail loudly before a scan that cannot score right: the vector or
+    scale column is missing from the files, or an SQ8 table is read
+    without its scale — raw int8 codes would rank silently wrong."""
+    import pyarrow as pa
+
+    phys = set(schema.names)
+    if vector_col not in phys:
+        raise ValueError(f"vector column {vector_col!r} not in parquet files ({sorted(phys)})")
+    if scale_col is not None and scale_col not in phys:
+        raise ValueError(f"scale column {scale_col!r} not in parquet files ({sorted(phys)})")
+    vtype = schema.field(vector_col).type
+    if scale_col is None and pa.types.is_fixed_size_binary(vtype) and vtype.byte_width == dim:
+        raise ValueError(
+            f"{vector_col!r} is fixed_size_binary({vtype.byte_width}) = packed int8 "
+            f"codes for dim={dim}; pass scale_col "
+            f"(write_int8_table stores it as '{vector_col}_scale')"
+        )
+
+
+def _split_batches(fs, remote: bool, fpath: str, rg: int, columns, dim: int, pa_filter=None):
+    """Arrow batches of one (file, row_group) split (``rg`` < 0: the
+    whole file), read single-threaded — every core already runs its own
+    task, so per-task decode threads would only fight each other.
+
+    Cache-blocked batches: keep a batch's vector block (~1.5 MB) inside
+    L2 so the decode -> norm -> GEMM passes run on hot data. Measured
+    at 1M x 768-d f32: large batches lose to memory traffic (32768-row
+    decode+score is ~1.7x slower single-thread), tiny ones to per-batch
+    numpy overhead; 512 rows at 768-d is the measured parallel optimum
+    on a 32-core host (best 1.11 s vs 1.14/1.17/1.28 s for
+    256/1024/2048-row batches, and the tightest run-to-run spread).
+    Floor of 256 rows: below that, bookkeeping always wins. The IVF
+    join uses the same rule: its (rows x queries) score block grows
+    with the query count, but the vector block, read once per batch
+    for all queries, is what the rule sizes."""
+    import pyarrow.parquet as pq
+
+    batch_rows = max(256, 393_216 // max(dim, 1))
+    rgs = None if rg < 0 else [rg]
+    if pa_filter is not None:
+        import pyarrow.dataset as pads
+
+        # pre_buffer on remote stores coalesces the column chunk
+        # ranges into few large GETs (object-store latency, not
+        # bandwidth, dominates small reads)
+        fmt = pads.ParquetFileFormat(
+            default_fragment_scan_options=pads.ParquetFragmentScanOptions(pre_buffer=remote)
+        )
+        frag = fmt.make_fragment(fpath, filesystem=fs, row_groups=rgs)
+        return frag.to_batches(
+            columns=columns, filter=pa_filter, batch_size=batch_rows, use_threads=False
+        )
+    pf = pq.ParquetFile(fs.open_input_file(fpath), pre_buffer=remote)
+    return pf.iter_batches(
+        batch_size=batch_rows,
+        row_groups=rgs if rgs is not None else range(pf.metadata.num_row_groups),
+        columns=columns,
+        use_threads=False,
+    )
+
+
+def _run_splits(spark, tasks: list[tuple], task_ddl: str, score_split, out_schema: str) -> DataFrame:
+    """The scan-side split dispatch: ``score_split(*task)`` (a generator
+    of Arrow batches) runs once per task tuple — (path, row_group, ...)
+    — spread round-robin over ``defaultParallelism`` partitions.
+
+    Tasks ride a shuffle-FREE range leaf: spark.range(n, ...,
+    numPartitions=n) materializes one row per partition JVM-side, so a
+    probe is a single stage (scan+score -> TakeOrdered reduce). A
+    LocalRelation + repartition(N) form moved only tiny (path,
+    row_group) strings but still paid a full shuffle stage boundary —
+    pure fixed overhead on the ANN probe path (measured ~0.1-0.2
+    s/probe). Round-robin assignment interleaves row groups of the same
+    file across partitions, which also spreads a skewed probed cluster
+    over the wave. An RDD task table (sc.parallelize) would be worse
+    still: a second Python runner per execution just to deserialize
+    pickled rows (~0.2 s, measured r3)."""
+    n_parts = max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
+    if len(tasks) <= _TASKS_INLINE_MAX:
+        task_groups = [tasks[i::n_parts] for i in range(n_parts)]
+        base = spark.range(0, n_parts, 1, n_parts)
+    else:
+        # huge listings (100 TB-scale table: ~10^5-10^6 splits): the
+        # full assignment no longer belongs in the task closure (it is
+        # broadcast with the task binary); ship each partition only its
+        # own task rows via the tiny task-table shuffle — one extra
+        # stage, amortized at this scan size
+        task_groups = None
+        base = spark.createDataFrame(tasks, task_ddl)
+        if n_parts > 1:
+            base = base.repartition(n_parts)
+
+    def run(batches):
+        for rb in batches:
+            # range-leaf mode: the batch holds this partition's group
+            # id(s); task-table mode: it carries the task rows
+            if task_groups is not None:
+                assigned = [t for gid in rb.column(0).to_pylist() for t in task_groups[gid]]
+            else:
+                assigned = zip(*(c.to_pylist() for c in rb.columns))
+            for t in assigned:
+                yield from score_split(*t)
+
+    return base.mapInArrow(run, out_schema)
 
 
 def knn_search_parquet(
@@ -463,8 +709,6 @@ def knn_search_parquet(
     select: Sequence[str] | None = None,
     metric: str = "l2",
     score_col: str = "score",
-    batch_rows: int | None = None,
-    n_partitions: int | None = None,
     pa_filter=None,
     plan: ScanPlan | None = None,
     scale_col: str | None = None,
@@ -473,7 +717,7 @@ def knn_search_parquet(
     each Spark task opens its (file, row_group) split directly with
     pyarrow and scores it with BLAS, so the wide embedding column never
     crosses the JVM->Python socket and never materializes as Spark rows
-    — only k candidate rows per split leave the stage.
+    — only ~k candidate rows per split leave the stage.
 
     This is the engine's answer to the reference's SIMD scan loop
     (BASELINE.md: 10-48M rows/s on contiguous float arrays): Arrow's
@@ -484,10 +728,18 @@ def knn_search_parquet(
     layout, nor snappy/uncompressed moved it more than ~5%, so
     re-encoding the table buys nothing; the wins live in reading
     fewer bytes (partition pruning via the ANN path, pa_filter
-    row-group skipping). Per-split candidates are exact (float64 accumulation,
-    same direct sum((a-q)^2) form as the oracle), so the final global
-    TakeOrdered over n_splits*k rows reproduces ``knn_search`` results
-    bit-for-bit at the round(6) grain.
+    row-group skipping).
+
+    Each split runs ``topk_candidates`` per batch and keeps every row
+    whose exact float64 score — from the stored values, l2 in the same
+    direct sum((a-q)^2) form as the oracle — is no worse than the
+    split's k-th: more than k rows leave a split only on exact ties,
+    and the final global TakeOrdered (ties broken by the selected
+    columns) settles those, so the rows returned do not depend on
+    batch or row-group size. Scores are float64 results from the
+    stored values: equal to ``knn_search``'s at the round(6) grain for
+    every storage type, and bit-equal to the IVF joins' scores for the
+    same (query, row) pair.
 
     At 100 TB the same plan holds: the task table is (file, row_group)
     — thousands of independent splits, no shuffle, O(splits * k) rows
@@ -520,38 +772,22 @@ def knn_search_parquet(
     """
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {_METRICS}, got {metric!r}")
+    import numpy as np
+    import pyarrow as pa
+
     from laion_spark.session import _ship_package
 
     _ship_package(spark)  # worker closures unpickle laion_spark by module ref
     if plan is None:
         plan = build_scan_plan(path)
-    fs, files, remote, tasks, arrow_schema = (
-        plan.fs, plan.files, plan.remote, plan.tasks, plan.arrow_schema,
-    )
+    fs, remote, arrow_schema = plan.fs, plan.remote, plan.arrow_schema
+    dim = len(query_vec)
+    _check_vector_cols(arrow_schema, vector_col, scale_col, dim)
 
     # partition columns (Hive dirs) are not in the physical files — the
     # worker-side reader can only produce physical columns; reject an
     # explicit select of one.
     phys = set(arrow_schema.names)
-    if vector_col not in phys:
-        raise ValueError(f"vector column {vector_col!r} not in parquet files ({sorted(phys)})")
-    if scale_col is not None and scale_col not in phys:
-        raise ValueError(f"scale column {scale_col!r} not in parquet files ({sorted(phys)})")
-    import pyarrow as pa
-
-    vtype = arrow_schema.field(vector_col).type
-    if (
-        scale_col is None
-        and pa.types.is_fixed_size_binary(vtype)
-        and vtype.byte_width == len(query_vec)
-    ):
-        # an SQ8 table scored without its scale would silently rank raw
-        # codes — wrong results, no crash. Fail loudly instead.
-        raise ValueError(
-            f"{vector_col!r} is fixed_size_binary({vtype.byte_width}) = packed int8 "
-            f"codes for dim={len(query_vec)}; pass scale_col "
-            f"(write_int8_table stores it as '{vector_col}_scale')"
-        )
     if select is not None:
         missing = [c for c in select if c not in phys]
         if missing:
@@ -563,20 +799,6 @@ def knn_search_parquet(
         cols = list(select)
     else:
         cols = [c for c in arrow_schema.names if c != vector_col and c != scale_col]
-
-    qvec = [float(x) for x in query_vec]
-    if batch_rows is None:
-        # cache-blocked default: keep a batch's vector block (~1.5 MB)
-        # inside L2 so the decode -> norm -> GEMV passes run on hot
-        # data. Measured at 1M x 768-d f32: large batches lose to
-        # memory traffic (32768-row decode+score is ~1.7x slower
-        # single-thread), tiny ones to per-batch numpy overhead; 512
-        # rows at 768-d is the measured parallel optimum on a 32-core
-        # host (best 1.11 s vs 1.14/1.17/1.28 s for 256/1024/2048-row
-        # batches, and the tightest run-to-run spread). Floor of 256
-        # rows: below that, bookkeeping always wins.
-        batch_rows = max(256, 393_216 // max(len(query_vec), 1))
-    import pyarrow as pa
 
     #: select columns needing an Arrow-side cast before rows reach the
     #: JVM: float16 / list<float16> upcast to float32 (Spark has no half
@@ -605,168 +827,18 @@ def knn_search_parquet(
     read_cols = list(cols) + ([vector_col] if vector_col not in cols else [])
     if scale_col is not None and scale_col not in read_cols:
         read_cols.append(scale_col)
-    kk = k
+    Q = np.asarray([query_vec], dtype=np.float64)
 
-    def score_split(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq  # noqa: F811  (worker-side import)
+    def score_split(fpath, rg):
+        batches = _split_batches(fs, remote, fpath, rg, read_cols, dim, pa_filter)
+        got = _split_topk(batches, vector_col, scale_col, cols, Q, k, metric)
+        if got is None:
+            return
+        arrays, _qs, raw = got
+        arrays = [a.cast(cast_cols[c]) if c in cast_cols else a for c, a in zip(cols, arrays)]
+        yield pa.RecordBatch.from_arrays(arrays + [pa.array(raw, pa.float64())], cols + ["_raw"])
 
-        q = np.asarray(qvec, dtype=np.float64)
-        dim = len(q)
-        qq = float(q @ q)
-        for rb in batches:
-            # range-leaf dispatch: the batch holds this partition's
-            # group id(s); the (file, row_group) assignment rides the
-            # closure (small strings), so no task-table shuffle exists.
-            # task_groups=None = task-table mode (huge listings): the
-            # batch itself carries (path, row_group) rows instead
-            if task_groups is not None:
-                assigned = [
-                    t for gid in rb.column(0).to_pylist() for t in task_groups[gid]
-                ]
-            else:
-                assigned = list(zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()))
-            for fpath, rg in assigned:
-                # use_threads=False: every core is already running its
-                # own task; per-task decode threads only fight each other
-                rgs = None if rg < 0 else [rg]
-                if pa_filter is not None:
-                    import pyarrow.dataset as pads
-
-                    # pre_buffer on remote stores coalesces the column
-                    # chunk ranges into few large GETs (object-store
-                    # latency, not bandwidth, dominates small reads)
-                    fmt = pads.ParquetFileFormat(
-                        default_fragment_scan_options=pads.ParquetFragmentScanOptions(
-                            pre_buffer=remote
-                        )
-                    )
-                    frag = fmt.make_fragment(fpath, filesystem=fs, row_groups=rgs)
-                    batch_iter = frag.to_batches(
-                        columns=read_cols, filter=pa_filter, batch_size=batch_rows, use_threads=False
-                    )
-                else:
-                    pf = pq.ParquetFile(fs.open_input_file(fpath), pre_buffer=remote)
-                    batch_iter = pf.iter_batches(
-                        batch_size=batch_rows,
-                        row_groups=rgs if rgs is not None else range(pf.metadata.num_row_groups),
-                        columns=read_cols,
-                        use_threads=False,
-                    )
-                cand_s: list = []
-                cand_cols: list[list] = [[] for _ in cols]  # typed pa chunks
-                for b in batch_iter:
-                    vcol = b.column(b.schema.get_field_index(vector_col))
-                    n = len(vcol)
-                    if n == 0:
-                        continue
-                    scales = (
-                        b.column(b.schema.get_field_index(scale_col))
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.float32, copy=False)
-                        if scale_col is not None
-                        else None
-                    )
-                    top = min(kk, n)
-                    if metric == "l2":
-                        # two-stage: float32 dot-form SELECTION (SIMD-wide,
-                        # no f64 copy of the batch — ~11x the f64 direct
-                        # pass), then EXACT float64 rescore of the
-                        # candidates in the same direct sum((a-q)^2) form
-                        # as the oracle and ``knn_search``. The candidate set
-                        # provably contains the true top-k: every row
-                        # whose f32 score is within 2*eps of the f32 k-th
-                        # is kept, where eps is the standard forward-error
-                        # bound for a float32 dot product
-                        # (|fl(x.y) - x.y| <= ~n*u*sum|x_i y_i|).
-                        mat32 = flat_matrix(vcol, dim, np.float32)
-                        if scales is not None:  # SQ8 dequantize: codes * scale
-                            mat32 = _scale_rows_inplace(mat32, scales)
-                        q32 = q.astype(np.float32)
-                        nrm = np.einsum("ij,ij->i", mat32, mat32, dtype=np.float32)
-                        raw32 = nrm - 2.0 * (mat32 @ q32) + np.float32(qq)
-                        # NaN/inf elements (out-of-contract but must not
-                        # silently drop the whole batch): select as +inf
-                        # so they rank last; a NaN kth would make the
-                        # <= comparison all-False
-                        finite = np.isfinite(raw32)
-                        if not finite.all():
-                            raw32 = np.where(finite, raw32, np.float32(np.inf))
-                        kth = np.partition(raw32, top - 1)[top - 1]
-                        u32 = 6.0e-8
-                        max_nrm = float(nrm[finite].max()) if finite.any() else 0.0
-                        eps = dim * u32 * (np.sqrt(max_nrm) + np.sqrt(qq)) ** 2
-                        cand = np.flatnonzero(raw32 <= kth + 4.0 * eps)
-                        d = mat32[cand].astype(np.float64) - q
-                        raw = np.einsum("ij,ij->i", d, d)
-                        idx = pa.array(cand)
-                    elif metric == "dot":
-                        mat = flat_matrix(vcol, dim)
-                        if scales is not None:
-                            mat = _scale_rows_inplace(mat, scales)
-                        raw = mat @ q
-                        idx = pa.array(np.argpartition(-raw, top - 1)[:top])
-                        raw = raw[idx.to_numpy()]
-                    else:
-                        mat = flat_matrix(vcol, dim)
-                        if scales is not None:
-                            mat = _scale_rows_inplace(mat, scales)
-                        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * np.sqrt(qq)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            raw = np.where(norms != 0.0, (mat @ q) / norms, np.nan)
-                        idx = pa.array(np.argpartition(-raw, top - 1)[:top])
-                        raw = raw[idx.to_numpy()]
-                    cand_s.append(raw)
-                    for ci, c in enumerate(cols):
-                        cand_cols[ci].append(b.column(b.schema.get_field_index(c)).take(idx))
-                if not cand_s:
-                    continue
-                s = np.concatenate(cand_s)
-                top = min(kk, len(s))
-                key = s if metric == "l2" else -s
-                keep = pa.array(np.argpartition(key, top - 1)[:top])
-                arrays = [
-                    pa.concat_arrays([ch.combine_chunks() if isinstance(ch, pa.ChunkedArray) else ch for ch in chunks]).take(keep)
-                    for chunks in cand_cols
-                ]
-                # float16 storage columns upcast (Spark has no half
-                # type) and fixed_size_binary re-typed to plain binary
-                # before rows reach the JVM
-                arrays = [
-                    a.cast(cast_cols[c]) if c in cast_cols else a
-                    for c, a in zip(cols, arrays)
-                ]
-                arrays.append(pa.array(s[keep.to_numpy()], type=pa.float64()))
-                yield pa.RecordBatch.from_arrays(arrays, list(cols) + ["_raw"])
-
-    # Task dispatch as a shuffle-FREE range leaf: spark.range(n, ...,
-    # numPartitions=n) materializes one row per partition JVM-side, so
-    # the probe is a single stage (scan+score -> TakeOrdered reduce).
-    # The previous LocalRelation + repartition(N) form moved only tiny
-    # (path, row_group) strings but still paid a full shuffle stage
-    # boundary — pure fixed overhead on the ANN probe path (measured
-    # ~0.1-0.2 s/probe). Round-robin assignment interleaves row groups
-    # of the same file across partitions, which also spreads a skewed
-    # probed cluster over the wave. An RDD task table (sc.parallelize)
-    # would be worse still: a second Python runner per execution just
-    # to deserialize pickled rows (~0.2 s, measured r3).
-    n_parts = n_partitions or min(len(tasks), spark.sparkContext.defaultParallelism)
-    n_parts = max(1, min(n_parts, len(tasks)))
-    if len(tasks) <= _TASKS_INLINE_MAX:
-        task_groups = [tasks[i::n_parts] for i in range(n_parts)]
-        base = spark.range(0, n_parts, 1, n_parts)
-    else:
-        # huge listings (100 TB-scale table: ~10^5-10^6 splits): the
-        # full assignment no longer belongs in the task closure (it is
-        # broadcast with the task binary); ship each partition only its
-        # own (path, row_group) rows via the tiny task-table shuffle —
-        # one extra stage, amortized at this scan size
-        task_groups = None
-        base = spark.createDataFrame(tasks, "path string, row_group int")
-        if n_parts > 1:
-            base = base.repartition(n_parts)
-    partial = base.mapInArrow(score_split, out_schema)
+    partial = _run_splits(spark, plan.tasks, "path string, row_group int", score_split, out_schema)
     if metric == "cosine":
         # zero-norm vectors score NaN, and NaN sorts ABOVE every double
         # under desc — null it so desc_nulls_last ranks it last (same

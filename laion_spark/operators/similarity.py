@@ -1,15 +1,24 @@
 """Similarity search over embedding columns (north star Q25/V9).
 
-Three access paths, in increasing scale-awareness:
+Access paths, from exact to approximate:
 
-  - ``knn_search`` (operators.knn) — single-query brute force; the
-    exact baseline.
-  - ``knn_join`` — many queries x huge corpus: queries are collected
-    (they are the SMALL side by contract) and broadcast inside an
-    Arrow scorer that computes a per-batch distance matrix with BLAS
-    and emits only each query's per-batch top-k; a final window takes
-    the global top-k. Corpus never shuffles; traffic is
-    O(n_queries * k * n_partitions) candidate rows.
+  - ``knn_search`` / ``knn_search_parquet`` (operators.knn) — one
+    query, brute force; the exact baseline.
+  - ``knn_join`` — many queries x a DataFrame corpus, exact: the
+    queries (the SMALL side by contract) are collected and closed over
+    an Arrow scorer that runs the shared top-k kernel
+    (``knn.topk_candidates``: float32 GEMM selection, float64 rescore of
+    the candidates) on every corpus batch for all queries at once and
+    keeps each query's running top-k per partition, ties included; a
+    per-query window takes the global top-k. The corpus never
+    shuffles; traffic is O(n_queries * k * n_partitions) candidate rows.
+  - ``IVFIndex`` — coarse-quantizer ANN over a ``write_index`` layout
+    (one ``ivf_cluster=K`` dir per cluster): ``search_parquet`` scans
+    the nprobe nearest clusters with the scan-side scorer;
+    ``knn_join_parquet`` routes many queries to their clusters and
+    scans each probed split once for all of that cluster's queries,
+    through the same kernel, query-block driver and window as
+    ``knn_join``. Recall-tested, never claimed exact.
   - ``RandomHyperplaneIndex`` — LSH-bucketed approximate search
     (the engine's answer to the reference's Annoy table,
     images/results_ridgeback_annoy_100m.png): sign-bit signatures on R
@@ -25,12 +34,21 @@ matching partitions (partition pruning does the Annoy tree's job).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from laion_spark.functions.vector import vec_lit
-from laion_spark.operators.knn import flat_matrix, knn_search  # noqa: F401  (re-export)
+from laion_spark.operators.knn import (  # noqa: F401  (flat_matrix: re-export)
+    _arrow_to_ddl,
+    _check_vector_cols,
+    _run_splits,
+    _split_batches,
+    _split_topk,
+    flat_matrix,
+    knn_search,
+)
 
 
 def knn_join(
@@ -76,126 +94,109 @@ def knn_join(
     from laion_spark.session import _ship_package
 
     _ship_package(corpus.sparkSession)  # scorer closure imports laion_spark on workers
+    pruned = corpus.select(corpus_id, corpus_vec)
+    cid_t = corpus.schema[corpus_id].dataType.simpleString()
+
+    def score_block(q_ids, q_mat, qid_t: str) -> DataFrame:
+        # one Arrow partition = one split: a running top-k per query
+        def score(batches):
+            got = _split_topk(batches, corpus_vec, None, [corpus_id], q_mat, k, metric)
+            if got is not None:
+                yield _pairs_batch(got, q_ids)
+
+        return pruned.mapInArrow(score, f"qid {qid_t}, cid {cid_t}, _raw double")
+
+    return _join_blocks(
+        queries, query_id, query_vec, corpus_id, k, metric, max_queries, chunk_queries, score_block
+    )
+
+
+def _pairs_batch(got, q_ids):
+    """One split's join candidates (``_split_topk`` over the corpus id
+    column) as a (qid, cid, _raw) Arrow batch."""
+    import pyarrow as pa
+
+    (cid,), qs, raw = got
+    return pa.RecordBatch.from_arrays(
+        [pa.array(q_ids[qs]), cid, pa.array(raw, pa.float64())], ["qid", "cid", "_raw"]
+    )
+
+
+def _join_blocks(
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    corpus_id: str,
+    k: int,
+    metric: str,
+    max_queries: int,
+    chunk_queries: bool,
+    score_block: Callable[..., DataFrame],
+) -> DataFrame:
+    """The query-block driver of both joins (``knn_join``,
+    ``IVFIndex.knn_join_parquet``): collect the query side under the
+    ``max_queries`` cap — or stream it in blocks of ``max_queries``
+    with ``chunk_queries`` — condense each block to (ids, float64
+    matrix), plan it with ``score_block(q_ids, q_mat, qid_t)`` (a
+    (qid, cid, _raw) candidate frame), and take every query's top k
+    with one window over the union of blocks."""
+    import numpy as np
+
     qid_t = queries.schema[query_id].dataType.simpleString()
+    src = queries.select(query_id, query_vec)
+
+    def plan(rows: list) -> DataFrame:
+        # compact ndarrays: a list-of-lists of 4096 x 768 Python floats
+        # pickles to tens of MB in the task closure and would rebuild
+        # per task; the array pickles as one buffer
+        q_ids = np.asarray([r[0] for r in rows])
+        q_mat = np.asarray([r[1] for r in rows], dtype=np.float64)
+        return score_block(q_ids, q_mat, qid_t)
+
+    parts: list[DataFrame] = []
     if chunk_queries:
-        # build each block's plan as soon as its rows arrive: the plan
-        # keeps only the condensed (ids, float-matrix) closure, so raw
-        # Rows (several x the matrix bytes) never accumulate
-        parts: list[DataFrame] = []
+        # plan each block as soon as its rows arrive: the plan keeps
+        # only the condensed (ids, float-matrix) closure, so raw Rows
+        # (several x the matrix bytes) never accumulate
         buf: list = []
-        for r in queries.select(query_id, query_vec).toLocalIterator():
+        for r in src.toLocalIterator():
             buf.append(r)
             if len(buf) >= max_queries:
-                parts.append(_knn_join_block(
-                    corpus, buf, k, corpus_vec, corpus_id, query_id, qid_t, metric
-                ))
+                parts.append(plan(buf))
                 buf = []
         if buf:
-            parts.append(_knn_join_block(
-                corpus, buf, k, corpus_vec, corpus_id, query_id, qid_t, metric
-            ))
-        if not parts:
-            raise ValueError("queries DataFrame is empty")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy(query_id + "_q", "score", corpus_id + "_c")
-    q_rows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"queries side exceeds max_queries={max_queries}; knn_join collects "
-            "queries driver-side by contract — pre-aggregate or batch the query "
-            "set (chunk_queries=True), or raise max_queries deliberately"
-        )
-    if not q_rows:
-        raise ValueError("queries DataFrame is empty")
-    return _knn_join_block(
-        corpus, q_rows, k, corpus_vec, corpus_id, query_id, qid_t, metric
-    ).orderBy(query_id + "_q", "score", corpus_id + "_c")
-
-
-def _knn_join_block(
-    corpus: DataFrame,
-    q_rows: list,
-    k: int,
-    corpus_vec: str,
-    corpus_id: str,
-    query_id: str,
-    qid_t: str,
-    metric: str,
-) -> DataFrame:
-    """One ``knn_join`` query block: Arrow scorer over the corpus +
-    per-query window top-k, WITHOUT the final global order (the caller
-    orders once, over one block or a union of blocks)."""
-    q_ids = [r[0] for r in q_rows]
-    q_mat = [list(map(float, r[1])) for r in q_rows]
-    dim = len(q_mat[0])
-
-    pruned = corpus.select(corpus_id, corpus_vec)
-
-    def score(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        Q = np.asarray(q_mat, dtype=np.float64)  # (m, dim)
-        qn = np.linalg.norm(Q, axis=1)
-        m = Q.shape[0]
-        kk = k
-        for rb in batches:
-            vcol = rb.column(1)
-            n = len(vcol)
-            if n == 0:
-                continue
-            X = flat_matrix(vcol, dim)
-            if metric == "l2":
-                # (n, m) squared distances via ||x||^2 - 2XQ^T + ||q||^2
-                d2 = (
-                    np.einsum("ij,ij->i", X, X)[:, None]
-                    - 2.0 * (X @ Q.T)
-                    + np.einsum("ij,ij->i", Q, Q)[None, :]
-                )
-                np.maximum(d2, 0.0, out=d2)
-                scores = np.sqrt(d2)
-                order_best_first = True
-            else:
-                xn = np.linalg.norm(X, axis=1)
-                denom = np.outer(xn, qn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = np.where(denom > 0, (X @ Q.T) / denom, -np.inf)
-                order_best_first = False
-            top = min(kk, n)
-            ids = rb.column(0)
-            out_q, out_c, out_s = [], [], []
-            for j in range(m):
-                col = scores[:, j]
-                idx = (
-                    np.argpartition(col, top - 1)[:top]
-                    if order_best_first
-                    else np.argpartition(-col, top - 1)[:top]
-                )
-                out_q.extend([q_ids[j]] * top)
-                out_c.extend(ids.take(pa.array(idx)).to_pylist())
-                out_s.extend(col[idx].tolist())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_c), pa.array(out_s, type=pa.float64())],
-                ["qid", "cid", "score"],
+            parts.append(plan(buf))
+    else:
+        q_rows = src.limit(max_queries + 1).collect()
+        if len(q_rows) > max_queries:
+            raise ValueError(
+                f"queries side exceeds max_queries={max_queries}; knn_join collects "
+                "queries driver-side by contract — pre-aggregate or batch the query "
+                "set (chunk_queries=True), or raise max_queries deliberately"
             )
-
-    cid_t = corpus.schema[corpus_id].dataType.simpleString()
-    partial = pruned.mapInArrow(score, f"qid {qid_t}, cid {cid_t}, score double")
-    asc = metric == "l2"
-    w = W.partitionBy("qid").orderBy(
-        F.col("score").asc_nulls_last() if asc else F.col("score").desc_nulls_last(),
-        F.col("cid").asc(),
-    )
+        if q_rows:
+            parts.append(plan(q_rows))
+    if not parts:
+        raise ValueError("queries DataFrame is empty")
+    raw = F.col("_raw")
+    if metric == "l2":
+        order, score = raw.asc_nulls_last(), F.sqrt(raw)
+    else:
+        # a zero-norm row scores NaN, which Spark sorts ABOVE every
+        # double under desc: score it -inf so it ranks last
+        raw = F.nanvl(raw, F.lit(float("-inf")))
+        order, score = raw.desc_nulls_last(), raw
+    w = W.partitionBy("qid").orderBy(order, F.col("cid").asc())
     return (
-        partial.withColumn("_rn", F.row_number().over(w))
+        reduce(DataFrame.unionByName, parts)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .select(
             F.col("qid").alias(query_id + "_q"),
             F.col("cid").alias(corpus_id + "_c"),
-            F.round("score", 6).alias("score"),
+            F.round(score, 6).alias("score"),
         )
+        .orderBy(query_id + "_q", "score", corpus_id + "_c")
     )
 
 
@@ -595,7 +596,7 @@ class IVFIndex:
         out-of-band."""
         import pyarrow.parquet as pq
 
-        from laion_spark.operators.knn import _list_parquet_files
+        from laion_spark.operators.knn import _list_parquet_files, _split_tasks
 
         cache = getattr(self, "_scan_cache", None)
         if not refresh and cache is not None and cache[0] == path:
@@ -607,17 +608,9 @@ class IVFIndex:
             return int(parts[-1].split("=", 1)[1]) if parts else -1
 
         by_c: dict[int, list[tuple[str, int]]] = {}
-        if len(files) <= 4096:  # one-time cost, so a larger bound than per-probe
-            for f in files:
-                c = cluster_of(f)
-                try:
-                    n_rg = pq.ParquetFile(fs.open_input_file(f)).metadata.num_row_groups
-                    by_c.setdefault(c, []).extend((f, g) for g in range(n_rg))
-                except OSError:
-                    by_c.setdefault(c, []).append((f, -1))
-        else:
-            for f in files:
-                by_c.setdefault(cluster_of(f), []).append((f, -1))
+        # one-time cost, so a larger footer bound than a per-probe plan's
+        for f, g in _split_tasks(fs, files, 4096):
+            by_c.setdefault(cluster_of(f), []).append((f, g))
         arrow_schema = pq.ParquetFile(fs.open_input_file(files[0])).schema_arrow
         info = {"fs": fs, "remote": remote, "by_cluster": by_c, "schema": arrow_schema}
         self._scan_cache = (path, info)
@@ -758,82 +751,33 @@ class IVFIndex:
         from laion_spark.session import _ship_package
 
         _ship_package(spark)
-        if chunk_queries:
-            src = queries.select(query_id, query_vec)
-            qid_t_c = queries.schema[query_id].dataType.simpleString()
-
-            def block_plan(blk: list) -> DataFrame:
-                # r14: plan straight from the collected Rows — the old
-                # createDataFrame(blk) round-tripped every block through
-                # a LocalRelation only for the recursive call to collect
-                # it again (one extra Spark job per block, pure fixed
-                # overhead on the serving path)
-                return self._knn_join_parquet_rows(
-                    spark, path, blk, qid_t_c, k=k, query_id=query_id,
-                    corpus_id=corpus_id, vector_col=vector_col, metric=metric,
-                    nprobe=nprobe, scale_col=scale_col, _ordered=False,
-                )
-
-            # plan each block as its rows arrive so raw Rows are
-            # condensed to the routed-join closure before the next
-            # block is pulled (ADVICE r10)
-            parts: list[DataFrame] = []
-            buf: list = []
-            for r in src.toLocalIterator():
-                buf.append(r)
-                if len(buf) >= max_queries:
-                    parts.append(block_plan(buf))
-                    buf = []
-            if buf:
-                parts.append(block_plan(buf))
-            if not parts:
-                raise ValueError("queries DataFrame is empty")
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out.orderBy(query_id + "_q", "score", corpus_id + "_c")
-        q_rows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-        if len(q_rows) > max_queries:
-            raise ValueError(
-                f"queries side exceeds max_queries={max_queries}; batch the query "
-                "set (chunk_queries=True) or raise max_queries deliberately"
-            )
-        if not q_rows:
-            raise ValueError("queries DataFrame is empty")
-        return self._knn_join_parquet_rows(
-            spark, path, q_rows, queries.schema[query_id].dataType.simpleString(),
-            k=k, query_id=query_id, corpus_id=corpus_id, vector_col=vector_col,
-            metric=metric, nprobe=nprobe, scale_col=scale_col,
+        return _join_blocks(
+            queries, query_id, query_vec, corpus_id, k, metric, max_queries, chunk_queries,
+            lambda q_ids, q_mat, qid_t: self._knn_join_parquet_rows(
+                spark, path, q_ids, q_mat, qid_t, k, corpus_id, vector_col, metric,
+                nprobe, scale_col,
+            ),
         )
 
     def _knn_join_parquet_rows(
         self,
         spark,
         path: str,
-        q_rows: list,
+        q_ids,
+        q_mat,
         qid_t: str,
-        k: int = 10,
-        query_id: str = "id",
-        corpus_id: str = "id",
-        vector_col: str = "embedding",
-        metric: str = "l2",
-        nprobe: int | None = None,
-        scale_col: str | None = None,
-        _ordered: bool = True,
+        k: int,
+        corpus_id: str,
+        vector_col: str,
+        metric: str,
+        nprobe: int | None,
+        scale_col: str | None,
     ) -> DataFrame:
-        """One ``knn_join_parquet`` block over already-collected query
-        Rows — shared by the capped single-block path and each
-        ``chunk_queries`` block (which hands its ``toLocalIterator``
-        buffer here directly instead of round-tripping it through a
-        LocalRelation; ``_ordered=False`` skips the per-block global
-        sort the union's final orderBy would redo anyway)."""
+        """One ``knn_join_parquet`` query block (ids + float64 matrix):
+        route each query to its probed clusters, then scan every split
+        of those clusters once, running the top-k kernel for all of
+        the split's cluster's queries in one GEMM per batch."""
         import numpy as np
-
-        q_ids = [r[0] for r in q_rows]
-        # compact ndarray: a list-of-lists of 4096 x 768 Python floats
-        # pickles to tens of MB in the task closure and would rebuild
-        # per task; the array pickles as one buffer
-        q_mat = np.asarray([list(map(float, r[1])) for r in q_rows], dtype=np.float64)
 
         # driver-side routing: cluster -> query indices. Vectorized (r14):
         # one (queries x centroids) distance matrix via the dot identity
@@ -857,7 +801,6 @@ class IVFIndex:
         # cluster -> task lists come from the CACHED one-time listing
         # (scan_plans); missing cluster = empty, skipped
         info = self.scan_plans(path)
-        fs = info["fs"]
         tasks: list[tuple[str, int, int]] = [
             (f, g, c)
             for c in sorted(by_cluster)
@@ -867,193 +810,22 @@ class IVFIndex:
             raise FileNotFoundError(
                 f"no parquet files in probed clusters {sorted(by_cluster)} under {path}"
             )
-        arrow_schema = info["schema"]
-        import pyarrow as pa
+        schema, fs, remote, dim = info["schema"], info["fs"], info["remote"], self.dim
+        _check_vector_cols(schema, vector_col, scale_col, dim)
+        read_cols = [corpus_id, vector_col] + ([scale_col] if scale_col is not None else [])
 
-        vtype = arrow_schema.field(vector_col).type
-        if (
-            scale_col is None
-            and pa.types.is_fixed_size_binary(vtype)
-            and vtype.byte_width == self.dim
-        ):
-            # same guard as knn_search_parquet: SQ8 codes scored without
-            # their scale would silently rank raw int8 — wrong neighbors,
-            # no crash (ADVICE r9)
-            raise ValueError(
-                f"{vector_col!r} is fixed_size_binary({vtype.byte_width}) = packed "
-                f"int8 codes for dim={self.dim}; pass scale_col "
-                f"(write_int8_table stores it as '{vector_col}_scale')"
-            )
-        from laion_spark.operators.knn import _arrow_to_ddl
+        def score_split(fpath, rg, cl):
+            qidx = by_cluster[cl]
+            batches = _split_batches(fs, remote, fpath, rg, read_cols, dim)
+            got = _split_topk(batches, vector_col, scale_col, [corpus_id], q_mat[qidx], k, metric)
+            if got is not None:
+                yield _pairs_batch(got, q_ids[qidx])
 
-        cid_t = _arrow_to_ddl(arrow_schema.field(corpus_id).type)
-        dim = self.dim
-        kk = k
-        batch_rows = max(256, 196_608 // dim)  # cache-blocked, as in knn_search_parquet
-
-        def score_split(batches):
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.parquet as pq  # noqa: F811
-
-            from laion_spark.operators.knn import flat_matrix
-
-            # Two-stage scorer (r14, guide §4.2): float32 GEMM SELECTION
-            # over the whole (batch x cluster-queries) score matrix, then
-            # an exact float64 rescore of only the selected candidates in
-            # the direct sum((a-q)^2) form the exact paths use. Replaces
-            # a per-query Python loop (argpartition + Arrow take +
-            # to_pylist PER QUERY PER BATCH — ~500k interpreter
-            # iterations for a 2048-query join over 8M rows) with a few
-            # vectorized calls per batch. The candidate set provably
-            # contains each query's true per-batch top-k: every row whose
-            # f32 d^2 is within the forward-error margin of the f32 k-th
-            # is kept (same eps bound as knn_search_parquet).
-            Qfull = np.asarray(q_mat, dtype=np.float64)
-            Qfull32 = Qfull.astype(np.float32)
-            u32 = 6.0e-8
-            for rb in batches:
-                # range-leaf dispatch (see knn_search_parquet): the
-                # batch holds group id(s); tasks ride the closure.
-                # task_groups=None = task-table mode for huge listings
-                if task_groups is not None:
-                    assigned = [
-                        t for gid in rb.column(0).to_pylist() for t in task_groups[gid]
-                    ]
-                else:
-                    assigned = list(zip(
-                        rb.column(0).to_pylist(), rb.column(1).to_pylist(), rb.column(2).to_pylist()
-                    ))
-                for fpath, rg, cl in assigned:
-                    qidx = by_cluster.get(cl)
-                    if not qidx:
-                        continue
-                    Q = Qfull[qidx]  # (m_c, dim)
-                    Q32 = Qfull32[qidx]
-                    qq = np.einsum("ij,ij->i", Q, Q)
-                    qq32 = qq.astype(np.float32)
-                    qn = np.sqrt(qq)
-                    qid_arr = np.asarray([q_ids[qi] for qi in qidx])
-                    pf = pq.ParquetFile(fs.open_input_file(fpath))
-                    rgs = [rg] if rg >= 0 else range(pf.metadata.num_row_groups)
-                    out_q: list = []
-                    out_c: list = []
-                    out_s: list = []
-                    read_cols = [corpus_id, vector_col] + (
-                        [scale_col] if scale_col is not None else []
-                    )
-                    for b in pf.iter_batches(
-                        batch_size=batch_rows, row_groups=rgs,
-                        columns=read_cols, use_threads=False,
-                    ):
-                        vcol = b.column(b.schema.get_field_index(vector_col))
-                        n = len(vcol)
-                        if n == 0:
-                            continue
-                        raw32 = flat_matrix(vcol, dim, np.float32)
-                        if scale_col is not None:  # SQ8 dequantize
-                            scales = (
-                                b.column(b.schema.get_field_index(scale_col))
-                                .to_numpy(zero_copy_only=False)
-                                .astype(np.float64, copy=False)
-                            )
-                            X32 = raw32 * scales[:, None].astype(np.float32)
-                        else:
-                            scales = None
-                            X32 = raw32
-                        top = min(kk, n)
-                        nrm32 = np.einsum("ij,ij->i", X32, X32, dtype=np.float32)
-                        if metric == "l2":
-                            d2 = nrm32[:, None] - 2.0 * (X32 @ Q32.T) + qq32[None, :]
-                            finite = np.isfinite(d2)
-                            if not finite.all():
-                                d2 = np.where(finite, d2, np.float32(np.inf))
-                            kth = np.partition(d2, top - 1, axis=0)[top - 1]  # (m_c,)
-                            fin = np.isfinite(nrm32)
-                            max_nrm = float(nrm32[fin].max()) if fin.any() else 0.0
-                            eps = dim * u32 * (np.sqrt(max_nrm) + qn) ** 2
-                            rows, qs = np.nonzero(d2 <= kth[None, :] + 4.0 * eps[None, :])
-                        else:
-                            xn32 = np.sqrt(nrm32)
-                            denom = np.outer(xn32, qn.astype(np.float32))
-                            with np.errstate(divide="ignore", invalid="ignore"):
-                                sim = np.where(denom > 0, (X32 @ Q32.T) / denom, -np.inf)
-                            if np.isnan(sim).any():
-                                sim = np.where(np.isnan(sim), -np.inf, sim)
-                            kth = -np.partition(-sim, top - 1, axis=0)[top - 1]
-                            # |cos| <= 1: a constant forward-error margin
-                            # covers the normalized f32 dot
-                            rows, qs = np.nonzero(sim >= kth[None, :] - 4.0 * dim * u32)
-                        # exact float64 rescore of the candidates only
-                        if scales is not None:
-                            Xc = raw32[rows].astype(np.float64) * scales[rows, None]
-                        else:
-                            Xc = raw32[rows].astype(np.float64)
-                        Qc = Q[qs]
-                        if metric == "l2":
-                            d = Xc - Qc
-                            s = np.sqrt(np.einsum("ij,ij->i", d, d))
-                        else:
-                            # zero-norm rows score -inf (rank last under
-                            # desc), matching the selection-stage guard
-                            dnm = np.linalg.norm(Xc, axis=1) * qn[qs]
-                            with np.errstate(divide="ignore", invalid="ignore"):
-                                s = np.where(
-                                    dnm > 0,
-                                    np.einsum("ij,ij->i", Xc, Qc) / dnm,
-                                    -np.inf,
-                                )
-                        ids_np = (
-                            b.column(b.schema.get_field_index(corpus_id))
-                            .to_numpy(zero_copy_only=False)
-                        )
-                        out_q.append(qs)
-                        out_c.append(ids_np[rows])
-                        out_s.append(s)
-                    if out_q:
-                        qs_all = np.concatenate(out_q)
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(qid_arr[qs_all]),
-                                pa.array(np.concatenate(out_c)),
-                                pa.array(np.concatenate(out_s), type=pa.float64()),
-                            ],
-                            ["qid", "cid", "score"],
-                        )
-
-        # shuffle-free range leaf, one row per partition; round-robin
-        # interleaves each cluster's row groups across the wave. Huge
-        # listings fall back to the task-table shuffle so the closure
-        # stays small (see knn_search_parquet)
-        from laion_spark.operators.knn import _TASKS_INLINE_MAX
-
-        n_parts = max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
-        if len(tasks) <= _TASKS_INLINE_MAX:
-            task_groups = [tasks[i::n_parts] for i in range(n_parts)]
-            base = spark.range(0, n_parts, 1, n_parts)
-        else:
-            task_groups = None
-            base = spark.createDataFrame(tasks, "path string, row_group int, cluster int")
-            if n_parts > 1:
-                base = base.repartition(n_parts)
-        partial = base.mapInArrow(score_split, f"qid {qid_t}, cid {cid_t}, score double")
-        asc = metric == "l2"
-        w = W.partitionBy("qid").orderBy(
-            F.col("score").asc_nulls_last() if asc else F.col("score").desc_nulls_last(),
-            F.col("cid").asc(),
+        cid_t = _arrow_to_ddl(schema.field(corpus_id).type)
+        return _run_splits(
+            spark, tasks, "path string, row_group int, cluster int", score_split,
+            f"qid {qid_t}, cid {cid_t}, _raw double",
         )
-        out = (
-            partial.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(
-                F.col("qid").alias(query_id + "_q"),
-                F.col("cid").alias(corpus_id + "_c"),
-                F.round("score", 6).alias("score"),
-            )
-        )
-        if _ordered:
-            out = out.orderBy(query_id + "_q", "score", corpus_id + "_c")
-        return out
 
     # -- search ----------------------------------------------------------
 

@@ -676,3 +676,149 @@ def test_ivf_write_index_append_slices_equal_single_pass(spark, emb, tmp_path):
     idx._scan_cache = None  # separate table, fresh listing
     b = idx.search_parquet(spark, sliced, q, k=5, vector_col="embedding", select=["vec_id"]).collect()
     assert [r.vec_id for r in a] == [r.vec_id for r in b]
+
+
+def _write_tie_layouts(spark, root, row_group_size):
+    """600 x 16 list<float> rows holding 40 exact copies of one vector
+    at scattered ids, one row strictly nearer the query than the copies
+    and small-norm noise elsewhere, so the k-th place (k=5) falls inside
+    the copies under l2, cosine and dot. Written as one flat file and
+    as a 2-cluster IVF layout, both with ``row_group_size`` rows per
+    group (None = one group). Returns (flat path, IVF path, index,
+    query, copy ids)."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from laion_spark.operators.similarity import IVFIndex
+
+    rng = np.random.default_rng(7)
+    mat = (0.1 * rng.standard_normal((600, 16))).astype(np.float32)
+    v = rng.standard_normal(16)
+    v /= np.linalg.norm(v)
+    q = 1.1 * v + 0.05 * rng.standard_normal(16)
+    copies = np.sort(rng.choice(np.arange(600), 41, replace=False))
+    mat[copies[:-1]] = v.astype(np.float32)
+    mat[copies[-1]] = (v + 0.5 * (q - v)).astype(np.float32)
+    t = pa.table({
+        "id": pa.array(np.arange(600, dtype=np.int64)),
+        "embedding": pa.array(list(mat), pa.list_(pa.float32())),
+    })
+    flat = f"{root}/flat.parquet"
+    pq.write_table(t, flat, row_group_size=row_group_size)
+    df = spark.read.parquet(flat)
+    idx = IVFIndex(dim=16, n_clusters=2, n_iters=1, nprobe=2).fit(df)
+    cl = np.asarray([
+        r.ivf_cluster for r in idx.build(df).select("id", "ivf_cluster").orderBy("id").collect()
+    ])
+    for c in np.unique(cl):
+        os.makedirs(f"{root}/ivf/ivf_cluster={c}")
+        pq.write_table(t.filter(pa.array(cl == c)), f"{root}/ivf/ivf_cluster={c}/part-0.parquet",
+                       row_group_size=row_group_size)
+    return flat, f"{root}/ivf", idx, [float(x) for x in q], set(copies[:-1].tolist())
+
+
+@pytest.mark.parametrize("row_group_size", [None, 7])
+def test_rows_tied_at_kth_place_are_kept(spark, tmp_path, row_group_size):
+    """Exact duplicate vectors straddling the k-th place: every Arrow
+    scorer returns the reference's rows (ties settled by id), whatever
+    the batch or row-group layout — a per-batch or per-split cut to k
+    rows would keep an arbitrary subset of the tied copies."""
+    from laion_spark.functions.vector import vec_lit
+    from laion_spark.operators.knn import knn_search_parquet
+
+    flat, ivf, idx, q, copies = _write_tie_layouts(spark, str(tmp_path), row_group_size)
+    df = spark.read.parquet(flat)
+    queries = spark.createDataFrame([(0, q)], "id long, embedding array<double>")
+    kw = dict(k=5, vector_col="embedding")
+    for metric in ("l2", "cosine", "dot"):
+        want = [r.id for r in knn_search(
+            df, vec_lit(q), select=["id"], metric=metric, tiebreak=["id"], **kw
+        ).collect()]
+        assert len(set(want) & copies) == 4, (metric, want)
+        scan = knn_search_parquet(spark, flat, q, select=["id"], metric=metric, **kw)
+        assert [r.id for r in scan.collect()] == want, metric
+        probe = idx.search_parquet(spark, ivf, q, select=["id"], metric=metric, **kw)
+        assert [r.id for r in probe.collect()] == want, metric
+        if metric == "dot":
+            continue  # the joins serve l2 and cosine, ordered by ascending score
+        join = knn_join(df, queries, k=5, metric=metric)
+        assert sorted(r.id_c for r in join.collect()) == sorted(want), metric
+        ann = idx.knn_join_parquet(spark, ivf, queries, metric=metric, k=5)
+        assert sorted(r.id_c for r in ann.collect()) == sorted(want), metric
+
+
+def test_double_tables_score_in_float64(spark, tmp_path):
+    """list<double> values that float32 cannot hold: the scan lane and
+    the IVF join score them in float64 from the stored values (the
+    float32 pass only selects candidates)."""
+    import numpy as np
+
+    from laion_spark.operators.knn import knn_search_parquet
+    from laion_spark.operators.similarity import IVFIndex
+
+    rng = np.random.default_rng(11)
+    X = 3.0 * rng.standard_normal((400, 64))
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(400)], "id long, embedding array<double>"
+    )
+    idx = IVFIndex(dim=64, n_clusters=2, n_iters=1, nprobe=2).fit(df)
+    path = str(tmp_path / "ivf64")
+    idx.build(df).write.partitionBy("ivf_cluster").parquet(path)
+    Q = X[[3, 50, 120]] + 0.5 * rng.standard_normal((3, 64))
+
+    def ref(q):
+        d = X - q
+        return np.sqrt(np.einsum("ij,ij->i", d, d))
+
+    for q in Q:
+        d = ref(q)
+        got = knn_search_parquet(spark, path, q.tolist(), k=10, vector_col="embedding").collect()
+        assert [r.id for r in got] == np.lexsort((np.arange(400), d))[:10].tolist()
+        for r in got:
+            assert r.score == pytest.approx(d[r.id], rel=1e-12, abs=0)
+    queries = spark.createDataFrame(
+        [(j, Q[j].tolist()) for j in range(3)], "id long, embedding array<double>"
+    )
+    out = idx.knn_join_parquet(spark, path, queries, k=10).collect()
+    assert len(out) == 30
+    for r in out:  # the join's contract rounds scores to 6 places
+        assert r.score == round(float(ref(Q[r.id_q])[r.id_c]), 6)
+
+
+def test_sq8_pairs_score_the_same_on_probe_and_join(spark, tmp_path):
+    """On an SQ8 twin both IVF paths dequantize codes x scale in
+    float64, so one (query, row) pair gets one score."""
+    import numpy as np
+
+    from laion_spark.operators.similarity import IVFIndex
+    from laion_spark.sources.halfvec import write_int8_table
+
+    rng = np.random.default_rng(5)
+    X = rng.standard_normal((2000, 64)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(2000)], "vec_id long, embedding array<float>"
+    )
+    idx = IVFIndex(dim=64, n_clusters=4, n_iters=1, nprobe=2).fit(df, id_col="vec_id")
+    src, dst = str(tmp_path / "ivf_f32"), str(tmp_path / "ivf_i8")
+    idx.write_index(df, src)
+    write_int8_table(spark, src, dst, ["embedding"]).collect()
+    queries = df.filter("vec_id % 200 = 0")
+    kw = dict(k=10, vector_col="embedding", scale_col="embedding_scale")
+    joined = idx.knn_join_parquet(
+        spark, dst, queries, query_id="vec_id", corpus_id="vec_id", **kw
+    ).collect()
+    assert len(joined) == 100
+    pairs = {(r.vec_id_q, r.vec_id_c): r.score for r in joined}
+    shared = 0
+    for qr in queries.collect():
+        probe = idx.search_parquet(
+            spark, dst, [float(x) for x in qr.embedding], select=["vec_id"], **kw
+        ).select("vec_id", F.round("score", 6).alias("score"))
+        for r in probe.collect():
+            if (qr.vec_id, r.vec_id) in pairs:
+                shared += 1
+                assert r.score == pairs[(qr.vec_id, r.vec_id)], (qr.vec_id, r.vec_id)
+    assert shared >= 90
