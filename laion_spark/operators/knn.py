@@ -224,7 +224,7 @@ def flat_matrix(vcol, dim: int, dtype=None):
 _U32 = 6.0e-8
 
 
-def topk_candidates(vcol, scales, Q, k: int, metric: str):
+def topk_candidates(vcol, scales, Q, k: int, metric: str, tie=None):
     """The top-k kernel behind every scan-side and batched kNN scorer,
     over one Arrow batch: ``vcol`` holds n corpus vectors (any layout
     ``flat_matrix`` reads), ``scales`` their SQ8 factors (None for
@@ -233,7 +233,10 @@ def topk_candidates(vcol, scales, Q, k: int, metric: str):
     exact raw score (squared L2, cosine or dot) is no worse than that
     query's k-th best in the batch. Ties at the k-th place are all
     kept, so which of several equal rows survive is left to the
-    caller's final order, never to the batch layout.
+    caller's final order, never to the batch layout. ``tie`` (an Arrow
+    array, one corpus id per row) settles them here instead: each query
+    keeps exactly its first k by (score, id ascending, nulls first),
+    the order of the joins' window.
 
     Two stages. A float32 GEMM over the (n x m) score matrix SELECTS
     every row whose score is within the forward-error margin of the
@@ -244,7 +247,11 @@ def topk_candidates(vcol, scales, Q, k: int, metric: str):
     float32/float16 by upcast), l2 in the direct sum((a-q)^2) form the
     oracle folds, so every path that runs this kernel gives a (query,
     row) pair the same score. Non-finite scores (NaN elements, a
-    zero-norm row under cosine, which scores NaN) rank last.
+    zero-norm row or query under cosine, which scores NaN) rank last
+    and never tie: a query with fewer than k finite scores keeps those
+    and at most k of the rest (the first by ``tie``, else by row
+    order), so an all-zero batch yields k rows per query, not n.
+    The float64 rescore runs in chunks of ``_RESCORE_BYTES``.
     """
     import numpy as np
     import pyarrow as pa
@@ -282,66 +289,106 @@ def topk_candidates(vcol, scales, Q, k: int, metric: str):
             key = -XQ / np.outer(np.sqrt(nrm), qn.astype(np.float32))
         # |cos| <= 1: one constant bounds the normalized dot's error
         err = np.full(m, dim * _U32)
-    key[~np.isfinite(key)] = np.inf
+    finite = np.isfinite(key)
+    key[~finite] = np.inf
     top = min(k, len(X))
     kth = np.partition(key, top - 1, axis=0)[top - 1]
     # the exact k-th is <= kth + err, and a row whose exact score is
     # <= that has key <= kth + 2*err; keep 2x slack on top
-    rows, qs = np.nonzero(key <= kth + 4.0 * err)
-    Xc = flat_matrix(vcol.take(pa.array(rows)), dim)
-    if scales is not None:
-        Xc = Xc * scales[rows, None]
-    Qc = Q[qs]
-    if metric == "l2":
-        d = Xc - Qc
-        raw = np.einsum("ij,ij->i", d, d)
-    else:
-        raw = np.einsum("ij,ij->i", Xc, Qc)
-        if metric == "cosine":
-            norms = np.sqrt(np.einsum("ij,ij->i", Xc, Xc)) * qn[qs]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = np.where(norms != 0.0, raw / norms, np.nan)
-    keep = _keep_ties(qs, raw, k, metric)
+    sel = key <= kth + 4.0 * err
+    short = ~np.isfinite(kth)
+    if short.any():
+        # kth = inf would select every row: keep the finite ones and
+        # the first k non-finite ones in tiebreak order
+        rank = None if tie is None else _id_rank(tie)
+        perm = np.arange(len(X)) if rank is None else np.argsort(rank, kind="stable")
+        first = np.empty((len(X), int(short.sum())), dtype=bool)
+        first[perm] = np.cumsum(~finite[perm][:, short], axis=0) <= k
+        sel[:, short] = finite[:, short] | first
+    rows, qs = np.nonzero(sel)
+    raw = np.empty(len(rows))
+    step = max(1, _RESCORE_BYTES // (8 * dim))
+    for s in range(0, len(rows), step):
+        r, Qc = rows[s:s + step], Q[qs[s:s + step]]
+        Xc = flat_matrix(vcol.take(pa.array(r)), dim)
+        if scales is not None:
+            Xc = Xc * scales[r, None]
+        if metric == "l2":
+            d = Xc - Qc
+            raw[s:s + step] = np.einsum("ij,ij->i", d, d)
+        else:
+            dots = np.einsum("ij,ij->i", Xc, Qc)
+            if metric == "cosine":
+                norms = np.sqrt(np.einsum("ij,ij->i", Xc, Xc)) * qn[qs[s:s + step]]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    dots = np.where(norms != 0.0, dots / norms, np.nan)
+            raw[s:s + step] = dots
+    keep = _keep_ties(qs, raw, k, metric, None if tie is None else _id_rank(tie.take(pa.array(rows))))
     return rows[keep], qs[keep], raw[keep]
 
 
-def _keep_ties(qs, raw, k: int, metric: str):
-    """Indices of the (query, exact raw score) pairs that are no worse
-    than their query's k-th best; NaN ranks last."""
+#: bytes of float64 candidate vectors rescored at once: bounds the
+#: rescore's copy when many pairs sit inside the selection margin
+_RESCORE_BYTES = 32 << 20
+
+
+def _id_rank(ids):
+    """Dense ascending ranks of an Arrow id array, nulls first: the
+    order the joins' window breaks score ties in (``cid`` asc)."""
+    import pyarrow.compute as pc
+
+    return pc.rank(
+        ids, sort_keys="ascending", null_placement="at_start", tiebreaker="dense"
+    ).to_numpy()
+
+
+def _keep_ties(qs, raw, k: int, metric: str, rank=None):
+    """Indices of the (query, exact raw score) pairs to keep. Without
+    ``rank``: every pair no worse than its query's finite k-th best
+    (ties kept), and no more than k pairs in all when fewer than k
+    scores are finite — non-finite scores (NaN) rank last and never
+    tie. With ``rank`` (the pairs' tiebreak ranks): exactly each
+    query's first k by (score, rank)."""
     import numpy as np
 
     key = raw if metric == "l2" else -raw
     key = np.where(np.isnan(key), np.inf, key)
-    order = np.lexsort((key, qs))
+    order = np.lexsort((key, qs) if rank is None else (rank, key, qs))
     sq, sk = qs[order], key[order]
     starts = np.flatnonzero(np.diff(sq, prepend=-1))
     sizes = np.diff(np.append(starts, len(sq)))
-    kth = sk[starts + np.minimum(sizes, k) - 1]
-    return order[sk <= np.repeat(kth, sizes)]
+    first_k = np.arange(len(sq)) - np.repeat(starts, sizes) < k
+    if rank is not None:
+        return order[first_k]
+    kth = np.repeat(sk[starts + np.minimum(sizes, k) - 1], sizes)
+    return order[first_k | ((sk <= kth) & np.isfinite(sk))]
 
 
-def _split_topk(batches, vector_col, scale_col, cols, Q, k: int, metric: str):
+def _split_topk(batches, vector_col, scale_col, cols, Q, k: int, metric: str, tie_col=None):
     """One split's (or one Arrow partition's) share of a kNN answer:
     ``topk_candidates`` over each batch, merged into a running per-query
-    cut at the exact k-th (ties kept), so at most ~k rows per query are
-    held whatever the split's size. Returns ``(arrays, qs, raw)`` —
-    ``arrays`` the ``cols`` columns of the kept rows — or None for a
-    split with no rows."""
+    cut at the exact k-th (ties kept, or settled by ``tie_col``, one of
+    ``cols``), so at most ~k rows per query are held whatever the
+    split's size. Returns ``(arrays, qs, raw)`` — ``arrays`` the
+    ``cols`` columns of the kept rows — or None for a split with no
+    rows."""
     import numpy as np
     import pyarrow as pa
 
     kept = None
+    ti = None if tie_col is None else cols.index(tie_col)
     for b in batches:
         if b.num_rows == 0:
             continue
         scales = None if scale_col is None else b.column(scale_col).to_numpy(zero_copy_only=False)
-        rows, qs, raw = topk_candidates(b.column(vector_col), scales, Q, k, metric)
+        tie = None if tie_col is None else b.column(tie_col)
+        rows, qs, raw = topk_candidates(b.column(vector_col), scales, Q, k, metric, tie)
         idx = pa.array(rows)
         arrays = [b.column(c).take(idx) for c in cols]
         if kept is not None:
             arrays = [pa.concat_arrays([a, c]) for a, c in zip(kept[0], arrays)]
             qs, raw = np.concatenate([kept[1], qs]), np.concatenate([kept[2], raw])
-            keep = _keep_ties(qs, raw, k, metric)
+            keep = _keep_ties(qs, raw, k, metric, None if ti is None else _id_rank(arrays[ti]))
             arrays = [a.take(pa.array(keep)) for a in arrays]
             qs, raw = qs[keep], raw[keep]
         kept = (arrays, qs, raw)
@@ -733,10 +780,11 @@ def knn_search_parquet(
     Each split runs ``topk_candidates`` per batch and keeps every row
     whose exact float64 score — from the stored values, l2 in the same
     direct sum((a-q)^2) form as the oracle — is no worse than the
-    split's k-th: more than k rows leave a split only on exact ties,
-    and the final global TakeOrdered (ties broken by the selected
-    columns) settles those, so the rows returned do not depend on
-    batch or row-group size. Scores are float64 results from the
+    split's k-th: more than k rows leave a split only on exact ties
+    of finite scores (NaN ranks last and never ties), and the final
+    global TakeOrdered (ties broken by the selected columns) settles
+    those, so the rows returned do not depend on batch or row-group
+    size. Scores are float64 results from the
     stored values: equal to ``knn_search``'s at the round(6) grain for
     every storage type, and bit-equal to the IVF joins' scores for the
     same (query, row) pair.

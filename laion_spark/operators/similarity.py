@@ -9,8 +9,8 @@ Access paths, from exact to approximate:
     an Arrow scorer that runs the shared top-k kernel
     (``knn.topk_candidates``: float32 GEMM selection, float64 rescore of
     the candidates) on every corpus batch for all queries at once and
-    keeps each query's running top-k per partition, ties included; a
-    per-query window takes the global top-k. The corpus never
+    keeps each query's running top-k per partition, ties settled by
+    corpus id as the final per-query window settles them. The corpus never
     shuffles; traffic is O(n_queries * k * n_partitions) candidate rows.
   - ``IVFIndex`` — coarse-quantizer ANN over a ``write_index`` layout
     (one ``ivf_cluster=K`` dir per cluster): ``search_parquet`` scans
@@ -100,14 +100,16 @@ def knn_join(
     def score_block(q_ids, q_mat, qid_t: str) -> DataFrame:
         # one Arrow partition = one split: a running top-k per query
         def score(batches):
-            got = _split_topk(batches, corpus_vec, None, [corpus_id], q_mat, k, metric)
+            got = _split_topk(batches, corpus_vec, None, [corpus_id], q_mat, k, metric, corpus_id)
             if got is not None:
                 yield _pairs_batch(got, q_ids)
 
         return pruned.mapInArrow(score, f"qid {qid_t}, cid {cid_t}, _raw double")
 
     return _join_blocks(
-        queries, query_id, query_vec, corpus_id, k, metric, max_queries, chunk_queries, score_block
+        queries, query_id, query_vec, corpus_id, k, metric, max_queries, chunk_queries, score_block,
+        "knn_join collects queries driver-side by contract — pre-aggregate or batch the query "
+        "set (chunk_queries=True), or raise max_queries deliberately",
     )
 
 
@@ -132,6 +134,7 @@ def _join_blocks(
     max_queries: int,
     chunk_queries: bool,
     score_block: Callable[..., DataFrame],
+    over_cap: str,
 ) -> DataFrame:
     """The query-block driver of both joins (``knn_join``,
     ``IVFIndex.knn_join_parquet``): collect the query side under the
@@ -139,7 +142,8 @@ def _join_blocks(
     with ``chunk_queries`` — condense each block to (ids, float64
     matrix), plan it with ``score_block(q_ids, q_mat, qid_t)`` (a
     (qid, cid, _raw) candidate frame), and take every query's top k
-    with one window over the union of blocks."""
+    with one window over the union of blocks. ``over_cap`` is the
+    caller's advice in the error raised past ``max_queries``."""
     import numpy as np
 
     qid_t = queries.schema[query_id].dataType.simpleString()
@@ -169,11 +173,7 @@ def _join_blocks(
     else:
         q_rows = src.limit(max_queries + 1).collect()
         if len(q_rows) > max_queries:
-            raise ValueError(
-                f"queries side exceeds max_queries={max_queries}; knn_join collects "
-                "queries driver-side by contract — pre-aggregate or batch the query "
-                "set (chunk_queries=True), or raise max_queries deliberately"
-            )
+            raise ValueError(f"queries side exceeds max_queries={max_queries}; {over_cap}")
         if q_rows:
             parts.append(plan(q_rows))
     if not parts:
@@ -757,6 +757,7 @@ class IVFIndex:
                 spark, path, q_ids, q_mat, qid_t, k, corpus_id, vector_col, metric,
                 nprobe, scale_col,
             ),
+            "batch the query set (chunk_queries=True) or raise max_queries deliberately",
         )
 
     def _knn_join_parquet_rows(
@@ -817,7 +818,9 @@ class IVFIndex:
         def score_split(fpath, rg, cl):
             qidx = by_cluster[cl]
             batches = _split_batches(fs, remote, fpath, rg, read_cols, dim)
-            got = _split_topk(batches, vector_col, scale_col, [corpus_id], q_mat[qidx], k, metric)
+            got = _split_topk(
+                batches, vector_col, scale_col, [corpus_id], q_mat[qidx], k, metric, corpus_id
+            )
             if got is not None:
                 yield _pairs_batch(got, q_ids[qidx])
 

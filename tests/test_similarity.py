@@ -822,3 +822,114 @@ def test_sq8_pairs_score_the_same_on_probe_and_join(spark, tmp_path):
                 shared += 1
                 assert r.score == pairs[(qr.vec_id, r.vec_id)], (qr.vec_id, r.vec_id)
     assert shared >= 90
+
+
+def test_kernel_keeps_k_rows_of_non_finite_scores():
+    """Under cosine a zero-norm row or query scores NaN, which ranks
+    last and never ties: an all-zero batch, or a zero query, keeps k
+    rows per query (the smallest ids when the joins' id tiebreak is
+    given), never the whole batch."""
+    import numpy as np
+    import pyarrow as pa
+
+    from laion_spark.operators.knn import _split_topk, topk_candidates
+
+    rng = np.random.default_rng(3)
+    Q = rng.standard_normal((4, 8))
+    Q[2] = 0.0  # a zero query: NaN against every row
+    zeros = pa.array([[0.0] * 8] * 40, pa.list_(pa.float32()))
+    rows, qs, _ = topk_candidates(zeros, None, Q, 5, "cosine")
+    assert np.bincount(qs, minlength=4).tolist() == [5] * 4
+    mixed = rng.standard_normal((40, 8)).astype(np.float32)
+    mixed[::2] = 0.0  # 20 finite rows for the nonzero queries
+    ids = pa.array([f"r{i:02d}" for i in range(39, -1, -1)])  # descending ids
+    rows, qs, raw = topk_candidates(pa.array(list(mixed), pa.list_(pa.float32())), None, Q, 5,
+                                    "cosine", ids)
+    assert np.bincount(qs, minlength=4).tolist() == [5] * 4
+    assert np.isfinite(raw[qs != 2]).all()
+    # the zero query's k: the five smallest ids, i.e. the last five rows
+    assert sorted(rows[qs == 2].tolist()) == [35, 36, 37, 38, 39]
+    # a split of all-zero batches: k rows per query across batches
+    batches = [pa.record_batch([zeros, pa.array(range(40 * j, 40 * j + 40))], ["v", "id"])
+               for j in range(3)]
+    got = _split_topk(batches, "v", None, ["id"], Q, 5, "cosine")
+    assert np.bincount(got[1], minlength=4).tolist() == [5] * 4
+    got = _split_topk(batches, "v", None, ["id"], Q, 5, "cosine", "id")
+    assert sorted(got[0][0].to_pylist()) == sorted(list(range(5)) * 4)
+
+
+def test_join_split_cut_settles_finite_ties_by_id():
+    """Exact ties at the k-th place: the scan lane's kernel keeps them
+    all, and the joins' id tiebreak keeps exactly the k smallest ids."""
+    import numpy as np
+    import pyarrow as pa
+
+    from laion_spark.operators.knn import _split_topk
+
+    v = pa.array([[1.0, 2.0, 3.0]] * 30, pa.list_(pa.float64()))
+    Q = np.asarray([[1.0, 2.0, 2.5], [0.0, 0.0, 1.0]])
+    batches = [pa.record_batch([v, pa.array(range(90 - 30 * j, 120 - 30 * j))], ["v", "id"])
+               for j in range(3)]
+    for metric in ("l2", "cosine", "dot"):
+        got = _split_topk(batches, "v", None, ["id"], Q, 4, metric)
+        assert np.bincount(got[1]).tolist() == [90, 90], metric
+        (ids,), qs, _ = _split_topk(batches, "v", None, ["id"], Q, 4, metric, "id")
+        for j in range(2):
+            assert sorted(ids.filter(pa.array(qs == j)).to_pylist()) == [30, 31, 32, 33], metric
+
+
+def test_zero_vectors_rank_last_on_every_cosine_path(spark, tmp_path):
+    """A partition and row groups of all-zero vectors, and a zero query:
+    the scan lane, the IVF join and knn_join give the reference's rows
+    under cosine (zero rows last, ties by id) and each keeps the
+    ``max_queries`` error text of its own."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from laion_spark.functions.vector import vec_lit
+    from laion_spark.operators.knn import knn_search_parquet
+    from laion_spark.operators.similarity import IVFIndex
+
+    rng = np.random.default_rng(9)
+    mat = rng.standard_normal((200, 8)).astype(np.float32)
+    mat[:50] = 0.0
+    t = pa.table({
+        "id": pa.array(np.arange(200, dtype=np.int64)),
+        "embedding": pa.array(list(mat), pa.list_(pa.float32())),
+    })
+    flat = str(tmp_path / "flat.parquet")
+    pq.write_table(t, flat, row_group_size=25)
+    df = spark.read.parquet(flat)
+    idx = IVFIndex(dim=8, n_clusters=2, n_iters=1, nprobe=2).fit(df)
+    cl = np.asarray([
+        r.ivf_cluster for r in idx.build(df).select("id", "ivf_cluster").orderBy("id").collect()
+    ])
+    for c in np.unique(cl):
+        os.makedirs(tmp_path / f"ivf/ivf_cluster={c}")
+        pq.write_table(t.filter(pa.array(cl == c)),
+                       str(tmp_path / f"ivf/ivf_cluster={c}/part-0.parquet"), row_group_size=25)
+    ivf = str(tmp_path / "ivf")
+    qs = [rng.standard_normal(8).tolist(), [0.0] * 8]
+    queries = spark.createDataFrame([(j, q) for j, q in enumerate(qs)],
+                                    "id long, embedding array<double>")
+    corpus = df.repartitionByRange(4, "id")  # partition 0: ids 0-49, all zero
+    kw = dict(k=5, vector_col="embedding")
+    join = knn_join(corpus, queries, k=5, metric="cosine").collect()
+    ann = idx.knn_join_parquet(spark, ivf, queries, k=5, metric="cosine").collect()
+    for j, q in enumerate(qs):
+        want = [r.id for r in knn_search(
+            df, vec_lit(q), select=["id"], metric="cosine", tiebreak=["id"], **kw
+        ).collect()]
+        assert (min(want) >= 50) if j == 0 else (want == [0, 1, 2, 3, 4]), want
+        scan = knn_search_parquet(spark, flat, q, select=["id"], metric="cosine", **kw)
+        assert [r.id for r in scan.collect()] == want, j
+        assert sorted(r.id_c for r in join if r.id_q == j) == sorted(want), j
+        assert sorted(r.id_c for r in ann if r.id_q == j) == sorted(want), j
+    with pytest.raises(ValueError, match=r"^queries side exceeds max_queries=1; knn_join collects"):
+        knn_join(corpus, queries, k=5, max_queries=1)
+    with pytest.raises(ValueError,
+                       match=r"^queries side exceeds max_queries=1; batch the query set"):
+        idx.knn_join_parquet(spark, ivf, queries, k=5, max_queries=1)
