@@ -104,13 +104,6 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--vector-col", default="")
         p.add_argument("--select", default="", help="comma-separated output columns")
         p.add_argument("--html", default="", help="also write the HTML result grid here")
-        p.add_argument(
-            "--impl",
-            choices=("auto", "dataframe", "scan"),
-            default="auto",
-            help="auto = scan-side Arrow+BLAS scorer for unfiltered text search over a "
-            "parquet path, the DataFrame lane (filter, then a mapInArrow scorer) otherwise",
-        )
 
     search_p = sub.add_parser("search", help="search using text or images")
     add_common(search_p, ("--text", "--image"))
@@ -209,21 +202,10 @@ def main(argv: list[str] | None = None) -> int:
         vector_col=vector_col,
         tiebreak=[select[0]] if select else (),
     )
-    if args.impl == "scan" and args.filter:
-        raise SystemExit(
-            "--impl scan does not apply --filter (the scan lane reads files "
-            "directly); drop --filter or use --impl dataframe"
-        )
-    if args.impl == "scan" and path is None:
-        raise SystemExit(
-            "--impl scan reads parquet files directly; catalog tables go "
-            "through the DataFrame lanes — use --impl dataframe or pass a path"
-        )
-    use_scan = (args.impl == "scan" or (args.impl == "auto" and not args.filter)) and (
-        args.command == "search" and not is_image and path is not None
-    )
-    if use_scan:
-        # fast lane: scan-side Arrow+BLAS scorer straight off the parquet
+    if args.command == "search" and not is_image and not args.filter and path is not None:
+        # unfiltered text search over a parquet path: the scan lane reads
+        # the files directly; filters, images, concepts and catalog
+        # tables take the DataFrame lane (same kernel, rows from Spark)
         import time as _time
 
         from laion_spark.operators.knn import knn_search_parquet

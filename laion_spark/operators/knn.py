@@ -7,7 +7,7 @@ Reference shape (search.py:20-35):
 Plan (both scorers share it):
     ParquetScan(pruned columns, pushed filters)
       -> Filter(<filter>)            # cheap predicate BELOW scoring
-      -> score projection            # see scorer note below
+      -> score                       # see the scorers below
       -> TakeOrderedAndProject(k)    # per-partition top-k + k-row
                                      # reduce; NO global sort, NO
                                      # data-row shuffle
@@ -15,16 +15,18 @@ Plan (both scorers share it):
 
 Scorers — chosen by the query's type, with no option:
 
-  - a literal query vector (a sequence of floats) is scored by
-    ``mapInArrow``: Arrow record batches flattened zero-copy into an
-    (n x dim) numpy matrix, distances via BLAS-grade vectorized ops,
-    (ids..., score) batches returned. Partition-local, no shuffle, and
-    the plan is the same for every query vector.
+  - a literal query vector (a sequence of floats) is scored by the
+    top-k kernel (``topk_candidates``), whatever produces its Arrow
+    batches: the scan lane (``knn_search_parquet``) reads (file,
+    row_group) splits itself, ``knn_search`` runs ``_split_topk`` per
+    Spark partition in a ``mapInArrow`` after Spark's filters, and the
+    joins (similarity.py) per split. Each hands ``TakeOrdered`` its k
+    best rows (plus exact ties), not every row; no shuffle.
   - a ``Column`` query vector (concept math over columns) is scored by
     Catalyst's higher-order array functions (``zip_with``/
     ``aggregate``). They run interpreted, element-at-a-time with
     boxing, so this path is for column-valued queries and is the
-    tests' independent reference for the Arrow scorer.
+    tests' independent reference for the kernel.
 
 Why not unroll a literal query into per-element JVM expressions
 (whole-stage codegen, no Python boundary)? Every query vector is a new
@@ -32,16 +34,17 @@ literal, so every query pays a fresh expression build and Janino
 compile, and past ~2,048 dims the generated code outgrows the JVM's
 64 KB method limit and runs interpreted. Measured on a 4-core host
 (list<float> parquet, filter ``h >= 100``, a fresh query vector per
-call, warm calls). The 16,384 x 768 ``mapInArrow`` cell is from a
-``get_session`` session, whose workers no longer re-read Spark's zip
-archives per task (``laion_spark.pydaemon``; 0.8-1.15 s without it);
-the other ``mapInArrow`` cells still include that ~0.3 s per task:
+call, warm calls). The two 768-d ``mapInArrow`` cells are the range of
+per-process medians of calls 3-8, over 6 fresh ``get_session``
+processes, whose workers do not re-read Spark's zip archives per task
+(``laion_spark.pydaemon``); the 3072-d cell was taken before that
+daemon and still includes ~0.3 s per task:
 
   =============  ================  ==========  =========
   rows x dim     unrolled codegen  mapInArrow  HOF
   =============  ================  ==========  =========
-  16,384 x 768   8.9-10.7 s        0.5-0.8 s   1.1-1.3 s
-  131,072 x 768  12.4-14.5 s       1.5-1.9 s   not run
+  16,384 x 768   8.9-10.7 s        0.7-1.1 s   1.1-1.3 s
+  131,072 x 768  12.4-14.5 s       1.0-1.5 s   not run
   16,384 x 3072  62-77 s           1.5-2.9 s   not run
   =============  ================  ==========  =========
 
@@ -82,13 +85,16 @@ def knn_search(
     score_col: str = "score",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
-    """Brute-force exact top-k nearest neighbors.
+    """Brute-force exact top-k nearest neighbors over any DataFrame.
 
-    A literal ``query_vec`` is scored by the Arrow scorer, a ``Column``
-    by the Catalyst HOF path (see the module docstring). ``tiebreak``
-    columns make the result total-ordered (needed for cross-engine
-    comparison; the reference's ORDER BY score alone is ambiguous on
-    ties).
+    A literal ``query_vec`` is scored by the top-k kernel (one
+    ``_split_topk`` per Spark partition, after ``filter``), a ``Column``
+    by the Catalyst HOF path (see the module docstring). NULL vectors
+    and NaN scores rank last on both. ``tiebreak`` columns make the
+    result total-ordered (needed for cross-engine comparison; the
+    reference's ORDER BY score alone is ambiguous on ties) and settle
+    the kernel's per-partition cut, so the rows never depend on
+    partition layout or row order.
     """
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {_METRICS}, got {metric!r}")
@@ -97,15 +103,10 @@ def knn_search(
     cols = list(select) if select is not None else [c for c in df.columns if c != vector_col]
 
     if not isinstance(query_vec, Column):
-        scored = _arrow_scored(df, list(query_vec), vector_col, cols, metric)
+        scored = _arrow_scored(df, list(query_vec), vector_col, cols, metric, k, tiebreak)
     else:
-        if metric == "l2":
-            raw = l2_distance_sq(F.col(vector_col), query_vec)
-        elif metric == "cosine":
-            raw = cosine_similarity(F.col(vector_col), query_vec)
-        else:
-            raw = dot(F.col(vector_col), query_vec)
-        scored = df.select(*cols, raw.alias("_raw"))
+        raw = {"l2": l2_distance_sq, "cosine": cosine_similarity, "dot": dot}[metric]
+        scored = df.select(*cols, raw(F.col(vector_col), query_vec).alias("_raw"))
 
     return _finish_topk(scored, metric, k, score_col, tiebreak)
 
@@ -115,13 +116,18 @@ def _finish_topk(
 ) -> DataFrame:
     """Shared ordering/finishing tail for every scorer: NULL scores
     last (NULL embeddings must not displace real neighbors — Spark's
-    plain asc is NULLS FIRST), sqrt applied to the k survivors only."""
+    plain asc is NULLS FIRST), NaN scores last (nulled under desc),
+    sqrt applied to the k survivors only."""
     if metric == "l2":
         order = [F.col("_raw").asc_nulls_last()]
         finish = F.sqrt(F.col("_raw"))
     else:
         order = [F.col("_raw").desc_nulls_last()]
         finish = F.col("_raw")
+        # NaN (zero norm under the kernel's cosine, NaN elements) sorts
+        # above every double, first under desc: null it so it ranks last,
+        # as the kernel ranks it (HOF cosine is NULL there already)
+        scored = scored.withColumn("_raw", F.when(~F.isnan("_raw"), F.col("_raw")))
     order += [F.col(c).asc() for c in tiebreak]
     topk = scored.orderBy(*order).limit(k)
     return topk.withColumn(score_col, finish).drop("_raw")
@@ -234,9 +240,10 @@ def topk_candidates(vcol, scales, Q, k: int, metric: str, tie=None):
     query's k-th best in the batch. Ties at the k-th place are all
     kept, so which of several equal rows survive is left to the
     caller's final order, never to the batch layout. ``tie`` (an Arrow
-    array, one corpus id per row) settles them here instead: each query
-    keeps exactly its first k by (score, id ascending, nulls first),
-    the order of the joins' window.
+    array, or a record batch of several tiebreak columns, one entry per
+    row) settles them here instead: each query keeps exactly its first
+    k by (score, tie ascending, nulls first), the order of the joins'
+    window and of ``knn_search``'s final sort.
 
     Two stages. A float32 GEMM over the (n x m) score matrix SELECTS
     every row whose score is within the forward-error margin of the
@@ -332,14 +339,26 @@ def topk_candidates(vcol, scales, Q, k: int, metric: str, tie=None):
 _RESCORE_BYTES = 32 << 20
 
 
-def _id_rank(ids):
-    """Dense ascending ranks of an Arrow id array, nulls first: the
-    order the joins' window breaks score ties in (``cid`` asc)."""
+def _id_rank(tie):
+    """Ascending ranks of the tiebreak values (an Arrow array, or a
+    record batch or table of tiebreak columns compared left to right)
+    in Spark's ascending order: nulls first, NaN above every float. It
+    is the order the joins' window (``cid`` asc) and ``knn_search``'s
+    final sort break score ties in."""
+    import numpy as np
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    return pc.rank(
-        ids, sort_keys="ascending", null_placement="at_start", tiebreaker="dense"
-    ).to_numpy()
+    keys = []
+    for c in tie.columns if isinstance(tie, (pa.RecordBatch, pa.Table)) else [tie]:
+        if pa.types.is_floating(c.type):  # Arrow sorts NaN with the nulls
+            nan = pc.is_nan(c)
+            keys += [pc.if_else(nan, float("inf"), c), nan]
+        else:
+            keys.append(c)
+    t = pa.table({str(i): c for i, c in enumerate(keys)})
+    keys = [(n, "ascending") for n in t.column_names]
+    return np.argsort(pc.sort_indices(t, sort_keys=keys, null_placement="at_start").to_numpy())
 
 
 def _keep_ties(qs, raw, k: int, metric: str, rank=None):
@@ -364,31 +383,32 @@ def _keep_ties(qs, raw, k: int, metric: str, rank=None):
     return order[first_k | ((sk <= kth) & np.isfinite(sk))]
 
 
-def _split_topk(batches, vector_col, scale_col, cols, Q, k: int, metric: str, tie_col=None):
+def _split_topk(batches, vector_col, scale_col, cols, Q, k: int, metric: str, *tie_cols):
     """One split's (or one Arrow partition's) share of a kNN answer:
     ``topk_candidates`` over each batch, merged into a running per-query
-    cut at the exact k-th (ties kept, or settled by ``tie_col``, one of
-    ``cols``), so at most ~k rows per query are held whatever the
-    split's size. Returns ``(arrays, qs, raw)`` — ``arrays`` the
-    ``cols`` columns of the kept rows — or None for a split with no
-    rows."""
+    cut at the exact k-th (ties kept, or settled by ``tie_cols``, some
+    of ``cols``, compared left to right), so at most ~k rows per query
+    are held whatever the split's size. Returns ``(arrays, qs, raw)`` —
+    ``arrays`` the ``cols`` columns of the kept rows — or None for a
+    split with no rows."""
     import numpy as np
     import pyarrow as pa
 
     kept = None
-    ti = None if tie_col is None else cols.index(tie_col)
+    ti = [cols.index(c) for c in tie_cols]
     for b in batches:
         if b.num_rows == 0:
             continue
         scales = None if scale_col is None else b.column(scale_col).to_numpy(zero_copy_only=False)
-        tie = None if tie_col is None else b.column(tie_col)
+        tie = pa.RecordBatch.from_arrays([b.column(c) for c in tie_cols], tie_cols) if ti else None
         rows, qs, raw = topk_candidates(b.column(vector_col), scales, Q, k, metric, tie)
         idx = pa.array(rows)
         arrays = [b.column(c).take(idx) for c in cols]
         if kept is not None:
             arrays = [pa.concat_arrays([a, c]) for a, c in zip(kept[0], arrays)]
             qs, raw = np.concatenate([kept[1], qs]), np.concatenate([kept[2], raw])
-            keep = _keep_ties(qs, raw, k, metric, None if ti is None else _id_rank(arrays[ti]))
+            rank = _id_rank(pa.RecordBatch.from_arrays([arrays[i] for i in ti], tie_cols)) if ti else None
+            keep = _keep_ties(qs, raw, k, metric, rank)
             arrays = [a.take(pa.array(keep)) for a in arrays]
             qs, raw = qs[keep], raw[keep]
         kept = (arrays, qs, raw)
@@ -399,73 +419,61 @@ def _arrow_scored(
     df: DataFrame,
     qvec: list[float],
     vector_col: str,
-    cols: Sequence[str],
+    cols: list[str],
     metric: str,
+    k: int,
+    tiebreak: Sequence[str],
 ) -> DataFrame:
-    """Project (cols..., _raw) where _raw is the raw ordering score
-    (squared L2 / cosine / dot) computed batch-wise in numpy.
-
-    Partition-local, zero shuffle; Arrow list<float> values are
-    flattened zero-copy into an (n, dim) matrix per batch.
-    """
+    """Project (cols..., _raw) for each partition's k best rows:
+    ``_split_topk`` over its Arrow batches, the cut settled by
+    ``tiebreak``. Rows with a NULL vector skip the kernel and get a NULL
+    ``_raw`` (ranked last, the HOF contract, not ``flat_matrix``'s
+    error); they tie, so each partition keeps only its first k of them
+    by ``tiebreak``."""
+    import numpy as np
     import pyarrow as pa
+    from pyspark.sql.types import AtomicType
 
     from laion_spark.session import _ship_package
 
     _ship_package(df.sparkSession)
 
     pruned = df.select(*cols, *([] if vector_col in cols else [vector_col]))
-    out_fields = [pruned.schema[c] for c in cols]
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields) + ", _raw double"
-        if out_fields
-        else "_raw double"
-    )
-    dim = len(qvec)
+    schema = pruned.schema
+    out_schema = ", ".join([f"`{c}` {schema[c].dataType.simpleString()}" for c in cols] + ["_raw double"])
+    Q = np.asarray([qvec], dtype=np.float64)
+    # Arrow cannot sort nested values (arrays, structs, maps): a
+    # tiebreak on one leaves the kernel's cut to row order
+    ties = list(tiebreak)
+    if not all(c in cols and isinstance(schema[c].dataType, AtomicType) for c in ties):
+        ties = []
+
+    def first_k(t):
+        if t.num_rows <= k or not ties:
+            return t.slice(0, k)
+        return t.take(pa.array(np.argsort(_id_rank(t.select(ties)))[:k]))
 
     def score(batches):
-        import numpy as np
-        import pyarrow.compute as pc
+        nulls = None
 
-        q = np.asarray(qvec, dtype=np.float64)
-        qq = float(q @ q)
-        for rb in batches:
-            vcol = rb.column(rb.schema.get_field_index(vector_col))
-            if vcol.null_count:
-                # NULL embeddings score NULL (ranked last by the shared
-                # finishing tail) — same contract as the HOF path,
-                # instead of flat_matrix's hard error
-                mask = vcol.is_valid()
-                null_rb = rb.filter(pc.invert(mask))
-                if len(null_rb):
-                    arrays = [null_rb.column(null_rb.schema.get_field_index(c)) for c in cols]
-                    arrays.append(pa.nulls(len(null_rb), pa.float64()))
-                    yield pa.RecordBatch.from_arrays(arrays, list(cols) + ["_raw"])
-                rb = rb.filter(mask)
-                vcol = rb.column(rb.schema.get_field_index(vector_col))
-            n = len(vcol)
-            if n == 0:
-                continue
-            mat = flat_matrix(vcol, dim)
-            if metric == "l2":
-                # direct sum((a-q)^2): no cancellation (the expanded
-                # ||a||^2-2aq+||q||^2 form drifts from the oracle's fold)
-                d = mat - q
-                raw = np.einsum("ij,ij->i", d, d)
-            elif metric == "dot":
-                raw = mat @ q
-            else:  # cosine
-                norms = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * np.sqrt(qq)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    raw = np.where(norms != 0.0, (mat @ q) / norms, np.nan)
-            arrays = [rb.column(rb.schema.get_field_index(c)) for c in cols]
-            arrays.append(pa.array(raw, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, list(cols) + ["_raw"])
+        def valid(batches):
+            nonlocal nulls
+            for b in batches:
+                vcol = b.column(vector_col)
+                if vcol.null_count:
+                    got = pa.Table.from_batches([b.filter(vcol.is_null())])
+                    nulls = first_k(got if nulls is None else pa.concat_tables([nulls, got]))
+                    b = b.filter(vcol.is_valid())
+                yield b
 
-    scored = pruned.mapInArrow(score, out_schema)
-    if metric == "cosine":
-        scored = scored.withColumn("_raw", F.when(~F.isnan("_raw"), F.col("_raw")))
-    return scored
+        got = _split_topk(valid(batches), vector_col, None, cols, Q, k, metric, *ties)
+        if got is not None:
+            yield pa.RecordBatch.from_arrays(got[0] + [pa.array(got[2], pa.float64())], cols + ["_raw"])
+        if nulls is not None:
+            arrays = [nulls.column(c).combine_chunks() for c in cols]
+            yield pa.RecordBatch.from_arrays(arrays + [pa.nulls(nulls.num_rows, pa.float64())], cols + ["_raw"])
+
+    return pruned.mapInArrow(score, out_schema)
 
 
 def _fs_from_uri(uri: str):
@@ -887,11 +895,6 @@ def knn_search_parquet(
         yield pa.RecordBatch.from_arrays(arrays + [pa.array(raw, pa.float64())], cols + ["_raw"])
 
     partial = _run_splits(spark, plan.tasks, "path string, row_group int", score_split, out_schema)
-    if metric == "cosine":
-        # zero-norm vectors score NaN, and NaN sorts ABOVE every double
-        # under desc — null it so desc_nulls_last ranks it last (same
-        # guard as _arrow_scored)
-        partial = partial.withColumn("_raw", F.when(~F.isnan("_raw"), F.col("_raw")))
     return _finish_topk(partial, metric, k, score_col, tiebreak=cols)
 
 

@@ -213,7 +213,8 @@ def etl_shards_to_parquet(
     alone (~1.9 s assemble vs ~9 s assemble+write, codec-independent);
     this path removes that conversion. Output is one file per shard —
     file-granular parallelism, no shuffle, same layout the reference
-    emits. Returns (path, rows) per shard; local/NFS-style paths (the
+    emits; each file appears under its final name only once complete.
+    Returns (path, rows) per shard; local/NFS-style paths (the
     fixture/bench shape) — route remote stores through pyarrow.fs like
     the scan side if needed."""
     import os as _os
@@ -229,23 +230,34 @@ def etl_shards_to_parquet(
     comp = compression
 
     def run(batches):
+        import uuid
+
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         for rb in batches:
             for job in rb.to_pandas().itertuples(index=False):
                 dst = _os.path.join(out_dir, f"part-{int(job.shard_id):05d}.parquet")
+                # written under a hidden name (readers skip `_` files) and
+                # renamed once closed: a shard that fails mid-write leaves
+                # no readable partial file
+                tmp = _os.path.join(out_dir, f"_{uuid.uuid4().hex}-{_os.path.basename(dst)}")
                 writer = None
                 rows = 0
                 try:
                     for b in _process_shard_batches(job, dim):
                         if writer is None:
-                            writer = pq.ParquetWriter(dst, b.schema, compression=comp)
+                            writer = pq.ParquetWriter(tmp, b.schema, compression=comp)
                         writer.write_batch(b)
                         rows += b.num_rows
-                finally:
+                except BaseException:
                     if writer is not None:
                         writer.close()
+                        _os.remove(tmp)
+                    raise
+                if writer is not None:
+                    writer.close()
+                    _os.replace(tmp, dst)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([dst]), pa.array([rows], type=pa.int64())],
                     ["path", "rows"],

@@ -31,28 +31,28 @@ def test_cli_search_text(spark, capsys, tmp_path):
     assert "query_time" in content and "score" in content
 
 
-def test_cli_scan_and_dataframe_impls_agree(spark, capsys):
-    """--impl auto routes unfiltered text search to the scan scorer;
-    results must equal the DataFrame lane."""
-    args = [
-        "search", "--text", "same query", "--table", "embeddings",
+def test_cli_scan_and_dataframe_impls_agree(spark, capsys, monkeypatch):
+    """Unfiltered text search over a parquet path takes the scan lane;
+    its rows must equal ``search_text`` (the DataFrame lane) on the same
+    table with the same select and tiebreak."""
+    from laion_spark.cli import _get_encoder
+    from laion_spark.operators import knn
+    from laion_spark.operators.search import search_text
+
+    scans = []
+    scan = knn.knn_search_parquet
+    monkeypatch.setattr(knn, "knn_search_parquet", lambda *a, **kw: scans.append(a) or scan(*a, **kw))
+    out = run(
+        capsys, "search", "--text", "same query", "--table", "embeddings",
         "--data-dir", SF_DIR, "--limit", "4", "--select", "vec_id",
-    ]
-    scan_out = run(capsys, *args, "--impl", "scan")
-    df_out = run(capsys, *args, "--impl", "dataframe")
-    assert scan_out[1:5] == df_out[1:5]
-
-
-def test_cli_scan_with_filter_is_rejected(spark, capsys):
-    """--impl scan silently ignoring --filter would return wrong rows;
-    it must exit with a clear error instead."""
-    import pytest
-
-    with pytest.raises(SystemExit, match="filter"):
-        main([
-            "search", "--text", "x", "--table", "embeddings", "--data-dir", SF_DIR,
-            "--filter", "label = 3", "--impl", "scan",
-        ])
+    )
+    assert len(scans) == 1
+    df = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    enc = _get_encoder("hash", len(df.first().embedding))
+    want = search_text(
+        df, "same query", enc, k=4, select=["vec_id"], vector_col="embedding", tiebreak=["vec_id"]
+    ).to_dicts()
+    assert [ln.split() for ln in out[1:5]] == [[str(d["vec_id"]), str(d["score"])] for d in want]
 
 
 def test_cli_search_with_filter(spark, capsys):

@@ -106,3 +106,31 @@ def test_etl_direct_sink_matches_generic_sink(spark, fixtures, tmp_path):
     ea = {r.key: sorted((r.exif or {}).items()) for r in direct.select("key", "exif").collect()}
     eb = {r.key: sorted((r.exif or {}).items()) for r in generic.select("key", "exif").collect()}
     assert ea == eb
+
+
+def test_etl_direct_sink_leaves_no_partial_shard(spark, fixtures, tmp_path):
+    """A shard that fails after its first 65,536-row batch was written
+    (its text_emb .npy is 50 rows short) must leave no readable part
+    file, and no temp file, behind: the failed job's output is empty."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from laion_spark.sources.npy import BATCH_ROWS, etl_shards_to_parquet
+
+    n = BATCH_ROWS + 100
+    src = tmp_path / "etl_short"
+    for d in ("metadata", "img_emb", "text_emb"):
+        os.makedirs(src / d)
+    meta = pq.read_table(f"{fixtures}/etl_input/metadata/metadata_0.parquet")
+    pq.write_table(pa.concat_tables([meta] * (n // meta.num_rows + 1)).slice(0, n),
+                   str(src / "metadata" / "metadata_0.parquet"))
+    rng = np.random.default_rng(3)
+    np.save(src / "img_emb" / "img_emb_0.npy", rng.standard_normal((n, 8)).astype(np.float32))
+    np.save(src / "text_emb" / "text_emb_0.npy", rng.standard_normal((n - 50, 8)).astype(np.float32))
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="misaligned"):
+        etl_shards_to_parquet(spark, str(src), str(out), dim=8).collect()
+    assert os.listdir(out) == []

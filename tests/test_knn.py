@@ -202,6 +202,34 @@ def test_knn_arrow_impl_null_embedding_scores_null(spark, emb):
     assert [(r.vec_id, round(r.score, 6)) for r in out] == [(r.vec_id, round(r.score, 6)) for r in ref]
 
 
+def test_knn_literal_fillers_follow_tiebreak(spark):
+    """Fewer than k finite scores: the NULL-vector and NaN-scored rows
+    that fill the answer are the reference's (first by ``tiebreak``),
+    though they reach the kernel in the reverse order over 7-row Arrow
+    batches — a cut to the first k in row order would keep the largest
+    ids."""
+    rows = [(i, [i + 1.0, 1.0] if i < 2 else None if i % 2 == 0 else [float("nan"), 1.0])
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, embedding array<float>")
+    rev = df.sort(F.desc("id")).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        for metric in ("l2", "cosine", "dot"):
+            kw = dict(k=5, vector_col="embedding", select=["id"], metric=metric, tiebreak=["id"])
+            got, want = (
+                [(r.id, None if r.score is None or r.score != r.score else round(r.score, 6))
+                 for r in out.collect()]
+                for out in (knn_search(rev, [1.0, 1.0], **kw), knn_search(df, vec_lit([1.0, 1.0]), **kw))
+            )
+            assert got == want, metric
+            # l2 ranks NaN (odd ids) above NULL; cosine and dot tie them
+            assert [i for i, _ in got][2:] == ([3, 5, 7] if metric == "l2" else [2, 3, 4]), metric
+    finally:
+        spark.conf.set(key, was)
+
+
 def test_knn_high_dim_literal_matches_hof(spark, tmp_path):
     """At dim 3072 (past the JVM's 64 KB generated-method limit for an
     unrolled per-element score) a literal query still goes through the

@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -720,12 +722,25 @@ def _write_tie_layouts(spark, root, row_group_size):
     return flat, f"{root}/ivf", idx, [float(x) for x in q], set(copies[:-1].tolist())
 
 
+@contextmanager
+def _arrow_batch_rows(spark, n):
+    """Spark hands ``mapInArrow`` batches of ``n`` rows inside the block."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    was = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, was)
+
+
 @pytest.mark.parametrize("row_group_size", [None, 7])
 def test_rows_tied_at_kth_place_are_kept(spark, tmp_path, row_group_size):
     """Exact duplicate vectors straddling the k-th place: every Arrow
-    scorer returns the reference's rows (ties settled by id), whatever
-    the batch or row-group layout — a per-batch or per-split cut to k
-    rows would keep an arbitrary subset of the tied copies."""
+    scorer (the DataFrame lane with a literal query among them) returns
+    the reference's rows (ties settled by id), whatever the batch or
+    row-group layout — a per-batch or per-split cut to k rows would
+    keep an arbitrary subset of the tied copies."""
     from laion_spark.functions.vector import vec_lit
     from laion_spark.operators.knn import knn_search_parquet
 
@@ -734,10 +749,15 @@ def test_rows_tied_at_kth_place_are_kept(spark, tmp_path, row_group_size):
     queries = spark.createDataFrame([(0, q)], "id long, embedding array<double>")
     kw = dict(k=5, vector_col="embedding")
     for metric in ("l2", "cosine", "dot"):
-        want = [r.id for r in knn_search(
-            df, vec_lit(q), select=["id"], metric=metric, tiebreak=["id"], **kw
-        ).collect()]
+        ref = knn_search(df, vec_lit(q), select=["id"], metric=metric, tiebreak=["id"], **kw).collect()
+        want = [r.id for r in ref]
         assert len(set(want) & copies) == 4, (metric, want)
+        with _arrow_batch_rows(spark, 7):  # copies straddle the lane's Arrow batches,
+            rows = df.sort(F.desc("id"))  # in the reverse of the tiebreak's order
+            lane = knn_search(rows, q, select=["id"], metric=metric, tiebreak=["id"], **kw).collect()
+        assert [(r.id, round(r.score, 6)) for r in lane] == [
+            (r.id, round(r.score, 6)) for r in ref
+        ], metric
         scan = knn_search_parquet(spark, flat, q, select=["id"], metric=metric, **kw)
         assert [r.id for r in scan.collect()] == want, metric
         probe = idx.search_parquet(spark, ivf, q, select=["id"], metric=metric, **kw)
@@ -880,9 +900,9 @@ def test_join_split_cut_settles_finite_ties_by_id():
 
 def test_zero_vectors_rank_last_on_every_cosine_path(spark, tmp_path):
     """A partition and row groups of all-zero vectors, and a zero query:
-    the scan lane, the IVF join and knn_join give the reference's rows
-    under cosine (zero rows last, ties by id) and each keeps the
-    ``max_queries`` error text of its own."""
+    the DataFrame and scan lanes, the IVF join and knn_join give the
+    reference's rows under cosine (zero rows last, ties by id) and each
+    join keeps the ``max_queries`` error text of its own."""
     import os
 
     import numpy as np
@@ -916,6 +936,8 @@ def test_zero_vectors_rank_last_on_every_cosine_path(spark, tmp_path):
     queries = spark.createDataFrame([(j, q) for j, q in enumerate(qs)],
                                     "id long, embedding array<double>")
     corpus = df.repartitionByRange(4, "id")  # partition 0: ids 0-49, all zero
+    # partition 3: ids 49-0, all zero, rows in the reverse of the tiebreak's order
+    rev = df.repartitionByRange(4, F.desc("id")).sortWithinPartitions(F.desc("id"))
     kw = dict(k=5, vector_col="embedding")
     join = knn_join(corpus, queries, k=5, metric="cosine").collect()
     ann = idx.knn_join_parquet(spark, ivf, queries, k=5, metric="cosine").collect()
@@ -924,6 +946,9 @@ def test_zero_vectors_rank_last_on_every_cosine_path(spark, tmp_path):
             df, vec_lit(q), select=["id"], metric="cosine", tiebreak=["id"], **kw
         ).collect()]
         assert (min(want) >= 50) if j == 0 else (want == [0, 1, 2, 3, 4]), want
+        with _arrow_batch_rows(spark, 7):  # 50 zero rows over 8 batches
+            lane = knn_search(rev, q, select=["id"], metric="cosine", tiebreak=["id"], **kw)
+            assert [r.id for r in lane.collect()] == want, j
         scan = knn_search_parquet(spark, flat, q, select=["id"], metric="cosine", **kw)
         assert [r.id for r in scan.collect()] == want, j
         assert sorted(r.id_c for r in join if r.id_q == j) == sorted(want), j
