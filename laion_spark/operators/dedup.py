@@ -16,17 +16,19 @@ Five strategies, all shuffle-conscious:
                            count intersections. This is the *verify*
                            stage used after LSH candidate generation.
   - ``minhash_signatures`` / ``minhash_lsh_pairs`` — MinHash + banded
-                           LSH: candidate pairs meet in band buckets
-                           (equi-join on (band, hash)), so the self-join
-                           never goes quadratic; candidates are then
-                           verified with exact Jaccard.
+                           LSH: the signature mapInArrow hashes each
+                           band itself, candidate pairs meet in
+                           (band, bucket) groups of two or more docs,
+                           so nothing goes quadratic; candidates are
+                           then verified with exact Jaccard.
   - ``simhash`` — 64-bit SimHash fingerprint; near-dups differ in few
                            bits (hamming-distance filter on candidates
                            from identical high-order bands).
 
 Scale notes: the quadratic step only ever runs on LSH bucket
-collisions. Band hashing uses Spark's murmur3 ``hash`` (JVM-side,
-codegen). Shingling/minhashing is pure HOF expressions — no UDF.
+collisions. Shingle hashing is JVM HOF expressions; the MinHash
+min-reduction and the band hashes run in numpy inside one
+``mapInArrow``.
 """
 
 from __future__ import annotations
@@ -397,13 +399,14 @@ def minhash_signatures(
     """MinHash signature column: for each of ``num_hashes`` universal
     hash functions h_i, the min over the document's shingle set.
 
-    All JVM-side: hashed shingle -> (a_i*x + b_i) mod p -> running min.
-    At 100 TB this is one scan, no shuffle; the signature (64 longs)
-    replaces the full shingle set downstream.
+    Hashed shingle (JVM) -> (a_i*x + b_i) mod p -> running min (numpy,
+    one ``mapInArrow``; see ``_minhash_stage``). At 100 TB this is one
+    scan, no shuffle; the signature (64 longs) replaces the full
+    shingle set downstream.
 
     r15 cost structure (guide §1.2 "per-task work", §4.2): HOF lambdas
-    run in the INTERPRETED evaluator, so this operator's cost is
-    (elements x per-element ops). Three cuts, none changing a unigram
+    run in the INTERPRETED evaluator, so the JVM side's cost is
+    (elements x per-element ops). Two cuts, none changing a unigram
     signature bit:
 
     - the base array is ``hashed_shingles`` with the pmod fused into
@@ -411,11 +414,7 @@ def minhash_signatures(
       pmod pass ((pmod(h,M)*a+b) % M == ((h mod M)*a+b) % M);
     - duplicates are kept (``distinct=False`` for n >= 2): a min over
       the multiset equals the min over the set, and the distinct pass
-      was pure overhead;
-    - each hash function is ONE ``aggregate`` traversal with a
-      running ``least`` — the old transform+array_min allocated an
-      intermediate array per hash function per row (num_hashes x rows
-      allocations) and traversed twice.
+      was pure overhead.
 
     For ``ngram == 1`` (the d04 catalog entry) the signature values
     are bit-identical to every prior round; for n >= 2 the hash basis
@@ -423,7 +422,32 @@ def minhash_signatures(
     uniform family — consumers are the bench's LSH rows, whose output
     pairs are verified by exact Jaccard either way.
     """
+    return _minhash_stage(df, id_col, text_col, num_hashes, ngram, seed)
+
+
+def _minhash_stage(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    ngram: int,
+    seed: int,
+    bands: int | None = None,
+) -> DataFrame:
+    """The MinHash ``mapInArrow``. Without ``bands``: (id, signature
+    array<bigint>), one row per input row. With ``bands``: the LSH band
+    stream (id, band int, bucket bigint), ``bands`` rows per document
+    whose shingle set is non-empty — ``bucket`` a splitmix64 chain over
+    the band's ``num_hashes // bands`` signature values, computed on
+    the signature matrix the UDF already holds, so no signature array
+    leaves the worker. Two documents share a bucket iff their band
+    slices are equal, up to a 2^-64 collision. Documents with an empty
+    or NULL shingle set emit no band rows: MinHash is undefined there.
+    Ids of any type pass through unchanged (``take``)."""
     import random
+
+    if bands is not None and num_hashes % bands != 0:
+        raise ValueError("num_hashes must be divisible by bands")
 
     rng = random.Random(seed)
     coeffs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
@@ -464,56 +488,79 @@ def minhash_signatures(
 
         A = np.asarray(a_arr, dtype=np.int64)
         B = np.asarray(b_arr, dtype=np.int64)
+
+        def mix(z):
+            # splitmix64 finalizer: a bijection on uint64 (wrapping)
+            z = z + np.uint64(0x9E3779B97F4A7C15)
+            z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+            z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+            return z ^ (z >> np.uint64(31))
+
         for batch in batches:
             ids = batch.column(0)
             col = batch.column(1)
             n = len(col)
             if n == 0:
                 continue
+            offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            vals = col.values.to_numpy(zero_copy_only=False).astype(np.int64)
+            starts, ends = offs[:-1], offs[1:]
+            valid = ends > starts
             if col.null_count:
-                # rare path (NULL text reaching a standalone caller):
-                # row-wise, preserving the NULL-element signature shape
-                rows = col.to_pylist()
-                out = pa.array(
-                    [
-                        [int(((np.asarray(r, np.int64) * A[j] + B[j]) % mprime).min())
-                         for j in range(n_funcs)]
-                        if r else [None] * n_funcs
-                        for r in rows
-                    ],
-                    type=pa.list_(pa.int64()),
-                )
+                valid &= col.is_valid().to_numpy(zero_copy_only=False)
+            sigs = np.empty((n, n_funcs), dtype=np.int64)
+            if len(vals):
+                # reduceat segment-min per hash function; an empty or
+                # NULL row yields a garbage element that the validity
+                # mask drops
+                idx = np.minimum(starts, len(vals) - 1)
+                for j in range(n_funcs):
+                    hv = (vals * A[j] + B[j]) % mprime
+                    sigs[:, j] = np.minimum.reduceat(hv, idx)
             else:
-                offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                vals = col.values.to_numpy(zero_copy_only=False).astype(np.int64)
-                starts, ends = offs[:-1], offs[1:]
-                valid = ends > starts
-                sigs = np.empty((n, n_funcs), dtype=np.int64)
-                if len(vals):
-                    # reduceat segment-min per hash function; an empty
-                    # segment yields a garbage identity element that the
-                    # validity mask below nulls out
-                    idx = np.minimum(starts, len(vals) - 1)
-                    for j in range(n_funcs):
-                        hv = (vals * A[j] + B[j]) % mprime
-                        sigs[:, j] = np.minimum.reduceat(hv, idx)
-                else:
-                    valid[:] = False
-                data = pa.array(
-                    sigs.ravel(),
-                    type=pa.int64(),
-                    mask=np.repeat(~valid, n_funcs),
-                )
-                out = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(0, (n + 1) * n_funcs, n_funcs, dtype=np.int32),
-                        type=pa.int32(),
-                    ),
-                    data,
-                )
-            yield pa.RecordBatch.from_arrays([ids, out], ["id", "signature"])
+                valid[:] = False
+            if bands is None:
+                data = pa.array(sigs.ravel(), type=pa.int64(), mask=np.repeat(~valid, n_funcs))
+                offsets = pa.array(np.arange(0, (n + 1) * n_funcs, n_funcs, dtype=np.int32), type=pa.int32())
+                out = pa.ListArray.from_arrays(offsets, data)
+                yield pa.RecordBatch.from_arrays([ids, out], ["id", "signature"])
+                continue
+            keep = np.flatnonzero(valid)
+            if not len(keep):
+                continue
+            sl = sigs[keep].view(np.uint64).reshape(len(keep), bands, n_funcs // bands)
+            bucket = np.zeros((len(keep), bands), dtype=np.uint64)
+            for j in range(sl.shape[2]):
+                bucket = mix(bucket ^ sl[:, :, j])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(np.repeat(keep, bands))),
+                    pa.array(np.tile(np.arange(bands, dtype=np.int32), len(keep))),
+                    pa.array(bucket.view(np.int64).ravel()),
+                ],
+                ["id", "band", "bucket"],
+            )
 
-    return narrow.mapInArrow(_sig_batches, f"id {id_type}, signature array<bigint>")
+    out = "signature array<bigint>" if bands is None else "band int, bucket bigint"
+    return narrow.mapInArrow(_sig_batches, f"id {id_type}, {out}")
+
+
+def _bucket_ids(stream: DataFrame, keys: Sequence[str], id_col: str) -> DataFrame:
+    """(keys..., ids): the sorted id set of every bucket holding at
+    least two rows. A per-bucket row count (a window over ``keys``)
+    drops singleton buckets BEFORE ``collect_set``: most LSH buckets
+    and shingle windows hold one document, and a map-side partial
+    ``collect_set`` over them reduced nothing (192,000 rows -> 182,018
+    groups at perfbench's dedup size) while paying a sort fallback.
+    The window's exchange is the one the aggregate needs, so the
+    stream is still shuffled once. A dropped bucket's id set has fewer
+    than two ids, which ``_expand_bucket_pairs`` would skip anyway."""
+    return (
+        stream.withColumn("_n", F.count("*").over(W.partitionBy(*keys)))
+        .filter(F.col("_n") >= 2)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
+    )
 
 
 def _expand_bucket_pairs(grouped: DataFrame) -> DataFrame:
@@ -553,62 +600,38 @@ def minhash_lsh_pairs(
     Jaccard >= threshold.
 
     Plan shape (the 100 TB path):
-      signatures (scan, no shuffle)
-      -> explode bands -> hash(band slice) -> shuffle on (band, hash)
+      signatures + band hashes (scan, one mapInArrow, no shuffle)
+      -> shuffle on (band, bucket), count rows per bucket (window),
+         drop singleton buckets
       -> group by (band, bucket), expand id pairs => candidate pairs
          (only colliding docs meet)
       -> dedup candidates -> exact-Jaccard verify on the candidates only
     """
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
     # Documents with NO shingles (< ngram tokens, empty/NULL text) have
-    # all-NULL signatures; every band hash degenerates to xxhash64("")
-    # so ALL such docs would collide into one bucket per band — a k^2
-    # candidate blowup whose verify then computes 0/0 = NaN, and NaN
-    # compares ABOVE the threshold under Spark's NaN-largest semantics,
-    # ranking garbage pairs first. MinHash is undefined on the empty
-    # set: exclude those docs BEFORE the signature stage, on a cheap
-    # token-count predicate. (Filtering the computed signature column
-    # instead re-inlines the whole minhash expression into the pushed
-    # predicate and destroys the _mh_base compute-once boundary —
-    # measured 5x slower end-to-end.)
+    # no MinHash: MinHash is undefined on the empty set, and letting
+    # them through would make every such pair a verify candidate whose
+    # 0/0 = NaN Jaccard compares ABOVE the threshold under Spark's
+    # NaN-largest semantics. Exclude them BEFORE the signature stage,
+    # on a cheap token-count predicate — the verify side reuses this
+    # filtered frame. (Filtering a computed signature column instead
+    # re-inlines the whole minhash expression into the pushed predicate
+    # and destroys the _mh_base compute-once boundary — measured 5x
+    # slower end-to-end.)
     df = df.filter(F.size(tokens(text_col)) >= ngram)
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, ngram, seed)
-    # Band hashes as UNROLLED per-band expressions, NOT a transform over
-    # sequence(0, bands-1): inside a higher-order function `signature`
-    # appears once textually, so CollapseProject inlines the whole
-    # minhash array computation into the lambda body — which the HOF
-    # then re-evaluates once PER BAND (measured: 8x recompute, 17 s of
-    # the 1M-doc run; the same bug class as the r1 `_mh_base` 41x fix,
-    # one level up). With `signature` referenced `bands` times textually
-    # the Project boundary survives and the signature is computed once.
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.array_join(F.slice("signature", b * rows_per_band + 1, rows_per_band), ",")
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    # Band hashes come out of the signature UDF (_minhash_stage), mixed
+    # in numpy from the int64 slices it already holds: a JVM string per
+    # band and document cost 1.31 s of a 4.1 s perfbench dedup pass.
+    banded = _minhash_stage(df, id_col, text_col, num_hashes, ngram, seed, bands)
     # Candidate pairs WITHOUT a self-join: a (band, bucket) self-join
     # evaluates the whole signature pipeline on BOTH join inputs and
     # shuffle-sorts the banded stream twice (measured: 18 s of the 1M-doc
-    # run's 28 s — the pipeline's actual hot spot once the verify was
-    # fixed). One groupBy instead: collect each bucket's id set, expand
-    # ordered pairs via _expand_bucket_pairs (two chained generators,
+    # run's 28 s). One grouping instead (_bucket_ids: singleton buckets
+    # dropped first, then each bucket's id set collected), expanded into
+    # ordered pairs by _expand_bucket_pairs (two chained generators,
     # O(bucket size) memory per row even for degenerate buckets). Same
     # output cardinality as the join, one shuffle, signatures computed
     # once.
-    grouped = banded.groupBy("band", "bucket").agg(F.sort_array(F.collect_set("id")).alias("ids"))
+    grouped = _bucket_ids(banded, ["band", "bucket"], "id")
     cands = _expand_bucket_pairs(grouped).distinct()
     # Verify candidates with exact Jaccard over HASHED shingle sets
     # (VERDICT r4 #4: the verify join was the dedup1m hot spot).  Two
@@ -764,8 +787,9 @@ def shared_window_pairs(
     copying even when the documents' overall vocabularies differ;
     cf. Schleimer et al., SIGMOD'03 winnowing).
 
-    Plan: per-doc distinct windows -> explode -> group by window ->
-    drop buckets above ``max_df`` (windows are distinct per doc, so the
+    Plan: per-doc distinct windows -> explode -> group by window
+    (singleton windows dropped first, ``_bucket_ids``) -> drop buckets
+    above ``max_df`` (windows are distinct per doc, so the
     bucket's id count IS the window's document frequency — the cap is a
     filter on the one aggregate, no second pass over the corpus; same
     guard role as ``jaccard_similar_pairs.max_df``) -> expand ordered
@@ -780,7 +804,7 @@ def shared_window_pairs(
     if hashed:
         win = F.transform(win, lambda s: F.xxhash64(s))
     ex = df.select(F.col(id_col).alias("_id"), F.explode(win).alias("_w"))
-    grouped = ex.groupBy("_w").agg(F.sort_array(F.collect_set("_id")).alias("ids"))
+    grouped = _bucket_ids(ex, ["_w"], "_id")
     if max_df is not None:
         grouped = grouped.filter(F.size("ids") <= max_df)
     return (

@@ -351,6 +351,8 @@ def _id_rank(tie):
 
     keys = []
     for c in tie.columns if isinstance(tie, (pa.RecordBatch, pa.Table)) else [tie]:
+        if pa.types.is_float16(c.type):  # Arrow cannot sort half floats
+            c = c.cast(pa.float32())
         if pa.types.is_floating(c.type):  # Arrow sorts NaN with the nulls
             nan = pc.is_nan(c)
             keys += [pc.if_else(nan, float("inf"), c), nan]
@@ -785,14 +787,16 @@ def knn_search_parquet(
     fewer bytes (partition pruning via the ANN path, pa_filter
     row-group skipping).
 
-    Each split runs ``topk_candidates`` per batch and keeps every row
-    whose exact float64 score — from the stored values, l2 in the same
-    direct sum((a-q)^2) form as the oracle — is no worse than the
-    split's k-th: more than k rows leave a split only on exact ties
-    of finite scores (NaN ranks last and never ties), and the final
-    global TakeOrdered (ties broken by the selected columns) settles
-    those, so the rows returned do not depend on batch or row-group
-    size. Scores are float64 results from the
+    Each split runs ``topk_candidates`` per batch and keeps its first
+    k rows by exact float64 score — from the stored values, l2 in the
+    same direct sum((a-q)^2) form as the oracle — then by the selected
+    columns, the order the final global TakeOrdered breaks ties in
+    (NaN ranks last; a short answer, fewer than k finite scores, is
+    filled in that order too). So the rows returned do not depend on
+    batch, row-group or row order. A nested selected column (Arrow
+    cannot sort one) leaves every exact tie of a finite score in the
+    split for TakeOrdered to settle, and the fillers in row order.
+    Scores are float64 results from the
     stored values: equal to ``knn_search``'s at the round(6) grain for
     every storage type, and bit-equal to the IVF joins' scores for the
     same (query, row) pair.
@@ -884,10 +888,15 @@ def knn_search_parquet(
     if scale_col is not None and scale_col not in read_cols:
         read_cols.append(scale_col)
     Q = np.asarray([query_vec], dtype=np.float64)
+    # the final sort breaks score ties by every selected column; each
+    # split settles its cut (and a short answer's non-finite fillers)
+    # in that order too, unless a column is nested, which Arrow cannot
+    # sort (then the cut keeps every tie, and fillers follow row order)
+    ties = [] if any(pa.types.is_nested(arrow_schema.field(c).type) for c in cols) else cols
 
     def score_split(fpath, rg):
         batches = _split_batches(fs, remote, fpath, rg, read_cols, dim, pa_filter)
-        got = _split_topk(batches, vector_col, scale_col, cols, Q, k, metric)
+        got = _split_topk(batches, vector_col, scale_col, cols, Q, k, metric, *ties)
         if got is None:
             return
         arrays, _qs, raw = got

@@ -44,57 +44,46 @@ spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
 docs = bench.ensure_docs(spark, N_M * 1_000_000)
 
 from laion_spark.operators.dedup import (  # noqa: E402
+    _bucket_ids,
     _expand_bucket_pairs,
+    _minhash_stage,
+    hashed_shingles,
     minhash_lsh_pairs,
     minhash_signatures,
-    shingles,
     tokens,
 )
 
 id_col, text_col = "doc_id", "text"
 num_hashes, bands, ngram, threshold, seed = 32, 8, 3, 0.8, 42
-rows_per_band = num_hashes // bands
 
+# the engine's own stages, composed in minhash_lsh_pairs' order
 df = docs.filter(F.size(tokens(text_col)) >= ngram)
 sigs = minhash_signatures(df, id_col, text_col, num_hashes, ngram, seed)
-banded = sigs.select(
-    "id",
-    F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        F.array_join(F.slice("signature", b * rows_per_band + 1, rows_per_band), ",")
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-    ).alias("bb"),
-).select("id", "bb.band", "bb.bucket")
-grouped = banded.groupBy("band", "bucket").agg(F.sort_array(F.collect_set("id")).alias("ids"))
+banded = _minhash_stage(df, id_col, text_col, num_hashes, ngram, seed, bands)
+grouped = _bucket_ids(banded, ["band", "bucket"], "id")
 cands = _expand_bucket_pairs(grouped).distinct()
 
-# stage ladder: each step includes everything above it
-timed("1 shingle-hash only", lambda: noop(
-    df.select(F.transform(shingles(text_col, ngram), lambda s: F.xxhash64(s)).alias("h"))))
+# stage ladder: steps 3-5 each include everything above them; step 2
+# is the signature array alone (the LSH pass hashes bands in the same
+# UDF instead of emitting it)
+timed("1 shingle-hash only", lambda: noop(df.select(hashed_shingles(text_col, ngram).alias("h"))))
 timed("2 signatures", lambda: noop(sigs))
 timed("3 banded (pre-shuffle)", lambda: noop(banded))
 timed("4 bucket agg (1 shuffle)", lambda: noop(grouped))
 timed("5 cands (expand+distinct)", lambda: noop(cands))
 
-# verify side
-sh = df.select(
-    F.col(id_col).alias("_id"),
-    F.transform(shingles(text_col, ngram), lambda s: F.xxhash64(s)).alias("_set"),
-)
+# verify side, in the engine's order: semi-join the candidate ids
+# first, then hash the survivors' shingles
 cand_ids = (
     cands.select(F.col("da").alias("_id")).union(cands.select(F.col("db").alias("_id"))).distinct()
 )
 timed("6 cand_ids", lambda: noop(cand_ids))
-shj = sh.join(cand_ids, "_id", "left_semi")
-timed("7 sh semi-join (shingle 2nd pass)", lambda: noop(shj))
+shj = (
+    df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_mh_txt"))
+    .join(cand_ids, "_id", "left_semi")
+    .select("_id", hashed_shingles("_mh_txt", ngram).alias("_set"))
+)
+timed("7 semi-join + shingle 2nd pass", lambda: noop(shj))
 
 full = minhash_lsh_pairs(docs, id_col, text_col, num_hashes=num_hashes, bands=bands,
                          threshold=threshold)

@@ -230,6 +230,37 @@ def test_knn_literal_fillers_follow_tiebreak(spark):
         spark.conf.set(key, was)
 
 
+def test_knn_scan_lane_short_answer_follows_tiebreak(spark, tmp_path):
+    """A zero query under cosine scores every row NaN, so the whole
+    answer is filler. The scan lane must fill it in the final sort's
+    order (the selected columns), as HOF and the DataFrame lane do, not
+    in file row order: the table is written in descending id order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from laion_spark.operators.knn import knn_search_parquet
+
+    import numpy as np
+
+    ids = list(range(39, -1, -1))
+    table = pa.table({"id": pa.array(ids, pa.int64()),
+                      "embedding": pa.array([[float(i % 3), 1.0] for i in ids], pa.list_(pa.float32()))})
+    path = str(tmp_path / "rev.parquet")
+    pq.write_table(table, path)
+    df = spark.read.parquet(path)
+    kw = dict(k=3, vector_col="embedding", select=["id"], metric="cosine")
+    scan = [r.id for r in knn_search_parquet(spark, path, [0.0, 0.0], **kw).collect()]
+    lane = [r.id for r in knn_search(df, [0.0, 0.0], tiebreak=["id"], **kw).collect()]
+    hof = [r.id for r in knn_search(df, vec_lit([0.0, 0.0]), tiebreak=["id"], **kw).collect()]
+    assert scan == lane == hof == [0, 1, 2]
+    # a half-float tie column ranks by its float32 upcast (Arrow cannot
+    # sort float16; Spark cannot read it, so the scan lane alone)
+    half = str(tmp_path / "half.parquet")
+    pq.write_table(table.append_column("h", pa.array(np.asarray(ids, np.float16))), half)
+    kw["select"] = ["h", "id"]
+    assert [r.id for r in knn_search_parquet(spark, half, [0.0, 0.0], **kw).collect()] == [0, 1, 2]
+
+
 def test_knn_high_dim_literal_matches_hof(spark, tmp_path):
     """At dim 3072 (past the JVM's 64 KB generated-method limit for an
     unrolled per-element score) a literal query still goes through the

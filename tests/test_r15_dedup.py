@@ -3,8 +3,13 @@
 The round rewrote minhash_signatures' inner loop (numpy mapInArrow),
 switched the n>=2 shingle-hash basis to token-hash tuples
 (hashed_shingles), and moved the LSH verify semi-join BEFORE the
-shingle transform. These pin the invariants those changes promised.
+shingle transform. These pin the invariants those changes promised,
+and those of the LSH band stage: band hashes computed inside the
+signature UDF, singleton buckets dropped before ``collect_set``.
 """
+
+import itertools
+import random
 
 from pyspark.sql import functions as F
 
@@ -72,6 +77,16 @@ def test_minhash_signature_empty_null_contract(spark):
         assert all(v is not None and 0 <= v < _MERSENNE for v in got[did])
     # identical docs get identical signatures
     assert got[0] == got[6]
+    # every value is the pure-Python min over the hashed shingles, for a
+    # batch that holds NULL rows too
+    from laion_spark.operators.dedup import hashed_shingles
+
+    rng = random.Random(42)
+    coeffs = [(rng.randrange(1, _MERSENNE), rng.randrange(0, _MERSENNE)) for _ in range(8)]
+    base = {r.doc_id: r.h for r in df.select("doc_id", hashed_shingles("text", 3, distinct=False).alias("h")).collect()}
+    for did, hs in base.items():
+        if hs:
+            assert got[did] == [min((h % _MERSENNE * a + b) % _MERSENNE for h in hs) for a, b in coeffs], did
     # near-dups agree on most hash slots, the distinct doc does not
     agree01 = sum(1 for a, b in zip(got[0], got[1]) if a == b)
     agree02 = sum(1 for a, b in zip(got[0], got[2]) if a == b)
@@ -90,3 +105,111 @@ def test_minhash_lsh_verify_prunes_before_shingling(spark):
     assert "LeftSemi" in plan
     got = {(r.da, r.db) for r in out.collect()}
     assert (0, 6) in got  # identical pair survives end to end
+
+
+def _band_corpus(spark):
+    """String ids in shuffled order; a 12-doc boilerplate cluster with
+    a few edited members, planted near-dup pairs and partial copies,
+    unrelated captions, and short, empty and NULL captions (no
+    shingles, no bands)."""
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(60)]
+    boiler = "stock photo of a red chair on a plain white background studio shot"
+    texts = [boiler] * 8 + [boiler + " hd", boiler + " 4k", "free " + boiler, boiler.replace("red", "blue")]
+    for tail in range(10):
+        # a near-dup and a partial copy (last 3-7 words replaced,
+        # Jaccard ~0.2-0.6): the latter share some minhash values but
+        # seldom a whole band
+        base = [rng.choice(words) for _ in range(14)]
+        edit = base[:7 + tail % 5] + [rng.choice(words) for _ in range(7 - tail % 5)]
+        texts += [" ".join(base), " ".join(base) + " " + rng.choice(words), " ".join(edit)]
+    texts += [" ".join(rng.choice(words) for _ in range(rng.randint(3, 16))) for _ in range(30)]
+    texts += ["two words", "", None, "one", "   "]
+    ids = [f"doc-{i:03d}" for i in range(len(texts))]
+    rng.shuffle(ids)
+    return spark.createDataFrame(list(zip(ids, texts)), "doc_id string, text string")
+
+
+def test_lsh_candidates_match_python_banding(spark):
+    """At threshold 0 the verify keeps every candidate, so the pairs
+    are the band stage's candidate set. It must equal a pure-Python
+    banding of ``minhash_signatures``: two documents are candidates iff
+    some band's signature slice is equal. Documents without shingles
+    have no bands."""
+    from laion_spark.operators.dedup import minhash_lsh_pairs, minhash_signatures
+
+    df = _band_corpus(spark)
+    num_hashes, bands = 16, 8
+    r = num_hashes // bands
+    sigs = {row.id: row.signature for row in minhash_signatures(df, "doc_id", "text", num_hashes).collect()}
+    buckets = {}
+    for i, sig in sigs.items():
+        if sig is None or None in sig:
+            continue
+        for b in range(bands):
+            buckets.setdefault((b, tuple(sig[b * r:(b + 1) * r])), []).append(i)
+    want = {tuple(sorted(p)) for ids in buckets.values() for p in itertools.combinations(ids, 2)}
+    got = minhash_lsh_pairs(df, "doc_id", "text", num_hashes=num_hashes, bands=bands, threshold=0.0).collect()
+    assert len(got) == len({(x.da, x.db) for x in got})
+    assert {(x.da, x.db) for x in got} == want
+    assert len(want) > 66  # the boilerplate cluster alone is C(12, 2) candidates
+    short = {row.doc_id for row in df.collect() if row.text is None or len(row.text.split()) < 3}
+    assert not short & {i for p in want for i in p}
+
+
+def test_lsh_pairs_do_not_depend_on_partitioning(spark):
+    from laion_spark.operators.dedup import minhash_lsh_pairs
+
+    df = _band_corpus(spark)
+    runs = [
+        [tuple(x) for x in minhash_lsh_pairs(d, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5).collect()]
+        for d in (df.coalesce(1), df.repartition(7))
+    ]
+    assert runs[0] == runs[1]
+    assert len(runs[0]) > 30
+
+
+def _with_ancestors(df):
+    """(node, ancestors) for every node of ``df``'s executed plan — the
+    final AQE plan once an action has run — walking into query stages.
+    A reused exchange is a leaf: its subtree is counted once."""
+    out = []
+
+    def kids(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return [p.executedPlan()]
+        if name.endswith("QueryStageExec"):
+            return [p.plan()]
+        ch = p.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def walk(p, up):
+        name = p.getClass().getSimpleName()
+        out.append((name, up))
+        for c in kids(p):
+            walk(c, up + [name])
+
+    walk(df._jdf.queryExecution().executedPlan(), [])
+    return out
+
+
+def test_lsh_band_stage_executed_plan(spark):
+    """The signature UDF emits the band stream itself: one MapInArrow,
+    no band Generate and no map-side collect_set below the stream's
+    first exchange, and the singleton-dropping window shares that
+    exchange with the bucket aggregate (no second one between them)."""
+    from laion_spark.operators.dedup import minhash_lsh_pairs
+
+    out = minhash_lsh_pairs(_band_corpus(spark), "doc_id", "text", num_hashes=16, bands=8)
+    out.collect()
+    nodes = _with_ancestors(out)
+    assert "ResultQueryStageExec" in {n for n, _ in nodes}  # the final plan
+    arrow = [up for n, up in nodes if n == "MapInArrowExec"]
+    assert len(arrow) == 1
+    up = arrow[0][::-1]  # nearest ancestor first
+    first = up.index("ShuffleExchangeExec")
+    assert not {"GenerateExec", "ObjectHashAggregateExec", "HashAggregateExec"} & set(up[:first])
+    agg = up.index("ObjectHashAggregateExec")
+    assert first < up.index("WindowExec") < agg
+    assert "ShuffleExchangeExec" not in up[first + 1:agg]
