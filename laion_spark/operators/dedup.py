@@ -503,22 +503,19 @@ def _minhash_stage(
             if n == 0:
                 continue
             offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = col.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            starts, ends = offs[:-1], offs[1:]
-            valid = ends > starts
+            # one sentinel value past the end: every offset, the last
+            # included, is then a valid reduceat index, so each row's
+            # segment ends exactly at the next offset
+            vals = np.append(col.values.to_numpy(zero_copy_only=False).astype(np.int64), 0)
+            valid = offs[1:] > offs[:-1]
             if col.null_count:
                 valid &= col.is_valid().to_numpy(zero_copy_only=False)
             sigs = np.empty((n, n_funcs), dtype=np.int64)
-            if len(vals):
-                # reduceat segment-min per hash function; an empty or
-                # NULL row yields a garbage element that the validity
-                # mask drops
-                idx = np.minimum(starts, len(vals) - 1)
-                for j in range(n_funcs):
-                    hv = (vals * A[j] + B[j]) % mprime
-                    sigs[:, j] = np.minimum.reduceat(hv, idx)
-            else:
-                valid[:] = False
+            # reduceat segment-min per hash function; an empty or NULL
+            # row yields a garbage element that the validity mask drops
+            for j in range(n_funcs):
+                hv = (vals * A[j] + B[j]) % mprime
+                sigs[:, j] = np.minimum.reduceat(hv, offs)[:n]
             if bands is None:
                 data = pa.array(sigs.ravel(), type=pa.int64(), mask=np.repeat(~valid, n_funcs))
                 offsets = pa.array(np.arange(0, (n + 1) * n_funcs, n_funcs, dtype=np.int32), type=pa.int32())

@@ -344,13 +344,18 @@ def _id_rank(tie):
     record batch or table of tiebreak columns compared left to right)
     in Spark's ascending order: nulls first, NaN above every float. It
     is the order the joins' window (``cid`` asc) and ``knn_search``'s
-    final sort break score ties in."""
+    final sort break score ties in. None when a column is nested
+    (arrays, structs, maps), which Arrow cannot sort: callers then keep
+    every tie, or fall back to row order."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    cols = tie.columns if isinstance(tie, (pa.RecordBatch, pa.Table)) else [tie]
+    if any(pa.types.is_nested(c.type) for c in cols):
+        return None
     keys = []
-    for c in tie.columns if isinstance(tie, (pa.RecordBatch, pa.Table)) else [tie]:
+    for c in cols:
         if pa.types.is_float16(c.type):  # Arrow cannot sort half floats
             c = c.cast(pa.float32())
         if pa.types.is_floating(c.type):  # Arrow sorts NaN with the nulls
@@ -389,7 +394,8 @@ def _split_topk(batches, vector_col, scale_col, cols, Q, k: int, metric: str, *t
     """One split's (or one Arrow partition's) share of a kNN answer:
     ``topk_candidates`` over each batch, merged into a running per-query
     cut at the exact k-th (ties kept, or settled by ``tie_cols``, some
-    of ``cols``, compared left to right), so at most ~k rows per query
+    of ``cols``, compared left to right, where ``_id_rank`` can sort
+    them), so at most ~k rows per query
     are held whatever the split's size. Returns ``(arrays, qs, raw)`` —
     ``arrays`` the ``cols`` columns of the kept rows — or None for a
     split with no rows."""
@@ -434,7 +440,6 @@ def _arrow_scored(
     by ``tiebreak``."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql.types import AtomicType
 
     from laion_spark.session import _ship_package
 
@@ -444,16 +449,11 @@ def _arrow_scored(
     schema = pruned.schema
     out_schema = ", ".join([f"`{c}` {schema[c].dataType.simpleString()}" for c in cols] + ["_raw double"])
     Q = np.asarray([qvec], dtype=np.float64)
-    # Arrow cannot sort nested values (arrays, structs, maps): a
-    # tiebreak on one leaves the kernel's cut to row order
     ties = list(tiebreak)
-    if not all(c in cols and isinstance(schema[c].dataType, AtomicType) for c in ties):
-        ties = []
 
     def first_k(t):
-        if t.num_rows <= k or not ties:
-            return t.slice(0, k)
-        return t.take(pa.array(np.argsort(_id_rank(t.select(ties)))[:k]))
+        rank = _id_rank(t.select(ties)) if t.num_rows > k and ties else None
+        return t.slice(0, k) if rank is None else t.take(pa.array(np.argsort(rank)[:k]))
 
     def score(batches):
         nulls = None
@@ -890,13 +890,10 @@ def knn_search_parquet(
     Q = np.asarray([query_vec], dtype=np.float64)
     # the final sort breaks score ties by every selected column; each
     # split settles its cut (and a short answer's non-finite fillers)
-    # in that order too, unless a column is nested, which Arrow cannot
-    # sort (then the cut keeps every tie, and fillers follow row order)
-    ties = [] if any(pa.types.is_nested(arrow_schema.field(c).type) for c in cols) else cols
-
+    # in that order too, unless a column is nested (see ``_id_rank``)
     def score_split(fpath, rg):
         batches = _split_batches(fs, remote, fpath, rg, read_cols, dim, pa_filter)
-        got = _split_topk(batches, vector_col, scale_col, cols, Q, k, metric, *ties)
+        got = _split_topk(batches, vector_col, scale_col, cols, Q, k, metric, *cols)
         if got is None:
             return
         arrays, _qs, raw = got

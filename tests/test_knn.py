@@ -259,6 +259,11 @@ def test_knn_scan_lane_short_answer_follows_tiebreak(spark, tmp_path):
     pq.write_table(table.append_column("h", pa.array(np.asarray(ids, np.float16))), half)
     kw["select"] = ["h", "id"]
     assert [r.id for r in knn_search_parquet(spark, half, [0.0, 0.0], **kw).collect()] == [0, 1, 2]
+    # a nested tie column cannot be ranked in Arrow: both lanes still
+    # answer k rows (their fillers then follow row order)
+    kw["select"] = ["id", "embedding"]
+    assert len(knn_search_parquet(spark, path, [0.0, 0.0], **kw).collect()) == 3
+    assert len(knn_search(df, [0.0, 0.0], tiebreak=["embedding", "id"], **kw).collect()) == 3
 
 
 def test_knn_high_dim_literal_matches_hof(spark, tmp_path):

@@ -87,6 +87,17 @@ def test_minhash_signature_empty_null_contract(spark):
     for did, hs in base.items():
         if hs:
             assert got[did] == [min((h % _MERSENNE * a + b) % _MERSENNE for h in hs) for a, b in coeffs], did
+    # a batch whose last non-empty row is followed only by NULL or empty
+    # rows: that row's min must still cover its last shingle
+    for tail in ([None], [""], ["", None]):
+        rows = [(10, "a b c d e f"), (11, "z y x w v")] + [(12 + i, t) for i, t in enumerate(tail)]
+        one = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+        sig = {r.id: r.signature for r in minhash_signatures(one, "doc_id", "text", num_hashes=8, ngram=3).collect()}
+        hs = {r.doc_id: r.h for r in one.select("doc_id", hashed_shingles("text", 3, distinct=False).alias("h")).collect()}
+        for did in (10, 11):
+            assert sig[did] == [min((h % _MERSENNE * a + b) % _MERSENNE for h in hs[did]) for a, b in coeffs], (tail, did)
+        for did in range(12, 12 + len(tail)):
+            assert sig[did] is None or all(v is None for v in sig[did]), (tail, did)
     # near-dups agree on most hash slots, the distinct doc does not
     agree01 = sum(1 for a, b in zip(got[0], got[1]) if a == b)
     agree02 = sum(1 for a, b in zip(got[0], got[2]) if a == b)
