@@ -117,19 +117,26 @@ def _finish_topk(
     """Shared ordering/finishing tail for every scorer: NULL scores
     last (NULL embeddings must not displace real neighbors — Spark's
     plain asc is NULLS FIRST), NaN scores last (nulled under desc),
-    sqrt applied to the k survivors only."""
+    sqrt applied to the k survivors only.
+
+    Every ``Column`` built here costs py4j round trips (PySpark 4.1
+    classic records each call's Python call site on the JVM), and
+    every kNN query pays them: ``_raw`` is built once and the tiebreak
+    columns go to ``orderBy`` as names, which sort ascending, nulls
+    first, like ``asc()``. With one tie column that is 55 round trips
+    instead of 79 (l2) and 72 instead of 112 (cosine)."""
+    raw = F.col("_raw")
     if metric == "l2":
-        order = [F.col("_raw").asc_nulls_last()]
-        finish = F.sqrt(F.col("_raw"))
+        order = raw.asc_nulls_last()
+        finish = F.sqrt(raw)
     else:
-        order = [F.col("_raw").desc_nulls_last()]
-        finish = F.col("_raw")
+        order = raw.desc_nulls_last()
+        finish = raw
         # NaN (zero norm under the kernel's cosine, NaN elements) sorts
         # above every double, first under desc: null it so it ranks last,
         # as the kernel ranks it (HOF cosine is NULL there already)
-        scored = scored.withColumn("_raw", F.when(~F.isnan("_raw"), F.col("_raw")))
-    order += [F.col(c).asc() for c in tiebreak]
-    topk = scored.orderBy(*order).limit(k)
+        scored = scored.withColumn("_raw", F.when(~F.isnan(raw), raw))
+    topk = scored.orderBy(order, *tiebreak).limit(k)
     return topk.withColumn(score_col, finish).drop("_raw")
 
 

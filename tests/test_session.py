@@ -2,13 +2,14 @@
 worker daemon that keeps tasks from re-reading unchanged zip archives."""
 
 import importlib
+import json
 import os
 import subprocess
 import sys
 import zipfile
 import zipimport
 
-from laion_spark.session import default_driver_mem
+from laion_spark.session import _PACKAGE_ROOT, default_driver_mem
 
 
 def _mem_total_bytes() -> int:
@@ -99,14 +100,20 @@ def test_get_session_starts_workers_from_the_guarded_daemon(spark):
                 {
                     "file": [code.co_filename] * b.num_rows,
                     "wrapped": [hasattr(fn, "__wrapped__")] * b.num_rows,
+                    "uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")] * b.num_rows,
                 }
             )
 
-    rows = spark.range(4, numPartitions=4).mapInArrow(probe, "file string, wrapped boolean").collect()
+    rows = (
+        spark.range(4, numPartitions=4)
+        .mapInArrow(probe, "file string, wrapped boolean, uds string")
+        .collect()
+    )
     assert len(rows) == 4
     for r in rows:
         assert r.wrapped
         assert os.path.samefile(r.file, pydaemon.__file__)
+        assert r.uds.lower() == "true"  # the daemon and its workers talk AF_UNIX
 
 
 def test_daemon_module_imports_from_any_cwd_without_starting(spark):
@@ -123,3 +130,102 @@ def test_daemon_module_imports_from_any_cwd_without_starting(spark):
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout == ""  # a started daemon prints its port
+
+
+def _long_temp_env(tmp_path):
+    """An env whose TMPDIR and java.io.tmpdir are over 100 bytes long:
+    "<dir>/.<uuid>.sock" under it overflows AF_UNIX's 107-byte path."""
+    long_tmp = tmp_path / ("t" * max(8, 101 - len(str(tmp_path))))
+    long_tmp.mkdir()
+    assert len(str(long_tmp)) >= 100
+    env = dict(os.environ)
+    env.update(
+        TMPDIR=str(long_tmp),
+        JDK_JAVA_OPTIONS=f"-Djava.io.tmpdir={long_tmp}",
+        PYTHONPATH=_PACKAGE_ROOT,
+        SPARK_GRAFT_DRIVER_MEM="512m",
+    )
+    return long_tmp, env
+
+
+def _left_behind(root):
+    return [
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".sock") or f.startswith("laion_spark_pkg_")
+    ]
+
+
+_SOCKET_JOB = """
+import json, os
+import pyarrow as pa
+from laion_spark.session import get_session
+
+spark = get_session("uds_probe", cpus=2)
+sock_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+
+def probe(batches):
+    for b in batches:
+        flag = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")
+        yield pa.RecordBatch.from_pydict({"id": b.column(0), "uds": [flag] * b.num_rows})
+
+rows = spark.range(4, numPartitions=4).mapInArrow(probe, "id long, uds string").collect()
+spark.stop()
+print(json.dumps({"dir": sock_dir, "rows": sorted([r.id, r.uds.lower()] for r in rows)}))
+"""
+
+
+def test_unix_sockets_work_and_leave_nothing_under_a_long_temp_dir(tmp_path):
+    """A session started under a long temp dir runs a Python job over
+    AF_UNIX sockets, and once the driver exits no socket, socket dir
+    or package zip is left."""
+    long_tmp, env = _long_temp_env(tmp_path)
+    out = subprocess.run(
+        [sys.executable, "-c", _SOCKET_JOB],
+        cwd=str(tmp_path),
+        env=env,
+        stdin=subprocess.DEVNULL,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["rows"] == [[i, "true"] for i in range(4)]
+    sock_dir = got["dir"]
+    assert sock_dir and len(os.fsencode(sock_dir)) + 43 <= 107
+    assert not os.path.exists(sock_dir)
+    assert _left_behind(long_tmp) == []
+
+
+_SHIP_ONLY = """
+import os
+from types import SimpleNamespace
+from laion_spark.session import _ship_package
+
+added = []
+spark = SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=added.append))
+_ship_package(spark)
+assert len(added) == 1 and os.path.getsize(added[0]) > 0
+print(added[0])
+"""
+
+
+def test_ship_package_deletes_its_zip_at_exit(tmp_path):
+    long_tmp, env = _long_temp_env(tmp_path)
+    out = subprocess.run(
+        [sys.executable, "-c", _SHIP_ONLY],
+        cwd=str(tmp_path),
+        env=env,
+        stdin=subprocess.DEVNULL,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    zpath = out.stdout.strip()
+    assert os.path.basename(zpath).startswith("laion_spark_pkg_")
+    assert not os.path.exists(zpath)
+    assert not os.path.exists(os.path.dirname(zpath))
+    assert _left_behind(long_tmp) == []
