@@ -7,9 +7,10 @@ designed for 100 TB scale.
 Architecture: declarative DataFrame/SQL plans all the way down —
 Catalyst does the planning (predicate pushdown, column pruning,
 TakeOrderedAndProject top-k, AQE); this package supplies the
-vector/search/ETL layer Spark lacks, as compositions of built-in
-higher-order functions. Python UDFs appear only at the encoder edge
-(never in the scoring hot path).
+vector/search/ETL layer Spark lacks. Column-valued vector math is
+composed from built-in higher-order functions; literal-query scoring
+(one BLAS top-k kernel), the shard ETL, the twin rewrites and the
+encoders run as Arrow-batch Python tasks (``mapInArrow``).
 """
 
 from laion_spark.session import get_session, tune_session

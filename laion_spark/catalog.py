@@ -1687,7 +1687,7 @@ def _etl_fixture() -> str:
     ORDER BY key
     """,
     note="S1-S5/S3 positional npy⋈parquet ETL end-to-end (process.py:14-92): "
-    "per-shard mapInPandas assembly, zero-fill, caption clean (P5), exif "
+    "per-shard Arrow assembly in a shuffle-free stage, zero-fill, caption clean (P5), exif "
     "from_json (P6), schema projection (P2); oracle regenerates the expected "
     "table analytically from the fixture's closed-form values",
 )

@@ -720,21 +720,26 @@ def _split_batches(fs, remote: bool, fpath: str, rg: int, columns, dim: int, pa_
 
 
 def _run_splits(spark, tasks: list[tuple], task_ddl: str, score_split, out_schema: str) -> DataFrame:
-    """The scan-side split dispatch: ``score_split(*task)`` (a generator
-    of Arrow batches) runs once per task tuple — (path, row_group, ...)
-    — spread round-robin over ``defaultParallelism`` partitions.
+    """The one dispatcher of every file-at-a-time Python job — scan-lane
+    and IVF-join splits (path, row_group, ...), ETL shards, twin-rewrite
+    (src, dst) pairs and footer-stats files: ``score_split(*task)`` (a
+    generator of Arrow batches) runs once per task tuple, the tasks
+    spread round-robin over ``min(len(tasks), defaultParallelism)``
+    partitions, each running its share in order. The package is
+    shipped first, so ``score_split`` may use any ``laion_spark`` code.
 
     Tasks ride a shuffle-FREE range leaf: spark.range(n, ...,
-    numPartitions=n) materializes one row per partition JVM-side, so a
-    probe is a single stage (scan+score -> TakeOrdered reduce). A
-    LocalRelation + repartition(N) form moved only tiny (path,
-    row_group) strings but still paid a full shuffle stage boundary —
-    pure fixed overhead on the ANN probe path (measured ~0.1-0.2
-    s/probe). Round-robin assignment interleaves row groups of the same
-    file across partitions, which also spreads a skewed probed cluster
-    over the wave. An RDD task table (sc.parallelize) would be worse
-    still: a second Python runner per execution just to deserialize
-    pickled rows (~0.2 s, measured r3)."""
+    numPartitions=n) materializes one row per partition JVM-side, so
+    the job is a single stage. A LocalRelation + repartition(N) form
+    moves the same tiny task rows but pays a shuffle stage boundary —
+    pure fixed overhead (measured ~0.1-0.2 s per ANN probe); an RDD
+    task table (sc.parallelize) costs a second Python runner per
+    execution (~0.2 s). Round-robin assignment interleaves row groups
+    of one file across partitions, which also spreads a skewed probed
+    cluster over the wave."""
+    from laion_spark.session import _ship_package
+
+    _ship_package(spark)
     n_parts = max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
     if len(tasks) <= _TASKS_INLINE_MAX:
         task_groups = [tasks[i::n_parts] for i in range(n_parts)]
@@ -842,9 +847,6 @@ def knn_search_parquet(
     import numpy as np
     import pyarrow as pa
 
-    from laion_spark.session import _ship_package
-
-    _ship_package(spark)  # worker closures unpickle laion_spark by module ref
     if plan is None:
         plan = build_scan_plan(path)
     fs, remote, arrow_schema = plan.fs, plan.remote, plan.arrow_schema

@@ -748,9 +748,6 @@ class IVFIndex:
             raise ValueError("metric must be l2|cosine")
         if self.centroids is None:
             raise ValueError("call fit() first")
-        from laion_spark.session import _ship_package
-
-        _ship_package(spark)
         return _join_blocks(
             queries, query_id, query_vec, corpus_id, k, metric, max_queries, chunk_queries,
             lambda q_ids, q_mat, qid_t: self._knn_join_parquet_rows(

@@ -26,8 +26,11 @@ touch the JVM writer:
   before it), then ``_flba_sink`` writes one file per cluster per
   task, committed by ``_staged_write``.
 * ``write_half_table`` / ``write_int8_table``: file-wise twin rewrites
-  of an existing table (``_rewrite_table``) — one task per source file,
-  no shuffle, so at 100 TB the rewrite parallelizes file-wise.
+  of an existing table (``_rewrite_table``) — each source file is
+  rewritten whole by one task of ``knn._run_splits``' shuffle-free
+  stage, so at 100 TB the rewrite parallelizes file-wise. Each output
+  file is committed by ``_write_part_file``, as is every shard file of
+  ``npy.etl_shards_to_parquet``.
 """
 
 from __future__ import annotations
@@ -99,10 +102,11 @@ def _rewrite_table(
     compression: str,
 ) -> DataFrame:
     """File-wise twin rewrite behind ``write_half_table`` and
-    ``write_int8_table``: one task per source file, each decoding with
-    pyarrow, re-encoding ``vector_cols`` with ``_encode`` and writing
-    its output file directly. ``sq8`` adds a ``{col}_scale`` float32
-    column per vector column.
+    ``write_int8_table``: each source file is rewritten whole by one
+    ``_run_splits`` task, which decodes it with pyarrow row group by
+    row group, re-encodes ``vector_cols`` with ``_encode`` and writes
+    its output file through ``_write_part_file``. ``sq8`` adds a
+    ``{col}_scale`` float32 column per vector column.
 
     The source's directory tree is PRESERVED relative to ``src_path``:
     a Hive-partitioned layout (e.g. an ``IVFIndex.write_index`` table's
@@ -113,10 +117,8 @@ def _rewrite_table(
     Local filesystems only (the bench/fixture path); the read side
     (``knn_search_parquet``) also handles remote stores. Returns a
     DataFrame of (path, rows) — one row per written file."""
-    from laion_spark.operators.knn import _list_parquet_files, _strip_local
-    from laion_spark.session import _ship_package
+    from laion_spark.operators.knn import _list_parquet_files, _run_splits, _strip_local
 
-    _ship_package(spark)
     fs, files, remote = _list_parquet_files([src_path])
     if remote:
         raise NotImplementedError("twin rewrites target local paths (fixture/bench use)")
@@ -133,59 +135,46 @@ def _rewrite_table(
     vcols = list(vector_cols)
     width = _ELEM_BYTES[codec]
 
-    def conv(batches):
+    def encoded_row_groups(src):
         import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from laion_spark.operators.knn import flat_matrix
 
-        for rb in batches:
-            for src, dst in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
-                # stream row-group-wise: a whole-file read_table would
-                # hold ~2x the file in one worker's memory (source +
-                # cast copy); this keeps peak at one row group
-                pf = pq.ParquetFile(src)
-                schema = pf.schema_arrow
-                # infer each vector column's (fixed) dim from the
-                # first row group — the binary width is part of the
-                # output schema, needed before the writer opens
-                probe = pf.read_row_group(0, columns=vcols)
-                dims: dict[str, int] = {
-                    c: _infer_dim(probe.column(c).combine_chunks()) for c in vcols
-                }
-                for c in vcols:
-                    i = schema.get_field_index(c)
-                    schema = schema.set(i, schema.field(i).with_type(pa.binary(width * dims[c])))
-                    if codec == "sq8":
-                        schema = schema.append(pa.field(f"{c}_scale", pa.float32()))
-                rows = 0
-                with pq.ParquetWriter(dst, schema, compression=compression) as w:
-                    for g in range(pf.metadata.num_row_groups):
-                        t = pf.read_row_group(g)
-                        for c in vcols:
-                            # list<float> OR packed-f32 source; flat_matrix
-                            # raises on NULL/ragged input
-                            mat = flat_matrix(t.column(c).combine_chunks(), dims[c], np.float32)
-                            data, scale = _encode(mat, codec)
-                            fsb = pa.Array.from_buffers(
-                                pa.binary(width * dims[c]), t.num_rows, [None, pa.py_buffer(data)]
-                            )
-                            t = t.set_column(t.schema.get_field_index(c), c, fsb)
-                            if scale is not None:
-                                t = t.append_column(f"{c}_scale", pa.array(scale, type=pa.float32()))
-                        w.write_table(t.cast(schema))
-                        rows += t.num_rows
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([dst]), pa.array([rows], type=pa.int64())],
-                    ["path", "rows"],
+        # stream row-group-wise: a whole-file read_table would hold ~2x
+        # the file in one worker's memory (source + cast copy); this
+        # keeps peak at one row group
+        pf = pq.ParquetFile(src)
+        schema = pf.schema_arrow
+        # infer each vector column's (fixed) dim from the first row
+        # group — the binary width is part of the output schema
+        probe = pf.read_row_group(0, columns=vcols)
+        dims: dict[str, int] = {c: _infer_dim(probe.column(c).combine_chunks()) for c in vcols}
+        for c in vcols:
+            i = schema.get_field_index(c)
+            schema = schema.set(i, schema.field(i).with_type(pa.binary(width * dims[c])))
+            if codec == "sq8":
+                schema = schema.append(pa.field(f"{c}_scale", pa.float32()))
+        for g in range(pf.metadata.num_row_groups):
+            t = pf.read_row_group(g)
+            for c in vcols:
+                # list<float> OR packed-f32 source; flat_matrix raises on
+                # NULL/ragged input
+                mat = flat_matrix(t.column(c).combine_chunks(), dims[c], np.float32)
+                data, scale = _encode(mat, codec)
+                fsb = pa.Array.from_buffers(
+                    pa.binary(width * dims[c]), t.num_rows, [None, pa.py_buffer(data)]
                 )
+                t = t.set_column(t.schema.get_field_index(c), c, fsb)
+                if scale is not None:
+                    t = t.append_column(f"{c}_scale", pa.array(scale, type=pa.float32()))
+            yield t.cast(schema)
 
-    n = len(tasks)
-    jobs = spark.createDataFrame(tasks, "src string, dst string")
-    if n > 1:
-        jobs = jobs.repartition(min(n, spark.sparkContext.defaultParallelism))
-    return jobs.mapInArrow(conv, "path string, rows long")
+    def rewrite(src, dst):
+        yield _write_part_file(dst, encoded_row_groups(src), compression)
+
+    return _run_splits(spark, tasks, "src string, dst string", rewrite, "path string, rows long")
 
 
 def write_half_table(
@@ -229,6 +218,40 @@ def write_int8_table(
     ``_rewrite_table`` scaffold, ``ivf_cluster=K`` dirs preserved).
     """
     return _rewrite_table(spark, src_path, dst_path, vector_cols, "sq8", compression)
+
+
+def _write_part_file(dst: str, parts, compression: str):
+    """Write ``parts`` (Arrow batches or tables; the first one's schema
+    is the file's) as the one parquet file ``dst`` and return its
+    (path, rows) result batch — the commit of every Python task that
+    writes one file. The file is written under a hidden ``_``-prefixed
+    sibling name, which every reader skips, and renamed to ``dst`` only
+    after ``close()``; on any exception the hidden file is removed, so
+    a task that fails mid-write leaves no readable partial file (a
+    retried task renames over the same ``dst``). No parts, no file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(dst), f"_{uuid.uuid4().hex}-{os.path.basename(dst)}")
+    writer = None
+    rows = 0
+    try:
+        for part in parts:
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, part.schema, compression=compression)
+            writer.write(part)
+            rows += part.num_rows
+        if writer is not None:
+            writer.close()
+            os.replace(tmp, dst)
+    except BaseException:
+        if writer is not None:
+            writer.close()
+            os.remove(tmp)
+        raise
+    return pa.RecordBatch.from_arrays(
+        [pa.array([dst]), pa.array([rows], type=pa.int64())], ["path", "rows"]
+    )
 
 
 @contextmanager

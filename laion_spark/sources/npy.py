@@ -10,8 +10,12 @@ The join between metadata and the .npy matrices is POSITIONAL (row i of
 the parquet matches row i of the matrix — process.py:58-72 advances a
 running offset). That is the one genuinely non-relational operation in
 the reference; the distributed answer is file-granular parallelism:
-one shard is processed inside one task, where order is preserved by
-construction. No global row_number, no shuffle of embedding payloads.
+every shard is processed whole, in order, by one task, so the
+positional join needs no global row_number. The shards are the task
+list of ``knn._run_splits``: one shuffle-free stage whose
+``min(shards, defaultParallelism)`` tasks each take their round-robin
+share of the shards one after another, and no embedding payload is
+ever shuffled.
 
 Per-shard pipeline (mirrors process.py:53-78):
     iterate metadata in 65536-row batches (S1)  ->
@@ -21,10 +25,12 @@ Per-shard pipeline (mirrors process.py:53-78):
     parse exif JSON -> map (P6, process.py:76) ->
     project to the declared schema (P2, process.py:74)
 
-Scale posture: laion2B-en is ~2314 shards — natural task granularity
-for a 1000-executor cluster, uniform sizes (no skew), linear scan I/O,
-and the output lands via the ordinary schema-enforced zstd parquet sink
-(S5, process.py:49-50).
+Scale posture: laion2B-en is ~2314 shards of uniform size (no skew),
+so a 1000-core cluster runs two or three shards per task with linear
+scan I/O. The output lands either through Spark's schema-enforced zstd
+parquet sink (``etl_shards`` + ``write_fact_table``) or, one file per
+shard, from inside the task (``etl_shards_to_parquet``; S5,
+process.py:49-50).
 """
 
 from __future__ import annotations
@@ -33,10 +39,9 @@ import glob
 import json
 import os
 import re
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from laion_spark.schema import LAION_SCHEMA
 
@@ -76,16 +81,14 @@ def discover_shards(input_dir: str) -> list[Shard]:
     return sorted(shards, key=lambda s: s.shard_id)
 
 
-_JOBS_SCHEMA = T.StructType(
-    [
-        T.StructField("shard_id", T.IntegerType(), False),
-        T.StructField("metadata_path", T.StringType(), False),
-        T.StructField("img_emb_path", T.StringType(), True),
-        T.StructField("text_emb_path", T.StringType(), True),
-    ]
-)
+def _run_shards(spark: SparkSession, shards: list[Shard], per_shard, out_schema) -> DataFrame:
+    """Run ``per_shard(shard)`` (a generator of Arrow batches) once per
+    shard, each shard whole inside one task, through ``_run_splits``."""
+    from laion_spark.operators.knn import _run_splits
 
-_CURLY = {ord("’"): " ", ord("‘"): " "}
+    tasks = [astuple(s) for s in shards]
+    ddl = "shard_id int, metadata_path string, img_emb_path string, text_emb_path string"
+    return _run_splits(spark, tasks, ddl, lambda *t: per_shard(Shard(*t)), out_schema)
 
 
 def _emb_list_array(mat, offset: int, n: int, dim: int):
@@ -110,7 +113,7 @@ def _emb_list_array(mat, offset: int, n: int, dim: int):
     return pa.ListArray.from_arrays(offsets, pa.array(flat, type=pa.float32()))
 
 
-def _process_shard_batches(job, dim: int):
+def _process_shard_batches(shard: Shard, dim: int):
     """Yield Arrow RecordBatches for one shard — the reference's
     per-shard loop (process.py:14-92) minus the writer.
 
@@ -126,8 +129,8 @@ def _process_shard_batches(job, dim: int):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    img = np.load(job.img_emb_path, mmap_mode="r") if job.img_emb_path else None
-    txt = np.load(job.text_emb_path, mmap_mode="r") if job.text_emb_path else None
+    img = np.load(shard.img_emb_path, mmap_mode="r") if shard.img_emb_path else None
+    txt = np.load(shard.text_emb_path, mmap_mode="r") if shard.text_emb_path else None
     out_fields = [
         (
             f.name,
@@ -144,7 +147,7 @@ def _process_shard_batches(job, dim: int):
         for f in LAION_SCHEMA.fields
     ]
     offset = 0
-    pf = pq.ParquetFile(job.metadata_path)
+    pf = pq.ParquetFile(shard.metadata_path)
     for batch in pf.iter_batches(batch_size=BATCH_ROWS):
         n = batch.num_rows
         cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
@@ -172,23 +175,13 @@ def _process_shard_batches(job, dim: int):
 
 
 def etl_shards(spark: SparkSession, input_dir: str, dim: int = 768) -> DataFrame:
-    """The distributed ETL: a tiny jobs DataFrame (one row per shard)
-    fanned out so each task assembles whole shards (X1 parity with
-    mp.Pool one-shard-per-task, process.py:115-118)."""
+    """The distributed ETL: every shard is assembled whole by one task
+    of a shuffle-free stage (``_run_shards``), the analog of the
+    reference's ``mp.Pool`` workers (process.py:115-118)."""
     shards = discover_shards(input_dir)
     if not shards:
         raise FileNotFoundError(f"no metadata_*.parquet under {input_dir}/metadata")
-    jobs = spark.createDataFrame(
-        [(s.shard_id, s.metadata_path, s.img_emb_path, s.text_emb_path) for s in shards],
-        _JOBS_SCHEMA,
-    ).repartition(len(shards), "shard_id")
-
-    def run(batches):
-        for rb in batches:
-            for job in rb.to_pandas().itertuples(index=False):
-                yield from _process_shard_batches(job, dim)
-
-    return jobs.mapInArrow(run, LAION_SCHEMA)
+    return _run_shards(spark, shards, lambda shard: _process_shard_batches(shard, dim), LAION_SCHEMA)
 
 
 def write_fact_table(df: DataFrame, path: str, compression: str = "zstd") -> None:
@@ -213,57 +206,23 @@ def etl_shards_to_parquet(
     alone (~1.9 s assemble vs ~9 s assemble+write, codec-independent);
     this path removes that conversion. Output is one file per shard —
     file-granular parallelism, no shuffle, same layout the reference
-    emits; each file appears under its final name only once complete.
+    emits; each file appears under its final name only once complete
+    (``halfvec._write_part_file``).
     Returns (path, rows) per shard; local/NFS-style paths (the
     fixture/bench shape) — route remote stores through pyarrow.fs like
     the scan side if needed."""
-    import os as _os
-
     shards = discover_shards(input_dir)
     if not shards:
         raise FileNotFoundError(f"no metadata_*.parquet under {input_dir}/metadata")
-    _os.makedirs(out_dir, exist_ok=True)
-    jobs = spark.createDataFrame(
-        [(s.shard_id, s.metadata_path, s.img_emb_path, s.text_emb_path) for s in shards],
-        _JOBS_SCHEMA,
-    ).repartition(len(shards), "shard_id")
-    comp = compression
+    os.makedirs(out_dir, exist_ok=True)
 
-    def run(batches):
-        import uuid
+    def write_shard(shard):
+        from laion_spark.sources.halfvec import _write_part_file
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        dst = os.path.join(out_dir, f"part-{shard.shard_id:05d}.parquet")
+        yield _write_part_file(dst, _process_shard_batches(shard, dim), compression)
 
-        for rb in batches:
-            for job in rb.to_pandas().itertuples(index=False):
-                dst = _os.path.join(out_dir, f"part-{int(job.shard_id):05d}.parquet")
-                # written under a hidden name (readers skip `_` files) and
-                # renamed once closed: a shard that fails mid-write leaves
-                # no readable partial file
-                tmp = _os.path.join(out_dir, f"_{uuid.uuid4().hex}-{_os.path.basename(dst)}")
-                writer = None
-                rows = 0
-                try:
-                    for b in _process_shard_batches(job, dim):
-                        if writer is None:
-                            writer = pq.ParquetWriter(tmp, b.schema, compression=comp)
-                        writer.write_batch(b)
-                        rows += b.num_rows
-                except BaseException:
-                    if writer is not None:
-                        writer.close()
-                        _os.remove(tmp)
-                    raise
-                if writer is not None:
-                    writer.close()
-                    _os.replace(tmp, dst)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([dst]), pa.array([rows], type=pa.int64())],
-                    ["path", "rows"],
-                )
-
-    return jobs.mapInArrow(run, "path string, rows long")
+    return _run_shards(spark, shards, write_shard, "path string, rows long")
 
 
 def save_as_table(
@@ -305,25 +264,24 @@ def shard_report(spark: SparkSession, input_dir: str, dim: int = 768) -> DataFra
     """Per-shard error ledger (X3, process.py:87-92, 119-121): runs the
     same per-shard pipeline under try/except, one result row per shard
     {shard_id, success, rows, error}."""
-    shards = discover_shards(input_dir)
-    jobs = spark.createDataFrame(
-        [(s.shard_id, s.metadata_path, s.img_emb_path, s.text_emb_path) for s in shards],
-        _JOBS_SCHEMA,
-    ).repartition(max(len(shards), 1), "shard_id")
 
-    def run(batches):
-        import pandas as pd
+    def report(shard):
+        import pyarrow as pa
 
-        for jobs_pdf in batches:
-            for job in jobs_pdf.itertuples(index=False):
-                try:
-                    rows = sum(b.num_rows for b in _process_shard_batches(job, dim))
-                    yield pd.DataFrame(
-                        [{"shard_id": job.shard_id, "success": True, "rows": rows, "error": None}]
-                    )
-                except Exception as e:  # ledger, not fail-fast (X3)
-                    yield pd.DataFrame(
-                        [{"shard_id": job.shard_id, "success": False, "rows": 0, "error": str(e)}]
-                    )
+        try:
+            rows, error = sum(b.num_rows for b in _process_shard_batches(shard, dim)), None
+        except Exception as e:  # ledger, not fail-fast (X3)
+            rows, error = 0, str(e)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([shard.shard_id], pa.int32()),
+                pa.array([error is None]),
+                pa.array([rows], pa.int64()),
+                pa.array([error], pa.string()),
+            ],
+            ["shard_id", "success", "rows", "error"],
+        )
 
-    return jobs.mapInPandas(run, "shard_id int, success boolean, rows long, error string")
+    return _run_shards(
+        spark, discover_shards(input_dir), report, "shard_id int, success boolean, rows long, error string"
+    )

@@ -66,6 +66,22 @@ def test_shard_report_ledger(spark, fixtures, tmp_path):
     assert not rep2[1].success and rep2[1].error
 
 
+def test_etl_runs_each_shard_in_its_own_partition_without_shuffle(spark, fixtures):
+    """Shards fan out over the shuffle-free ``_run_splits`` stage: with
+    no more shards than cores each output partition holds exactly one
+    shard (keys < 500 are shard 0), and the plan has no Exchange."""
+    df = etl_shards(spark, f"{fixtures}/etl_input", dim=8)
+    got = (
+        df.select(F.spark_partition_id().alias("pid"), (F.col("key").cast("int") < 500).alias("shard0"))
+        .groupBy("pid")
+        .agg(F.collect_set("shard0").alias("shards"))
+        .collect()
+    )
+    assert sorted(r.shards for r in got) == [[False], [True]], got
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
 def test_validate_embeddings(spark, fixtures):
     df = spark.read.parquet(f"{fixtures}/laion_mini.parquet")
     ok = validate_embeddings(df, dim=8)
@@ -134,3 +150,33 @@ def test_etl_direct_sink_leaves_no_partial_shard(spark, fixtures, tmp_path):
     with pytest.raises(Exception, match="misaligned"):
         etl_shards_to_parquet(spark, str(src), str(out), dim=8).collect()
     assert os.listdir(out) == []
+
+
+def test_etl_direct_sink_task_table_matches_inline(spark, fixtures, tmp_path, monkeypatch):
+    """Above ``_TASKS_INLINE_MAX`` tasks the shards travel as a task
+    table (``createDataFrame(tasks, task_ddl)``); shard 1's NULL
+    ``text_emb_path`` must survive it, so both dispatch modes write the
+    same rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from laion_spark.operators import knn as knn_mod
+    from laion_spark.sources.npy import etl_shards_to_parquet
+
+    def run(out):
+        job = etl_shards_to_parquet(spark, f"{fixtures}/etl_input", out, dim=8)
+        plan = job._jdf.queryExecution().executedPlan().toString()
+        res = sorted((os.path.basename(r.path), r.rows) for r in job.collect())
+        return plan, res, pq.read_table(out).sort_by("key").to_pylist()
+
+    inline = run(str(tmp_path / "inline"))
+    monkeypatch.setattr(knn_mod, "_TASKS_INLINE_MAX", 0)
+    table = run(str(tmp_path / "table"))
+    # premise: the inline run is one shuffle-free stage, and the patched
+    # run really took the task-table branch (its round-robin exchange)
+    assert "Exchange" not in inline[0], inline[0]
+    assert "RoundRobinPartitioning" in table[0], table[0]
+    assert inline[1] == table[1] == [("part-00000.parquet", 500), ("part-00001.parquet", 500)]
+    assert inline[2] == table[2]
+    assert all(r["text_embedding"] == [0.0] * 8 for r in table[2] if int(r["key"]) >= 500)

@@ -181,19 +181,30 @@ def test_int8_table_without_scale_col_fails_loudly(spark, sf_dir, tmp_path):
 
 def test_int8_rejects_non_finite_vectors(spark, tmp_path):
     """ADVICE r9: NaN/Inf through rint->astype(int8) is undefined in
-    numpy — the writer must fail loudly, not write corrupt codes."""
+    numpy — the writer must fail loudly, not write corrupt codes. The
+    failed rewrite leaves no file in ``dst``: neither a truncated twin
+    holding the row groups before the bad one (NaN in the second of
+    two groups) nor an empty one (NaN in the only group), which
+    ``knn_search_parquet`` would silently score."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     import pytest
 
     from laion_spark.sources.halfvec import write_int8_table
 
-    src = str(tmp_path / "bad_src")
-    spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [float("nan"), 0.5])],
-        "vec_id long, embedding array<float>",
-    ).coalesce(1).write.parquet(src)
-    dst = str(tmp_path / "bad_i8")
-    with pytest.raises(Exception, match="non-finite"):
-        write_int8_table(spark, src, dst, vector_cols=("embedding",)).collect()
+    table = pa.table(
+        {"vec_id": [1, 2], "embedding": [[1.0, 2.0], [float("nan"), 0.5]]},
+        pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))]),
+    )
+    for groups in (2, 1):
+        src = tmp_path / f"bad_src_{groups}"
+        src.mkdir()
+        pq.write_table(table, str(src / "part-0.parquet"), row_group_size=2 // groups)
+        assert pq.ParquetFile(str(src / "part-0.parquet")).metadata.num_row_groups == groups
+        dst = tmp_path / f"bad_i8_{groups}"
+        with pytest.raises(Exception, match="non-finite"):
+            write_int8_table(spark, str(src), str(dst), vector_cols=("embedding",)).collect()
+        assert [f for _d, _s, files in os.walk(dst) for f in files] == [], groups
 
 
 def test_select_of_packed_vector_column_returns_binary(spark, sf_dir, tmp_path):
