@@ -58,6 +58,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from laion_spark.functions.vector import (
     cosine_similarity,
@@ -604,13 +605,19 @@ class ScanPlan:
     """Precomputed scan inputs for ``knn_search_parquet`` — the
     per-probe fixed cost (directory listing, one footer open per file
     for row-group counts, schema read) hoisted out of the query path so
-    REPEATED probes over the same table pay it once. ``IVFIndex``
-    caches one of these per partition dir and assembles per-probe plans
-    by concatenation (similarity.py); a serving loop should do the
-    same. The object is driver-side only — workers still receive just
-    (path, row_group) pairs and the pickled FileSystem."""
+    REPEATED probes over the same table pay it once; a serving loop
+    should build one and pass it as ``plan``.
 
-    __slots__ = ("fs", "files", "remote", "tasks", "arrow_schema")
+    It also owns the prepared queries planned over it (``prepared``):
+    one planned Spark DataFrame per (session, k, metric, vector and
+    scale columns, selected columns, score column, ``pa_filter``),
+    built on the first query of that shape and reused by every later
+    one, which binds only its vector (``_BoundQuery``). The object is
+    driver-side only — workers receive the (path, row_group) pairs, the
+    pickled FileSystem, and the bound query vector as a task local
+    property."""
+
+    __slots__ = ("fs", "files", "remote", "tasks", "arrow_schema", "prepared")
 
     def __init__(self, fs, files, remote, tasks, arrow_schema):
         self.fs = fs
@@ -618,6 +625,7 @@ class ScanPlan:
         self.remote = remote
         self.tasks = tasks
         self.arrow_schema = arrow_schema
+        self.prepared: dict = {}
 
 
 def _split_tasks(fs, files, max_files: int) -> list[tuple[str, int]]:
@@ -841,17 +849,167 @@ def knn_search_parquet(
     float32 dequantization factor — each batch dequantizes as
     ``codes * scale`` before scoring, so the scan reads 1/4 of the
     float32 bytes at SQ8's ~1/254 relative grain.
-    """
-    if metric not in _METRICS:
-        raise ValueError(f"metric must be one of {_METRICS}, got {metric!r}")
-    import numpy as np
-    import pyarrow as pa
 
+    The returned DataFrame is prepared, not planned per query: the
+    Spark plan is built once per ``plan`` (``ScanPlan.prepared``) and
+    query shape, and its ``collect()`` runs that plan with this call's
+    vector bound to the job (a task local property, see
+    ``_BoundQuery``). Every other use — a transformation such as
+    ``select`` or ``limit``, ``count``, ``toPandas``, ``schema`` or
+    ``repr`` — builds, on first touch, the same query as a
+    self-contained DataFrame with the vector in its closure (the same
+    builder and split function). Either way each result carries its
+    own vector, so the rows never depend on the order in which results
+    are collected. A call with ``plan=None`` lists the files and builds
+    its plan anew.
+    """
     if plan is None:
         plan = build_scan_plan(path)
-    fs, remote, arrow_schema = plan.fs, plan.remote, plan.arrow_schema
-    dim = len(query_vec)
-    _check_vector_cols(arrow_schema, vector_col, scale_col, dim)
+    return _bind_scan(
+        spark, plan.prepared, plan.fs, plan.remote, plan.arrow_schema, plan.tasks,
+        query_vec, (), k, vector_col, select, metric, score_col, pa_filter, scale_col,
+    )
+
+
+#: the task local property that carries a prepared scan-lane query's
+#: binding: its vector, plus the probed clusters of an IVF probe
+_BINDING_KEY = "laion_spark.scan.binding"
+
+#: prepared queries kept per ScanPlan (or IVF listing); past this many
+#: query shapes the cache starts over
+_PREPARED_MAX = 16
+
+
+class UnboundQueryError(RuntimeError):
+    """A prepared scan-lane plan ran with no query vector bound to its
+    job: it was collected other than through the DataFrame that
+    ``knn_search_parquet`` or ``IVFIndex.search_parquet`` returned."""
+
+
+def _encode_binding(qvec: Sequence[float], clusters: Sequence[int] = ()) -> str:
+    """One query's binding as a local property value: its float64 bytes
+    in base64, ``:``, then the probed cluster ids. A few KB whatever
+    the table size: split lists never go here, since every task carries
+    the job's local properties."""
+    import base64
+
+    import numpy as np
+
+    vec = base64.b64encode(np.asarray(qvec, dtype="<f8").tobytes()).decode("ascii")
+    return vec + ":" + ",".join(str(int(c)) for c in clusters)
+
+
+def _decode_binding(value: str):
+    """``(Q, clusters)``: the (1, dim) float64 query matrix and the
+    probed cluster ids of an ``_encode_binding`` value."""
+    import base64
+
+    import numpy as np
+
+    vec, _, clusters = value.partition(":")
+    Q = np.frombuffer(base64.b64decode(vec), dtype="<f8").reshape(1, -1)
+    return Q, [int(c) for c in clusters.split(",") if c]
+
+
+def _task_binding():
+    """Worker side: the decoded binding of the job this task runs in."""
+    from pyspark import TaskContext
+
+    value = TaskContext.get().getLocalProperty(_BINDING_KEY)
+    if not value:
+        raise UnboundQueryError(
+            "a prepared scan-lane plan ran with no query vector bound; collect "
+            "the DataFrame knn_search_parquet or IVFIndex.search_parquet returned"
+        )
+    return _decode_binding(value)
+
+
+class _ExprKey:
+    """A pyarrow Expression (unhashable) as part of a dict key: hashed
+    by its text, compared with ``equals``."""
+
+    __slots__ = ("expr",)
+
+    def __init__(self, expr):
+        self.expr = expr
+
+    def __hash__(self):
+        return hash(str(self.expr))
+
+    def __eq__(self, other):
+        return isinstance(other, _ExprKey) and self.expr.equals(other.expr)
+
+
+class _ScanQuery:
+    """One prepared query shape: ``build(binding)`` makes its DataFrame,
+    which reads the query from the job's local property (``binding``
+    None) or from its closure (a decoded binding). The bound form is
+    built once, on the first collect of any thread, and reused by
+    every later one."""
+
+    __slots__ = ("spark", "build", "_df", "_lock")
+
+    def __init__(self, spark, build):
+        import threading
+
+        self.spark, self.build, self._df, self._lock = spark, build, None, threading.Lock()
+
+    def prepared(self) -> DataFrame:
+        with self._lock:
+            if self._df is None:
+                self._df = self.build(None)
+            return self._df
+
+
+class _BoundQuery(ClassicDataFrame):
+    """The DataFrame a scan-lane query returns: a prepared query plus
+    this query's binding. ``collect()`` sets the binding as a local
+    property of the calling thread (each thread has its own), runs the
+    prepared plan and restores the previous value, also when the job
+    fails. Any other use goes through ``_jdf``, which builds the query
+    as a self-contained DataFrame on first touch; from then on every
+    action, ``collect()`` too, runs that one."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, query: _ScanQuery, binding: str):
+        self._query, self._binding, self._own = query, binding, None
+        self._session = query.spark
+        self._sc = query.spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+
+    @property
+    def _jdf(self):
+        if self._own is None:
+            self._own = self._query.build(_decode_binding(self._binding))._jdf
+        return self._own
+
+    def collect(self):
+        if self._own is not None:
+            return super().collect()
+        sc = self._sc
+        prev = sc.getLocalProperty(_BINDING_KEY)
+        sc.setLocalProperty(_BINDING_KEY, self._binding)
+        try:
+            return self._query.prepared().collect()
+        finally:
+            sc.setLocalProperty(_BINDING_KEY, prev)
+
+
+def _bind_scan(
+    spark, cache: dict, fs, remote: bool, arrow_schema, splits, query_vec: Sequence[float],
+    clusters: Sequence[int], k: int, vector_col: str, select: Sequence[str] | None,
+    metric: str, score_col: str, pa_filter, scale_col: str | None,
+) -> DataFrame:
+    """A scan-lane query over ``splits`` as a ``_BoundQuery``: the
+    prepared query of its shape, from ``cache`` or built into it, bound
+    to ``query_vec`` (and the probed ``clusters`` when ``splits`` maps
+    cluster ids to splits)."""
+    if metric not in _METRICS:
+        raise ValueError(f"metric must be one of {_METRICS}, got {metric!r}")
+    _check_vector_cols(arrow_schema, vector_col, scale_col, len(query_vec))
 
     # partition columns (Hive dirs) are not in the physical files — the
     # worker-side reader can only produce physical columns; reject an
@@ -868,6 +1026,34 @@ def knn_search_parquet(
         cols = list(select)
     else:
         cols = [c for c in arrow_schema.names if c != vector_col and c != scale_col]
+
+    key = (
+        spark, k, metric, vector_col, scale_col, tuple(cols), score_col,
+        None if pa_filter is None else _ExprKey(pa_filter),
+    )
+    query = cache.get(key)
+    if query is None:
+        if len(cache) >= _PREPARED_MAX:
+            cache.clear()
+        query = cache.setdefault(key, _ScanQuery(spark, lambda binding: _scan_query_df(
+            spark, fs, remote, arrow_schema, splits, cols, k, vector_col, metric,
+            score_col, pa_filter, scale_col, binding,
+        )))
+    return _BoundQuery(query, _encode_binding(query_vec, clusters))
+
+
+def _scan_query_df(
+    spark, fs, remote: bool, arrow_schema, splits, cols: list[str], k: int, vector_col: str,
+    metric: str, score_col: str, pa_filter, scale_col: str | None, binding,
+) -> DataFrame:
+    """The scan-lane top-k DataFrame: ``_run_splits`` over the splits,
+    then ``_finish_topk``. Each split reads its query from ``binding``
+    (a decoded binding) or, when that is None, from the job's local
+    property. ``splits`` is a list of (path, row_group) tasks, or, for
+    IVF probes, a dict cluster id -> such tasks: then each of the
+    ``defaultParallelism`` tasks runs its round-robin share of the
+    bound clusters' splits, in the order the clusters are bound."""
+    import pyarrow as pa
 
     #: select columns needing an Arrow-side cast before rows reach the
     #: JVM: float16 / list<float16> upcast to float32 (Spark has no half
@@ -896,12 +1082,15 @@ def knn_search_parquet(
     read_cols = list(cols) + ([vector_col] if vector_col not in cols else [])
     if scale_col is not None and scale_col not in read_cols:
         read_cols.append(scale_col)
-    Q = np.asarray([query_vec], dtype=np.float64)
+
+    def bound():
+        return binding or _task_binding()
+
     # the final sort breaks score ties by every selected column; each
     # split settles its cut (and a short answer's non-finite fillers)
     # in that order too, unless a column is nested (see ``_id_rank``)
-    def score_split(fpath, rg):
-        batches = _split_batches(fs, remote, fpath, rg, read_cols, dim, pa_filter)
+    def score_split(Q, fpath, rg):
+        batches = _split_batches(fs, remote, fpath, rg, read_cols, Q.shape[1], pa_filter)
         got = _split_topk(batches, vector_col, scale_col, cols, Q, k, metric, *cols)
         if got is None:
             return
@@ -909,7 +1098,22 @@ def knn_search_parquet(
         arrays = [a.cast(cast_cols[c]) if c in cast_cols else a for c, a in zip(cols, arrays)]
         yield pa.RecordBatch.from_arrays(arrays + [pa.array(raw, pa.float64())], cols + ["_raw"])
 
-    partial = _run_splits(spark, plan.tasks, "path string, row_group int", score_split, out_schema)
+    if isinstance(splits, dict):
+        n_parts = spark.sparkContext.defaultParallelism
+
+        def run_group(gid):
+            Q, clusters = bound()
+            probed = [t for c in clusters for t in splits.get(c, ())]
+            for fpath, rg in probed[gid::n_parts]:
+                yield from score_split(Q, fpath, rg)
+
+        tasks = [(gid,) for gid in range(n_parts)]
+        partial = _run_splits(spark, tasks, "gid int", run_group, out_schema)
+    else:
+        partial = _run_splits(
+            spark, splits, "path string, row_group int",
+            lambda fpath, rg: score_split(bound()[0], fpath, rg), out_schema,
+        )
     return _finish_topk(partial, metric, k, score_col, tiebreak=cols)
 
 

@@ -612,7 +612,10 @@ class IVFIndex:
         for f, g in _split_tasks(fs, files, 4096):
             by_c.setdefault(cluster_of(f), []).append((f, g))
         arrow_schema = pq.ParquetFile(fs.open_input_file(files[0])).schema_arrow
-        info = {"fs": fs, "remote": remote, "by_cluster": by_c, "schema": arrow_schema}
+        info = {
+            "fs": fs, "remote": remote, "by_cluster": by_c, "schema": arrow_schema,
+            "prepared": {},  # search_parquet's prepared queries (knn._bind_scan)
+        }
         self._scan_cache = (path, info)
         return info
 
@@ -638,14 +641,15 @@ class IVFIndex:
         ``exact_path`` defaults to the index table itself (same rows);
         pass the unpartitioned source table to avoid reading the
         Hive-partition layout for the brute-force pass."""
-        from laion_spark.operators.knn import knn_search_parquet
+        from laion_spark.operators.knn import build_scan_plan, knn_search_parquet
 
         if not query_vecs:
             raise ValueError("tune_nprobe needs at least one sample query vector")
+        exact = build_scan_plan(exact_path or path)
         truth = [
             {r[0] for r in knn_search_parquet(
                 spark, exact_path or path, list(v), k=k,
-                vector_col=vector_col, select=[id_col],
+                vector_col=vector_col, select=[id_col], plan=exact,
             ).collect()}
             for v in query_vecs
         ]
@@ -680,21 +684,30 @@ class IVFIndex:
         row_group) splits and exact-rescoring only those — same results
         as ``knn_search_parquet(probe_dirs(...))``, minus the per-probe
         listing/footer cost (the fixed ~0.1-0.2 s that capped measured
-        single-probe speedup at 4M rows)."""
-        from laion_spark.operators.knn import ScanPlan, knn_search_parquet
+        single-probe speedup at 4M rows).
+
+        The query is prepared like ``knn_search_parquet``'s: one planned
+        DataFrame per query shape is kept beside the cached listing
+        (``scan_plans(path)["prepared"]``, so ``write_index`` drops it
+        too). Its closure holds the per-cluster split table; ``collect()``
+        binds the vector and the probed cluster ids, and each of the
+        ``defaultParallelism`` tasks scores its round-robin share of the
+        probed splits. Other uses (``select``, ``count``, ``schema``...)
+        build the probe as a self-contained DataFrame. Each result
+        carries its own vector and clusters, so its rows never depend on
+        collect order."""
+        from laion_spark.operators.knn import _bind_scan
 
         info = self.scan_plans(path)
         probes = self.probe_clusters(qvec, nprobe)
-        tasks = [t for c in probes for t in info["by_cluster"].get(c, [])]
-        if not tasks:
+        if not any(info["by_cluster"].get(c) for c in probes):
             raise FileNotFoundError(
                 f"no parquet files in probed clusters {probes} under {path}"
             )
-        files = sorted({f for f, _g in tasks})
-        plan = ScanPlan(info["fs"], files, info["remote"], tasks, info["schema"])
-        return knn_search_parquet(
-            spark, path, qvec, k=k, vector_col=vector_col, select=select,
-            metric=metric, plan=plan, scale_col=scale_col,
+        return _bind_scan(
+            spark, info["prepared"], info["fs"], info["remote"], info["schema"],
+            info["by_cluster"], qvec, probes, k, vector_col, select, metric,
+            score_col="score", pa_filter=None, scale_col=scale_col,
         )
 
     def knn_join_parquet(

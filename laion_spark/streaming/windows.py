@@ -35,13 +35,16 @@ def replay_as_stream(
 
     The table is re-written as ``n_splits`` files ordered by event time
     (one file per micro-batch -> realistic late/ordered arrival), into
-    a temp dir the file source watches. Timestamps stored as raw nanos
-    (bigint) are normalized to a TIMESTAMP column ``ts_t``.
+    a temp dir the file source watches. The dir lives under
+    ``driver_scratch_dir()``, so it is removed when the driver exits,
+    after the last query that could read it. Timestamps stored as raw
+    nanos (bigint) are normalized to a TIMESTAMP column ``ts_t``.
     """
     from laion_spark.functions.time import with_event_time
+    from laion_spark.session import driver_scratch_dir
 
     src = with_event_time(spark.read.parquet(parquet_path), ts_col).drop("ts_us")
-    stream_dir = tempfile.mkdtemp(prefix="laion_stream_")
+    stream_dir = tempfile.mkdtemp(prefix="laion_stream_", dir=driver_scratch_dir())
     # ONE pass: ntile buckets the time-sorted rows into n_splits equal
     # micro-batch files — no count(), no per-split filter/write loop
     # (the old shape ran ~2 jobs per split; with 6+ streaming catalog

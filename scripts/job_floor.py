@@ -7,9 +7,13 @@ Runs in one process, one session, and prints the median wall time of
   - ``range_collect``: ``spark.range(C).collect()`` (no Python task)
   - ``arrow_1task`` / ``arrow_4task``: a no-op ``mapInArrow`` over
     ``spark.range(n, numPartitions=n)``, collected
-  - ``scan_plan_build``: building (not running) one scan-lane
-    ``knn_search_parquet`` DataFrame with a cached ``ScanPlan``, and
-    the number of py4j round trips that build makes
+  - ``scan_plan_build``: building (not running) one self-contained
+    scan-lane ``knn_search_parquet`` DataFrame over a cached
+    ``ScanPlan`` — the plan build a query pays when it is not prepared
+    — and the number of py4j round trips that build makes
+  - ``scan_bound_collect``: one scan-lane query over that ``ScanPlan``
+    as a caller runs it, ``knn_search_parquet(...).collect()``: the
+    query's prepared plan, built once, runs with the new vector bound
 
 each over ``--reps`` calls after ``--warmup`` untimed ones. The last
 line is the same as JSON. The table scored by the plan build is a
@@ -117,14 +121,18 @@ def main() -> None:
         plan = build_scan_plan(path)
         q = [0.1] * 64
 
-        def build():
+        def query():
             return knn_search_parquet(spark, path, q, k=10, vector_col="emb", select=["url"], plan=plan)
+
+        def build():
+            return query()._jdf  # first touch builds the self-contained plan
 
         out["scan_plan_build_s"] = round(median_wall(build, args.reps, args.warmup), 4)
         with py4j_calls(spark) as calls:
             build()
         out["scan_plan_build_py4j_calls"] = calls[0]
-        got = build().collect()
+        out["scan_bound_collect_s"] = round(median_wall(lambda: query().collect(), args.reps, args.warmup), 4)
+        got = query().collect()
         if len(got) != 10:
             raise SystemExit(f"the scan-lane query answered {len(got)} rows, not 10")
 

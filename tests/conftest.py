@@ -69,6 +69,25 @@ def write_list_f16_twin(src: str, dst: str, col: str = "embedding") -> None:
         pq.write_table(t, out)
 
 
+def scan_rows(make, id_col="id"):
+    """``(id, round(score, 9))`` rows of a scan-lane query (``make()``
+    returns a fresh ``knn_search_parquet`` or ``IVFIndex.search_parquet``
+    result), asserted equal on its two routes: the prepared plan that
+    ``collect()`` binds, and the self-contained plan that ``_jdf``
+    builds on first touch. A NaN score reads as None."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    def rows(got):
+        return [(r[id_col], None if r.score is None or r.score != r.score else round(r.score, 9))
+                for r in got]
+
+    prepared = rows(make().collect())
+    res = make()
+    contained = rows(DataFrame(res._jdf, res.sparkSession).collect())
+    assert prepared == contained
+    return prepared
+
+
 def canon(rows, ndigits=6):
     """Canonicalize rows for order-insensitive comparison: floats
     rounded, everything stringified, rows sorted."""

@@ -3,7 +3,8 @@ from pyspark.sql import functions as F
 
 from laion_spark.functions.vector import vec_lit
 from laion_spark.operators import knn_search
-from tests.conftest import SF_DIR, assert_matches_oracle, duck_con
+from laion_spark.operators.knn import build_scan_plan
+from tests.conftest import SF_DIR, assert_matches_oracle, duck_con, scan_rows
 
 QVEC = [round(((j * 37) % 19 - 9) / 10.0, 1) for j in range(64)]
 QLIT = "[" + ", ".join(f"{x}::DOUBLE" for x in QVEC) + "]"
@@ -171,6 +172,15 @@ def test_knn_parquet_scan_cosine_zero_vector_ranks_last(spark, tmp_path):
     got = knn_search_parquet(spark, path, [1.0, 2.0, 3.0], k=3, vector_col="embedding", metric="cosine").collect()
     assert [r.id for r in got] == [1, 2, 0]
     assert got[-1].score is None
+    # a second, different query through the same reused ScanPlan
+    plan = build_scan_plan(path)
+
+    def search(q):
+        return lambda: knn_search_parquet(spark, path, q, k=3, vector_col="embedding", metric="cosine", plan=plan)
+
+    assert scan_rows(search([1.0, 2.0, 3.0]))[-1] == (0, None)
+    assert [i for i, _ in scan_rows(search([3.0, 2.0, 1.0]))] == [2, 1, 0]
+    assert len(plan.prepared) == 1
 
 
 def test_knn_parquet_scan_nan_element_does_not_drop_batch(spark, tmp_path):
@@ -184,6 +194,10 @@ def test_knn_parquet_scan_nan_element_does_not_drop_batch(spark, tmp_path):
     df.coalesce(1).write.parquet(path)
     got = knn_search_parquet(spark, path, [1.0, 1.0], k=2, vector_col="embedding").collect()
     assert [r.id for r in got] == [1, 2]
+    plan = build_scan_plan(path)
+    for q, want in (([1.0, 1.0], [(1, 0.0), (2, round(2 ** 0.5, 9))]), ([2.0, 2.0], [(2, 0.0), (1, round(2 ** 0.5, 9))])):
+        assert scan_rows(lambda: knn_search_parquet(spark, path, q, k=2, vector_col="embedding", plan=plan)) == want
+    assert len(plan.prepared) == 1
 
 
 def test_knn_arrow_impl_null_embedding_scores_null(spark, emb):
@@ -253,6 +267,11 @@ def test_knn_scan_lane_short_answer_follows_tiebreak(spark, tmp_path):
     lane = [r.id for r in knn_search(df, [0.0, 0.0], tiebreak=["id"], **kw).collect()]
     hof = [r.id for r in knn_search(df, vec_lit([0.0, 0.0]), tiebreak=["id"], **kw).collect()]
     assert scan == lane == hof == [0, 1, 2]
+    # a finite query, then the zero query again, through one reused ScanPlan
+    plan = build_scan_plan(path)
+    for q, want in (([1.0, 1.0], [1, 4, 7]), ([0.0, 0.0], [0, 1, 2])):
+        assert [i for i, _ in scan_rows(lambda: knn_search_parquet(spark, path, q, plan=plan, **kw))] == want
+    assert len(plan.prepared) == 1
     # a half-float tie column ranks by its float32 upcast (Arrow cannot
     # sort float16; Spark cannot read it, so the scan lane alone)
     half = str(tmp_path / "half.parquet")
@@ -452,3 +471,181 @@ def test_scale_rows_inplace_and_view_fallback():
     got3 = _scale_rows_inplace(owned64, scales)
     assert got3.dtype == np.float64
     assert np.array_equal(got3, np.arange(12).reshape(3, 4) * scales.astype(np.float64)[:, None])
+
+
+@pytest.fixture(scope="module")
+def scan_table(tmp_path_factory):
+    """A 600 x 16 table in 4 files of 3 row groups each, and its
+    vectors for a numpy reference."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(21)
+    X = rng.standard_normal((600, 16)).astype(np.float32)
+    root = tmp_path_factory.mktemp("scan_table")
+    for f in range(4):
+        rows = slice(150 * f, 150 * f + 150)
+        pq.write_table(pa.table({
+            "id": pa.array(np.arange(600)[rows]),
+            "url": [f"u{i}" for i in range(600)[rows]],
+            "embedding": pa.array(list(X[rows]), pa.list_(pa.float32())),
+        }), str(root / f"part-{f}.parquet"), row_group_size=50)
+    return str(root), X
+
+
+def _nearest(X, q, k=10):
+    import numpy as np
+
+    d = ((X.astype(np.float64) - np.asarray(q)) ** 2).sum(axis=1)
+    return np.lexsort((np.arange(len(X)), d))[:k].tolist()
+
+
+def test_scan_lane_results_do_not_depend_on_collect_order(spark, scan_table):
+    """Queries built on one ScanPlan, then collected in the reverse
+    order, interleaved with new builds: each gets its own rows, and
+    all of them run one prepared plan."""
+    import numpy as np
+
+    from laion_spark.operators.knn import knn_search_parquet
+
+    path, X = scan_table
+    plan = build_scan_plan(path)
+    qs = [np.random.default_rng(j).standard_normal(16).tolist() for j in range(4)]
+
+    def search(q):
+        return knn_search_parquet(spark, path, q, k=10, vector_col="embedding", select=["id"], plan=plan)
+
+    a, b = search(qs[0]), search(qs[1])
+    assert [r.id for r in b.collect()] == _nearest(X, qs[1])
+    c = search(qs[2])
+    assert [r.id for r in a.collect()] == _nearest(X, qs[0])
+    d = search(qs[3])
+    for res, q in ((d, qs[3]), (c, qs[2]), (b, qs[1]), (a, qs[0])):
+        assert [r.id for r in res.collect()] == _nearest(X, q)
+    assert len(plan.prepared) == 1
+    for q in qs:
+        assert [i for i, _ in scan_rows(lambda: search(q))] == _nearest(X, q)
+
+
+def test_scan_lane_result_is_a_whole_dataframe(spark, scan_table):
+    """Transformations and other actions on a scan-lane result see the
+    same rows as its collect()."""
+    from laion_spark.operators.knn import knn_search_parquet
+
+    path, X = scan_table
+    plan = build_scan_plan(path)
+    q = [0.5] * 16
+    kw = dict(k=7, vector_col="embedding", select=["url", "id"], plan=plan)
+    want = [(r.url, r.id, r.score) for r in knn_search_parquet(spark, path, q, **kw).collect()]
+    assert [i for _, i, _ in want] == _nearest(X, q, 7)
+    res = knn_search_parquet(spark, path, q, **kw)
+    assert [(r.url, r.id, r.score) for r in res.select("url", "id", "score").collect()] == want
+    assert knn_search_parquet(spark, path, q, **kw).count() == 7
+    pdf = knn_search_parquet(spark, path, q, **kw).toPandas()
+    assert list(pdf.itertuples(index=False, name=None)) == want
+    assert res.columns == ["url", "id", "score"]
+    assert [(r.url, r.id, r.score) for r in res.collect()] == want  # now via its own plan
+
+
+def test_scan_lane_threads_share_one_plan(spark, scan_table):
+    """More threads than cores query one ScanPlan at once, from its
+    first (unbuilt) collect on, with a short switch interval: the
+    vector is bound per thread, so each gets its own answer, and all
+    of them share one prepared query."""
+    import sys
+    import threading
+
+    import numpy as np
+
+    from laion_spark.operators.knn import knn_search_parquet
+
+    path, X = scan_table
+    plan = build_scan_plan(path)
+    n = 6
+    qs = [np.random.default_rng(100 + j).standard_normal(16).tolist() for j in range(n)]
+    start, errors, got = threading.Barrier(n), [], {t: [] for t in range(n)}
+
+    def worker(t):
+        try:
+            start.wait(timeout=60)
+            for _ in range(3):
+                res = knn_search_parquet(spark, path, qs[t], k=10, vector_col="embedding", select=["id"], plan=plan)
+                got[t].append([r.id for r in res.collect()])
+        except Exception as e:  # surfaced below, in the test's thread
+            errors.append(e)
+
+    was = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=240)
+    finally:
+        sys.setswitchinterval(was)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    for t in range(n):
+        assert got[t] == [_nearest(X, qs[t])] * 3, t
+    assert len(plan.prepared) == 1
+
+
+def test_unbound_prepared_plan_fails_loudly_and_binding_is_restored(spark, scan_table):
+    """The prepared plan run with no vector bound raises
+    UnboundQueryError instead of answering another query; a collect
+    that fails inside a task (a query of the wrong dim) leaves the
+    thread's local property as it was."""
+    from laion_spark.operators import knn as knn_mod
+    from laion_spark.operators.knn import knn_search_parquet
+
+    path, X = scan_table
+    sc = spark.sparkContext
+    plan = build_scan_plan(path)
+    kw = dict(k=5, vector_col="embedding", select=["id"], plan=plan)
+    assert [r.id for r in knn_search_parquet(spark, path, [1.0] * 16, **kw).collect()] == _nearest(X, [1.0] * 16, 5)
+    (query,) = plan.prepared.values()
+    assert sc.getLocalProperty(knn_mod._BINDING_KEY) is None
+    with pytest.raises(Exception, match="UnboundQueryError"):
+        query.prepared().collect()
+    sc.setLocalProperty(knn_mod._BINDING_KEY, "prior")
+    try:
+        with pytest.raises(Exception, match="ragged embedding column"):
+            knn_search_parquet(spark, path, [1.0] * 3, **kw).collect()
+        assert sc.getLocalProperty(knn_mod._BINDING_KEY) == "prior"
+    finally:
+        sc.setLocalProperty(knn_mod._BINDING_KEY, None)
+    assert [r.id for r in knn_search_parquet(spark, path, [-1.0] * 16, **kw).collect()] == _nearest(X, [-1.0] * 16, 5)
+
+
+def test_prepared_plan_metrics_read_per_collect(spark, scan_table):
+    """The SQLMetrics of the one physical plan every bound collect
+    re-runs are reset by each collect, not summed across them: the
+    scorer's MapInArrow reports this query's rows (one split's k best
+    per split) after the third collect as after the first."""
+    from laion_spark.operators.knn import knn_search_parquet
+
+    path, _X = scan_table
+    plan = build_scan_plan(path)
+
+    def rows_received():
+        (query,) = plan.prepared.values()
+        node = query.prepared()._jdf.queryExecution().executedPlan()
+        found = []
+
+        def walk(p):
+            if p.getClass().getSimpleName() == "MapInArrowExec":
+                found.append(p.metrics().apply("pythonNumRowsReceived").value())
+            ch = p.children()
+            for i in range(ch.size()):
+                walk(ch.apply(i))
+
+        walk(node)
+        return found
+
+    reads = []
+    for j in range(3):
+        knn_search_parquet(spark, path, [float(j)] * 16, k=4, vector_col="embedding", select=["id"], plan=plan).collect()
+        reads.append(rows_received())
+    assert reads == [[4 * len(plan.tasks)]] * 3

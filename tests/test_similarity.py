@@ -3,12 +3,13 @@ from contextlib import contextmanager
 import pytest
 from pyspark.sql import functions as F
 
-from laion_spark.operators.knn import knn_search
+from laion_spark.operators.knn import build_scan_plan, knn_search
 from laion_spark.operators.similarity import (
     RandomHyperplaneIndex,
     knn_join,
     recall_at_k,
 )
+from tests.conftest import scan_rows
 
 QVEC = [round(((j * 37) % 19 - 9) / 10.0, 1) for j in range(64)]
 
@@ -393,8 +394,24 @@ def test_ivf_search_parquet_cached_plan(spark, emb, tmp_path):
     ]
     info1 = idx.scan_plans(path)
     assert idx.scan_plans(path) is info1  # second probe reuses the listing
+    # probes of different cluster sets, built first and collected in
+    # reverse, run one prepared query: the binding carries the clusters
+    qvecs = [[float(x) for x in r.embedding] for r in emb.filter("vec_id % 40 = 3").collect()]
+    assert len({tuple(sorted(idx.probe_clusters(q))) for q in qvecs}) >= 3
+    kw = dict(k=5, vector_col="embedding", select=["vec_id"])
+    probes = [idx.search_parquet(spark, path, q, **kw) for q in qvecs]
+    for q, res in reversed(list(zip(qvecs, probes))):
+        want = scan_rows(lambda: knn_search_parquet(spark, idx.probe_dirs(path, q), q, **kw), "vec_id")
+        assert [(r.vec_id, round(r.score, 9)) for r in res.collect()] == want
+        assert scan_rows(lambda: idx.search_parquet(spark, path, q, **kw), "vec_id") == want
+    narrow = idx.search_parquet(spark, path, qvecs[0], nprobe=1, **kw).collect()
+    assert {r.vec_id for r in narrow} <= {
+        r.vec_id for r in spark.read.parquet(idx.probe_dirs(path, qvecs[0], 1)[0]).collect()
+    }
+    assert len(info1["prepared"]) == 1
     idx.write_index(emb, path, "embedding")
     assert idx.scan_plans(path) is not info1  # rewrite invalidates
+    assert idx.scan_plans(path)["prepared"] == {}
 
 
 def test_half_twin_preserves_ivf_tree_and_probes(spark, emb, tmp_path):
@@ -744,8 +761,11 @@ def test_rows_tied_at_kth_place_are_kept(spark, tmp_path, row_group_size):
     from laion_spark.functions.vector import vec_lit
     from laion_spark.operators.knn import knn_search_parquet
 
+    import numpy as np
+
     flat, ivf, idx, q, copies = _write_tie_layouts(spark, str(tmp_path), row_group_size)
     df = spark.read.parquet(flat)
+    plan = build_scan_plan(flat)
     queries = spark.createDataFrame([(0, q)], "id long, embedding array<double>")
     kw = dict(k=5, vector_col="embedding")
     for metric in ("l2", "cosine", "dot"):
@@ -758,16 +778,29 @@ def test_rows_tied_at_kth_place_are_kept(spark, tmp_path, row_group_size):
         assert [(r.id, round(r.score, 6)) for r in lane] == [
             (r.id, round(r.score, 6)) for r in ref
         ], metric
-        scan = knn_search_parquet(spark, flat, q, select=["id"], metric=metric, **kw)
+        scan = knn_search_parquet(spark, flat, q, select=["id"], metric=metric, plan=plan, **kw)
         assert [r.id for r in scan.collect()] == want, metric
         probe = idx.search_parquet(spark, ivf, q, select=["id"], metric=metric, **kw)
         assert [r.id for r in probe.collect()] == want, metric
+        # a second, different query through the reused ScanPlan and IVF
+        # entry, the probe over one cluster: the same rows on both routes
+        q2 = (-np.asarray(q)).tolist()
+        ref2 = knn_search(df, vec_lit(q2), select=["id"], metric=metric, tiebreak=["id"], **kw).collect()
+        got2 = scan_rows(lambda: knn_search_parquet(spark, flat, q2, select=["id"], metric=metric, plan=plan, **kw))
+        assert got2 == [(r.id, round(r.score, 9)) for r in ref2], metric
+        (c,) = idx.probe_clusters(q2, 1)
+        in_c = spark.read.parquet(f"{ivf}/ivf_cluster={c}")
+        ref1 = knn_search(in_c, vec_lit(q2), select=["id"], metric=metric, tiebreak=["id"], **kw).collect()
+        got1 = scan_rows(lambda: idx.search_parquet(spark, ivf, q2, select=["id"], metric=metric, nprobe=1, **kw))
+        assert [i for i, _ in got1] == [r.id for r in ref1], metric
         if metric == "dot":
             continue  # the joins serve l2 and cosine, ordered by ascending score
         join = knn_join(df, queries, k=5, metric=metric)
         assert sorted(r.id_c for r in join.collect()) == sorted(want), metric
         ann = idx.knn_join_parquet(spark, ivf, queries, metric=metric, k=5)
         assert sorted(r.id_c for r in ann.collect()) == sorted(want), metric
+    # one prepared query per metric, whatever the vector or probed clusters
+    assert len(plan.prepared) == 3 and len(idx.scan_plans(ivf)["prepared"]) == 3
 
 
 def test_double_tables_score_in_float64(spark, tmp_path):
@@ -932,6 +965,7 @@ def test_zero_vectors_rank_last_on_every_cosine_path(spark, tmp_path):
         pq.write_table(t.filter(pa.array(cl == c)),
                        str(tmp_path / f"ivf/ivf_cluster={c}/part-0.parquet"), row_group_size=25)
     ivf = str(tmp_path / "ivf")
+    plan = build_scan_plan(flat)
     qs = [rng.standard_normal(8).tolist(), [0.0] * 8]
     queries = spark.createDataFrame([(j, q) for j, q in enumerate(qs)],
                                     "id long, embedding array<double>")
@@ -949,8 +983,13 @@ def test_zero_vectors_rank_last_on_every_cosine_path(spark, tmp_path):
         with _arrow_batch_rows(spark, 7):  # 50 zero rows over 8 batches
             lane = knn_search(rev, q, select=["id"], metric="cosine", tiebreak=["id"], **kw)
             assert [r.id for r in lane.collect()] == want, j
-        scan = knn_search_parquet(spark, flat, q, select=["id"], metric="cosine", **kw)
+        scan = knn_search_parquet(spark, flat, q, select=["id"], metric="cosine", plan=plan, **kw)
         assert [r.id for r in scan.collect()] == want, j
+        assert [i for i, _ in scan_rows(
+            lambda: knn_search_parquet(spark, flat, q, select=["id"], metric="cosine", plan=plan, **kw)
+        )] == want, j
+        probe = scan_rows(lambda: idx.search_parquet(spark, ivf, q, select=["id"], metric="cosine", **kw))
+        assert [i for i, _ in probe] == want, j
         assert sorted(r.id_c for r in join if r.id_q == j) == sorted(want), j
         assert sorted(r.id_c for r in ann if r.id_q == j) == sorted(want), j
     with pytest.raises(ValueError, match=r"^queries side exceeds max_queries=1; knn_join collects"):

@@ -258,3 +258,53 @@ def test_file_sink_exactly_once_across_restart(spark, events_batch, tmp_path):
 
     run_once()  # restart with nothing new: exact no-op
     assert spark.read.parquet(sink).count() == total
+
+
+_REPLAY_JOB = """
+import glob, json, os, sys
+from laion_spark.session import get_session
+from laion_spark.streaming.windows import replay_as_stream, run_to_completion
+
+spark = get_session("replay_probe", cpus=2)
+stream = replay_as_stream(spark, sys.argv[1], n_splits=2)
+n = run_to_completion(stream.groupBy().count(), "replay_probe").collect()[0][0]
+dirs = glob.glob(os.path.join(os.environ["TMPDIR"], "**", "laion_stream_*"), recursive=True)
+spark.stop()
+print(json.dumps({"rows": n, "dirs": dirs}))
+"""
+
+
+def test_replay_as_stream_leaves_nothing_under_the_temp_dir():
+    """The dir replay_as_stream writes its micro-batch files into is
+    removed when the driver exits (it lives in driver_scratch_dir())."""
+    import json
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    # short enough that driver_scratch_dir() is made inside it
+    tmp = tempfile.mkdtemp(prefix="lrs")
+    try:
+        env = dict(os.environ)
+        env.update(
+            TMPDIR=tmp,
+            PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            SPARK_GRAFT_DRIVER_MEM="512m",
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", _REPLAY_JOB, f"{SF_DIR}/events.parquet"],
+            cwd=tmp, env=env, stdin=subprocess.DEVNULL, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-4000:]
+        got = json.loads(out.stdout.strip().splitlines()[-1])
+        assert got["rows"] == pq.ParquetFile(f"{SF_DIR}/events.parquet").metadata.num_rows
+        assert len(got["dirs"]) == 1 and got["dirs"][0].startswith(tmp + os.sep)
+        left = [os.path.join(d, f) for d, subdirs, files in os.walk(tmp)
+                for f in subdirs + files if f.startswith("laion_stream_")]
+        assert left == []
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
